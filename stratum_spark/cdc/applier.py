@@ -16,10 +16,12 @@ the distributed analog of stratum's per-batch consumer protocol
                            failed_row_writer.rs:16-120)
   4. schema-ver mapping -- physical binlog columns -> current table
                            columns per event schema_ver
-  5. LWW dedup          -- skew-proof max_by aggregate (cdc/dedup.py)
-  6. MERGE              -- bucket-pruned copy-on-write upsert with the
-                           lsn precedence guard; the (job_id, epoch)
-                           bookmark commits atomically with the data
+  5. LWW dedup          -- skew-proof max_by shuffle aggregate
+                           (cdc/dedup.py), the one LWW rule on every path
+  6. MERGE / append     -- cow: bucket-pruned copy-on-write upsert with the
+                           lsn precedence guard; mor: a two-phase delta
+                           append. Either way the (job_id, epoch) bookmark
+                           commits atomically with the data
   7. lineage + metrics  -- per-partition offset ranges + merge counts
                            appended to the lineage table (FIXTURES.md §4;
                            stratum Batch{cursor,next} + MetricsSnapshot,
@@ -32,7 +34,6 @@ epoch's distinct schema versions, touched-bucket ids, and aggregate counts.
 from __future__ import annotations
 
 import json
-import logging
 import os
 import time
 from dataclasses import dataclass
@@ -44,7 +45,12 @@ from stratum_spark.cdc.binlog import SCHEMA_EVOLUTION
 from stratum_spark.cdc.dedup import lww_dedup
 from stratum_spark.lake import LakeTable, MergeStats
 
-log = logging.getLogger("stratum_spark.cdc")
+# feed-split sizing's epoch byte estimate: fixed per-event bytes (doc_id,
+# lsn, ts, op, source, lang, schema_ver + row overhead) plus 4 B per token
+EVENT_FIXED_BYTES = 64
+# driver-memory bound (~10 MB) on the bad rows one epoch's write
+# observation may collect for the DLQ (see _dlq_obs_gate)
+_DLQ_OBS_CAP = 100_000
 
 TOKENS_DDL = "doc_id string, tokens array<int>, n_tok int, source string, lsn bigint"
 LINEAGE_DDL = (
@@ -83,78 +89,15 @@ class CdcApplier:
         write_mode: str = "cow",
         auto_compact_ratio: float | None = None,
         epoch_dedup: bool = True,
-        lww_strategy: str | None = None,
-        tokens_packed: bool | None = None,
     ):
-        # per-epoch LWW implementation (mor delta path only; cow's MERGE
-        # consumes the deduped batch in a shuffle anyway so the aggregate
-        # is already optimal there):
-        #   'shuffle'   groupBy + max_by -- one full-row exchange, skew-proof,
-        #               scales with parallelism (no serial floor)
-        #   'broadcast' winner-lsn broadcast semi-join -- the heavy token
-        #               columns never shuffle, but the broadcast relation
-        #               build is a per-epoch SERIAL cost
-        #   'auto'      cost-model pick (default): broadcast at low
-        #               parallelism, where cutting per-event work dominates;
-        #               shuffle once parallelism amortizes the exchange
-        #               below the broadcast build's serial floor. Measured
-        #               cross-over on this host ~8 threads (BASELINE.md
-        #               round 4: broadcast wins 1->4 cores +45%/+88%,
-        #               shuffle wins at 16 cores 431k vs 285k ev/s); on a
-        #               real cluster the analogous bound is broadcast
-        #               traffic |winners| x n_executors vs 2x epoch bytes
-        #               through the exchange (~50 executors at 2M-event
-        #               epochs).
-        # precedence: explicit param > STRATUM_LWW_STRATEGY env > auto.
-        # 'auto' is COMPUTED per epoch from the previous epoch's observed
-        # stats via the documented cost model (cdc/dedup.pick_lww_strategy:
-        # broadcast traffic |winners| x 30 B x n_executors vs 2 x epoch
-        # bytes through the exchange, plus the serial-floor bound P* =
-        # 2 x epoch_bytes / xover-bytes-per-core); the first epoch has no
-        # stats yet and uses the measured-on-this-host prior (parallelism
-        # <= 8 -> broadcast). Decision inputs are logged per epoch.
-        if lww_strategy is None:
-            lww_strategy = os.environ.get("STRATUM_LWW_STRATEGY", "auto")
-        self.lww_auto = lww_strategy == "auto"
-        self._lww_obs: dict | None = None
-        # online xover calibration (round-5 verdict item 3): the serial-
-        # floor bound's xover_bytes_per_core starts from the static prior
-        # but is calibrated ONLINE from observed epoch walls -- every warm
-        # applied epoch records its per-event wall under the strategy that
-        # ran it, and as soon as BOTH strategies have a warm sample the
-        # implied cross-over (dedup.xover_from_walls) replaces the prior
-        # and persists in the table properties for future appliers on this
-        # warehouse. Dual samples arise organically when the model's pick
-        # flips (epoch stats or parallelism change) and, when the model is
-        # UNCERTAIN (operating point within 1.5x of P*), from a one-epoch
-        # probe of the other strategy (_lww_strategy_for_epoch) -- one
-        # slightly-suboptimal epoch buys a measured cross-over for every
-        # epoch after. Component-level micro-probes were tried and rejected:
-        # see xover_from_walls' docstring. Precedence: explicit
-        # STRATUM_LWW_XOVER_BYTES_PER_CORE env > calibrated > prior.
-        self._lww_xover: int | None = None
-        self._lww_cal: dict | None = None
-        self._lww_walls: dict[str, float] = {}
-        self._lww_probe_done = False
         # scale-adaptive feed-scan split sizing (_tune_feed_split): derived
-        # per epoch from OBSERVED epoch bytes, never a host-tuned constant.
-        # STRATUM_FEED_SPLIT_BYTES pins it explicitly (0 = leave session
-        # default untouched).
-        env_split = os.environ.get("STRATUM_FEED_SPLIT_BYTES")
-        self._feed_split_env: int | None = int(env_split) if env_split else None
+        # per epoch from OBSERVED epoch bytes, never a host-tuned constant
         self._feed_split: int | None = None
         self._feed_bytes_ref: int = 0  # decaying max of observed epoch bytes
         # streaming receipts resolved from the write job's own observation
         # (the zero-extra-job path) vs recomputed from files -- counted so
         # tests can pin that the observation path actually engages
         self._receipts_from_obs = 0
-        if lww_strategy == "auto":
-            lww_strategy = (
-                "broadcast" if spark.sparkContext.defaultParallelism <= 8 else "shuffle"
-            )
-        if lww_strategy not in ("shuffle", "broadcast"):
-            raise ValueError(f"unknown lww_strategy {lww_strategy}")
-        self.lww_strategy = lww_strategy
         # epoch_dedup=False (mor only): skip the per-epoch LWW aggregate
         # and append the epoch's valid rows AS-IS -- the delta write
         # becomes a fully NARROW plan (scan -> map -> write, zero
@@ -227,43 +170,21 @@ class CdcApplier:
                 for s in SCHEMA_EVOLUTION
             ]
 
-        # tokens_packed: store the token payload as ONE packed binary
-        # column (4 B/int) in the base + delta files instead of
-        # array<int>. No epoch-path operator looks inside the payload, so
-        # the hot path moves a single blob per row (parquet byte_array =
-        # length + memcpy; no per-element rep/def levels or array cells)
-        # at the cost of one Arrow round trip at ingest and an unpack at
-        # the user-facing read (functions/pack.py). Resolution: explicit
-        # param > STRATUM_TOKENS_PACKED env > off; an EXISTING table's
-        # physical schema always wins (resume must not flip the format).
-        if tokens_packed is None:
-            tokens_packed = os.environ.get("STRATUM_TOKENS_PACKED", "0") == "1"
         tok_root = os.path.join(self.warehouse, "tokens")
         lin_root = os.path.join(self.warehouse, "lineage")
         dlq_root = os.path.join(self.warehouse, "dlq")
         if LakeTable.exists(tok_root):
             self.tokens = LakeTable.load(spark, tok_root)
-            actual = self.tokens.snapshot().schema.field_by_name("tokens").type
-            tokens_packed = actual == "binary"
+            if self.tokens.snapshot().schema.field_by_name("tokens").type == "binary":
+                raise ValueError(
+                    f"{tok_root}: tokens column is packed binary; only "
+                    "array<int> token tables are supported"
+                )
         else:
-            ddl = (
-                TOKENS_DDL.replace("tokens array<int>", "tokens binary")
-                if tokens_packed
-                else TOKENS_DDL
-            )
             self.tokens = LakeTable.create(
-                spark, tok_root, ddl, key="doc_id", n_buckets=n_buckets,
+                spark, tok_root, TOKENS_DDL, key="doc_id", n_buckets=n_buckets,
                 properties={"schema_ver": "0"},
             )
-        self.tokens_packed = tokens_packed
-        # a previous applier on this warehouse may have calibrated the LWW
-        # cross-over from observed walls -- inherit it (env still wins at
-        # decision time; see _lww_strategy_for_epoch)
-        persisted_xover = self.tokens.snapshot().properties.get(
-            "lww_xover_bytes_per_core"
-        )
-        if persisted_xover:
-            self._lww_xover = int(persisted_xover)
         self.lineage = (
             LakeTable.load(spark, lin_root)
             if LakeTable.exists(lin_root)
@@ -283,13 +204,8 @@ class CdcApplier:
             if LakeTable.exists(del_root):
                 self.deltas = LakeTable.load(spark, del_root)
             else:
-                ddl = (
-                    TOKENS_DDL.replace("tokens array<int>", "tokens binary")
-                    if self.tokens_packed
-                    else TOKENS_DDL
-                )
                 self.deltas = LakeTable.create(
-                    spark, del_root, ddl + ", op string",
+                    spark, del_root, TOKENS_DDL + ", op string",
                     key="doc_id", n_buckets=n_buckets,
                 )
         # lineage appends run on a dedicated single worker thread: they are
@@ -352,114 +268,6 @@ class CdcApplier:
             return {"skipped": "commit_conflict"}
 
     # ------------------------------------------------------------------
-    def _n_executors(self) -> int:
-        """Executor count for the broadcast-traffic bound (1 in local
-        mode: the driver's BlockManager is the only copy)."""
-        try:
-            n = self.spark.sparkContext._jsc.sc().getExecutorMemoryStatus().size() - 1
-            return max(1, n)
-        except Exception:
-            return 1
-
-    def _lww_strategy_for_epoch(self, epoch: int) -> str:
-        """Resolve the per-epoch LWW strategy. Explicit strategies pass
-        through; 'auto' evaluates pick_lww_strategy's cost model on the
-        PREVIOUS epoch's observed (winners, bytes) -- the cold-start epoch
-        falls back to the parallelism prior chosen in __init__ -- and logs
-        the decision with every input, so a misfit on a deployment whose
-        broadcast-build cost or epoch size differs is visible instead of
-        silent (round-4 verdict finding #2)."""
-        if not self.lww_auto or self._lww_obs is None:
-            return self.lww_strategy
-        from stratum_spark.cdc.dedup import pick_lww_strategy
-
-        # explicit env beats the online calibration beats the static prior
-        xover = None
-        if not os.environ.get("STRATUM_LWW_XOVER_BYTES_PER_CORE"):
-            xover = self._lww_xover
-        strategy, inputs = pick_lww_strategy(
-            winners=self._lww_obs["winners"],
-            epoch_bytes=self._lww_obs["epoch_bytes"],
-            parallelism=self.spark.sparkContext.defaultParallelism,
-            n_executors=self._n_executors(),
-            xover_bytes_per_core=xover,
-        )
-        inputs["xover_source"] = (
-            "calibrated" if xover is not None else "prior/env"
-        )
-        if self._lww_cal is not None:
-            inputs["calibration"] = self._lww_cal
-        # uncertainty-gated one-epoch probe (STRATUM_LWW_PROBE: 'auto'
-        # default, '1' forces, '0' disables): when the operating point sits
-        # within 1.5x of the modeled cross-over P*, the model's error bars
-        # cover both answers -- spend ONE warm epoch on the other strategy
-        # to get the dual wall sample xover_from_walls needs. Gated on
-        # already having a warm sample of the model's own pick so the
-        # comparison is never cold-vs-warm.
-        probe_mode = os.environ.get("STRATUM_LWW_PROBE", "auto")
-        other = "shuffle" if strategy == "broadcast" else "broadcast"
-        p, ps = inputs["parallelism"], max(inputs["p_star"], 0.25)
-        margin = max(p, ps) / min(p, ps)
-        if (
-            probe_mode != "0"
-            and not self._lww_probe_done
-            and strategy in self._lww_walls
-            and other not in self._lww_walls
-            and (probe_mode == "1" or margin < 1.5)
-        ):
-            self._lww_probe_done = True
-            log.info(
-                "epoch %d lww probe -> %s (model pick %s, margin %.2f)",
-                epoch, other, strategy, margin,
-            )
-            self.lww_strategy = other
-            return other
-        log.info("epoch %d lww auto -> %s %s", epoch, strategy, inputs)
-        self.lww_strategy = strategy
-        return strategy
-
-    def _record_lww_wall(self, strategy: str, epoch: int, wall_sec: float, rows_in: int) -> None:
-        """Record a WARM epoch's per-event wall under the strategy that ran
-        it; once both strategies have samples, calibrate the cross-over
-        from the walls and persist it for future appliers on this
-        warehouse (STRATUM_LWW_CALIBRATE=0 disables)."""
-        if (
-            not self.lww_auto
-            or epoch < 1  # epoch 0 pays JIT/codegen -- never a fair sample
-            or not self.epoch_dedup
-            or os.environ.get("STRATUM_LWW_CALIBRATE", "1") != "1"
-        ):
-            return
-        per_event = wall_sec / max(rows_in, 1)
-        self._lww_walls[strategy] = min(
-            self._lww_walls.get(strategy, float("inf")), per_event
-        )
-        if "broadcast" not in self._lww_walls or "shuffle" not in self._lww_walls:
-            return
-        from stratum_spark.cdc.dedup import xover_from_walls
-
-        xover = xover_from_walls(
-            self._lww_walls["broadcast"],
-            self._lww_walls["shuffle"],
-            epoch_bytes=self._lww_obs["epoch_bytes"] if self._lww_obs else 0,
-            parallelism=self.spark.sparkContext.defaultParallelism,
-        )
-        cal = {
-            "wall_broadcast_per_event": self._lww_walls["broadcast"],
-            "wall_shuffle_per_event": self._lww_walls["shuffle"],
-            "xover_bytes_per_core": xover,
-        }
-        if self._lww_xover != xover:
-            self._lww_xover = xover
-            self._lww_cal = cal
-            log.info("lww xover calibrated from epoch walls: %s", cal)
-            try:
-                self.tokens.set_properties(
-                    {"lww_xover_bytes_per_core": str(xover)}
-                )
-            except Exception:  # a concurrent commit may conflict; the
-                pass  # in-memory value still governs this applier
-
     def _tune_feed_split(self, epoch_bytes: int) -> None:
         """Scale-ADAPTIVE scan-split sizing (guide §6 input-split size,
         read through the §2 lens: the epoch scan's decode parallelism is
@@ -487,14 +295,6 @@ class CdcApplier:
         right before a 10 GB epoch plans its scan. A genuinely shrinking
         workload still adapts: the reference decays 10%/epoch, so ~20
         consistently-small epochs re-size it downward."""
-        if self._feed_split_env is not None:
-            if self._feed_split is None and self._feed_split_env > 0:
-                self.spark.conf.set(
-                    "spark.sql.files.maxPartitionBytes",
-                    str(self._feed_split_env),
-                )
-                self._feed_split = self._feed_split_env
-            return
         self._feed_bytes_ref = max(
             int(epoch_bytes), int(0.9 * self._feed_bytes_ref)
         )
@@ -546,75 +346,35 @@ class CdcApplier:
     def _bad_pred():
         return (F.col("op") != "D") & ~F.col("n_tok").eqNullSafe(F.size("tokens"))
 
+    @staticmethod
+    def _dlq_project(bad: DataFrame, size_col) -> DataFrame:
+        """The DLQ row shape, shared by the feed-scan path (size_col =
+        size(tokens)) and the observation path (size_col = the collected
+        size), so both paths write identical DLQ bytes."""
+        return bad.select(
+            F.col("lsn"),
+            F.col("doc_id"),
+            F.lit("n_tok_mismatch").alias("rule"),
+            F.format_string(
+                "n_tok=%s != size(tokens)=%s", F.col("n_tok"), size_col
+            ).alias("message"),
+            F.to_json(F.struct("lsn", "op", "doc_id", "n_tok", "schema_ver")).alias(
+                "payload"
+            ),
+            F.current_timestamp().alias("failed_at"),
+        )
+
     def _dlq_frame(self, events: DataFrame) -> DataFrame:
-        return events.where(self._bad_pred()).select(
-            F.col("lsn"),
-            F.col("doc_id"),
-            F.lit("n_tok_mismatch").alias("rule"),
-            F.format_string(
-                "n_tok=%s != size(tokens)=%s", F.col("n_tok"), F.size("tokens")
-            ).alias("message"),
-            F.to_json(F.struct("lsn", "op", "doc_id", "n_tok", "schema_ver")).alias(
-                "payload"
-            ),
-            F.current_timestamp().alias("failed_at"),
-        )
-
-    def _dlq_frame_narrow(self, narrow: DataFrame, bad_narrow) -> DataFrame:
-        """Same rows/columns as _dlq_frame, built from the narrow epoch
-        cache (doc_id, lsn, op, n_tok, schema_ver, __sz=size(tokens)) --
-        no re-decode of the heavy token column."""
-        return narrow.where(bad_narrow).select(
-            F.col("lsn"),
-            F.col("doc_id"),
-            F.lit("n_tok_mismatch").alias("rule"),
-            F.format_string(
-                "n_tok=%s != size(tokens)=%s", F.col("n_tok"), F.col("__sz")
-            ).alias("message"),
-            F.to_json(F.struct("lsn", "op", "doc_id", "n_tok", "schema_ver")).alias(
-                "payload"
-            ),
-            F.current_timestamp().alias("failed_at"),
-        )
-
-    def _dlq_frame_small(self, small: DataFrame) -> DataFrame:
-        """Same rows/columns as _dlq_frame_narrow, rebuilt from the combined
-        per-doc epoch frame (see _prepare_epoch: one narrow scan feeds BOTH
-        the LWW winner build and this DLQ split, so the epoch's heavy token
-        column is decoded once for the pair instead of once each). Bad rows
-        were collected per doc; explode restores the per-row DLQ shape."""
-        return small.select("doc_id", F.explode("__bad").alias("b")).select(
-            F.col("b.lsn").alias("lsn"),
-            F.col("doc_id"),
-            F.lit("n_tok_mismatch").alias("rule"),
-            F.format_string(
-                "n_tok=%s != size(tokens)=%s", F.col("b.n_tok"), F.col("b.__sz")
-            ).alias("message"),
-            F.to_json(
-                F.struct(
-                    F.col("b.lsn").alias("lsn"),
-                    F.col("b.op").alias("op"),
-                    F.col("doc_id").alias("doc_id"),
-                    F.col("b.n_tok").alias("n_tok"),
-                    F.col("b.schema_ver").alias("schema_ver"),
-                )
-            ).alias("payload"),
-            F.current_timestamp().alias("failed_at"),
-        )
+        return self._dlq_project(events.where(self._bad_pred()), F.size("tokens"))
 
     def _dlq_obs_gate(self) -> bool:
         """Should the NEXT epoch's DLQ ride the write job's observation?
-        Gated on the last epoch's observed bad-row count vs
-        STRATUM_DLQ_OBS_CAP (default 100k rows ~ 10 MB driver): the
-        collected list lands in driver memory, so a feed whose bad rate
-        blows the cap flips the applier back to the scan path from the
-        next epoch on (the over-cap epoch itself is a one-time spike --
-        collect_list has no mid-flight cutoff). Per-task partials are
-        bounded by per-task bad rows. STRATUM_DLQ_OBS=0 disables."""
-        if os.environ.get("STRATUM_DLQ_OBS", "1") != "1":
-            return False
-        cap = int(os.environ.get("STRATUM_DLQ_OBS_CAP", "100000"))
-        return self._last_bad_count is None or self._last_bad_count <= cap
+        The collected rows land in driver memory, so once an epoch's
+        bad-row count exceeds _DLQ_OBS_CAP the following epochs take the
+        scan path until one comes in under it again (the over-cap epoch
+        itself is a one-time spike -- collect_list has no mid-flight
+        cutoff). Per-task partials are bounded by per-task bad rows."""
+        return (self._last_bad_count or 0) <= _DLQ_OBS_CAP
 
     def _dlq_obs_worker(self, q, epoch: int) -> int:
         """Single-worker DLQ slot for observation-fed epochs. Submitted at
@@ -643,50 +403,25 @@ class CdcApplier:
         return self._append_dlq_frame(frame, epoch)
 
     def _abandon_prep(self, prep: dict) -> None:
-        """Release a prepared epoch that will never be committed (pause
-        mid-pipeline; direct _prepare_epoch callers in tests): shut the
-        epoch pool, unpersist its frames, and unblock the DLQ worker slot
-        so the 1-wide pool never deadlocks on an unfed queue."""
+        """Release a prepared epoch's resources once it is committed, has
+        failed, or will never be committed (pause mid-pipeline; direct
+        _prepare_epoch callers in tests): shut the epoch pool, unpersist
+        the feed slice, and unblock an unfed DLQ worker slot so the 1-wide
+        pool never deadlocks on it."""
         prep["pool"].shutdown(wait=True)
         prep["events"].unpersist()
-        if prep.get("narrow") is not None:
-            prep["narrow"].unpersist()
-        if prep.get("small") is not None:
-            prep["small"].unpersist()
         if prep.get("dlq_q") is not None and not prep.get("dlq_fed"):
             prep["dlq_q"].put(None)
             prep["dlq_fed"] = True
 
     def _dlq_frame_from_rows(self, rows) -> DataFrame:
         """Tiny DLQ frame from the write observation's collected bad rows
-        (a driver-side local relation -- no feed scan at all). The same
-        Column expressions as the scan paths run over it, so the DLQ bytes
-        are identical regardless of which path produced them."""
-        from pyspark.sql import types as T
-
-        schema = T.StructType([
-            T.StructField("lsn", T.LongType()),
-            T.StructField("op", T.StringType()),
-            T.StructField("doc_id", T.StringType()),
-            T.StructField("n_tok", T.IntegerType()),
-            T.StructField("__sz", T.IntegerType()),
-            T.StructField("schema_ver", T.IntegerType()),
-        ])
+        (a driver-side local relation -- no feed scan at all)."""
         src = self.spark.createDataFrame(
-            [tuple(r) for r in rows] if rows else [], schema
+            [tuple(r) for r in rows],
+            "lsn bigint, op string, doc_id string, n_tok int, __sz int, schema_ver int",
         )
-        return src.select(
-            F.col("lsn"),
-            F.col("doc_id"),
-            F.lit("n_tok_mismatch").alias("rule"),
-            F.format_string(
-                "n_tok=%s != size(tokens)=%s", F.col("n_tok"), F.col("__sz")
-            ).alias("message"),
-            F.to_json(F.struct("lsn", "op", "doc_id", "n_tok", "schema_ver")).alias(
-                "payload"
-            ),
-            F.current_timestamp().alias("failed_at"),
-        )
+        return self._dlq_project(src, F.col("__sz"))
 
     def _append_dlq_frame(self, frame: DataFrame, epoch: int) -> int:
         """Exactly-once DLQ append: the failed rows commit with a
@@ -760,23 +495,20 @@ class CdcApplier:
         )
 
     def _prepare_epoch(self, events: DataFrame, epoch: int) -> dict | None:
-        """Job 1 of the epoch: cache the slice, apply pending scripted DDL,
-        split validation failures (DLQ write overlapped), map columns, LWW
-        dedup, gather batch stats + touched buckets. Returns the prepared
+        """First half of the epoch: apply pending scripted DDL, split
+        validation failures to the DLQ (on its own worker), map columns,
+        LWW dedup, and arrange the epoch's stats. Returns the prepared
         state for _commit_epoch, or None if the epoch is empty or already
         committed.
 
-        Serial-floor design (the thing that caps thread scaling): a
-        stats-folded mor epoch runs exactly ONE driver-synchronous Spark
-        job -- the delta write, whose Observation metrics carry the epoch
-        stats and whose parquet footers carry the per-file offset ranges
-        (round-5 verdict item 2: the former stats action is folded into the
-        write). cow and pending-DDL epochs keep the separate stats job (its
-        plan also carries the executor-side DISTINCT of touched bucket ids,
-        so the driver receives O(partitions + n_buckets) rows) plus the
-        MERGE. The deduped batch is consumed ONLY by the merge/write, so it
-        is neither persisted nor materialized ahead of time; DLQ and
-        lineage writes run on worker threads off the critical path."""
+        A merge-on-read epoch with no pending DDL runs no separate stats
+        job: an Observation on the raw feed slice rides the delta write's
+        own scan, and per-file offset ranges come from the parquet footers
+        the manifest pass already reads. The stats job survives only where
+        its output gates the plan itself: cow (touched-bucket discovery
+        prunes the MERGE) and epochs with pending scripted DDL (the column
+        mapping depends on the batch's max schema_ver). The deduped batch
+        is consumed only by the merge/write, so it stays lazy."""
         from concurrent.futures import ThreadPoolExecutor
 
         t0 = time.time()
@@ -794,102 +526,35 @@ class CdcApplier:
             return None
 
         bad_pred = self._bad_pred()
-        # copy-on-write MERGE prunes to touched buckets, so the stats job
-        # must scan every column the bucket/validity exprs need; a
-        # merge-on-read APPEND needs no bucket discovery at all.
-        need_buckets = self.write_mode != "mor"
-        # persist policy: cow epochs are scanned fully three times (stats +
-        # buckets, DLQ, merge), so caching the decoded batch wins; mor
-        # epochs instead cache a NARROW per-row projection (~40 B/row:
-        # keys, op, schema_ver, and size(tokens) -- the one fact the
-        # validity check needs from the heavy column) built by the stats
-        # job's scan. The DLQ split, the winner-lsn aggregate, and the
-        # lineage stats all ride that cache, so the epoch's heavy token
-        # bytes are decoded exactly TWICE (cache build + the append's
-        # probe scan) instead of once per consumer. Caching the FULL
-        # decoded batch was measured slower than re-decoding parquet
-        # (round 3); the narrow cache keeps that result while removing the
-        # redundant full decodes. STRATUM_EPOCH_PERSIST=0/1 overrides the
-        # cow policy.
-        env_persist = os.environ.get("STRATUM_EPOCH_PERSIST")
-        do_persist = need_buckets if env_persist is None else env_persist == "1"
-        if do_persist:
+        mor = self.write_mode == "mor"
+        # a cow epoch is scanned three times (stats + buckets, DLQ, merge),
+        # so caching the decoded batch wins; a mor epoch re-decodes the
+        # feed per consumer, which measured faster than building the cache
+        # (BASELINE.md round 3)
+        if not mor:
             events = events.persist()
-        narrow = None
-        bad_narrow = None
-        narrow_cached = False
-        small = None
-        dlq_q = None
-        if self.write_mode == "mor":
-            narrow = events.select(
-                "doc_id", "lsn", "op", "n_tok", "schema_ver",
-                F.size("tokens").alias("__sz"),
-            )
-            # STRATUM_NARROW_CACHE=1 opts into persisting this projection.
-            # OFF by default: consumers each re-decode the feed for their
-            # narrow slice, which measured FASTER than paying the columnar
-            # cache build (interleaved A/B, both 1 and 4 cores -- cache
-            # build is itself memory-bandwidth work; BASELINE.md round 4).
-            # On a bandwidth-rich cluster the cache may win -- keep the knob.
-            if os.environ.get("STRATUM_NARROW_CACHE", "0") == "1":
-                narrow = narrow.persist()
-                narrow_cached = True
-            bad_narrow = (F.col("op") != "D") & ~F.col("n_tok").eqNullSafe(F.col("__sz"))
         pool = ThreadPoolExecutor(max_workers=2)
+        dlq_q = None
         ok = False
         try:
             pending_evo = self.evolution_pending()
-            # FOLD the epoch stats into the delta-write job (round-5 verdict
-            # item: one less epoch action): on the mor path with no pending
-            # DDL, a CollectMetrics (Observation) node attached to the raw
-            # feed slice -- UPSTREAM of the validation filter, so it counts
-            # every raw row -- rides the delta write's own scan. The epoch
-            # then runs exactly ONE driver-synchronous Spark job (the
-            # write); rows_in / lsn bounds / token volume / distinct-key
-            # estimate all come from metrics of that job, and per-file
-            # offset ranges come from the parquet footers the manifest pass
-            # already reads. The separate stats job survives only where its
-            # output gates the plan itself: cow (touched-bucket discovery
-            # prunes the MERGE) and epochs with pending scripted DDL (the
-            # column mapping depends on the batch's max schema_ver).
-            # approx_count_distinct(doc_id) doubles as the LWW cost model's
-            # winner estimate -- DISTINCT keys, not the broadcast path's
-            # tie-inflated applied-row count (round-5 ADVICE low).
-            # STRATUM_STATS_FOLD=0 restores the separate stats action --
-            # kept for A/B measurement and the jobs-per-epoch regression test
-            fold_stats = (
-                self.write_mode == "mor"
-                and not pending_evo
-                and os.environ.get("STRATUM_STATS_FOLD", "1") == "1"
-            )
+            fold_stats = mor and not pending_evo
+            # the epoch's (rare, bad_frac-bounded) invalid rows ride the
+            # same observation: the write already decodes the token column
+            # and evaluates bad_pred, so the DLQ append runs over a tiny
+            # driver-built relation instead of re-scanning the feed
+            dlq_obs = fold_stats and self.validate and self._dlq_obs_gate()
             obs_stats = None
             events_w = events
-            # DLQ-VIA-OBSERVATION (the decode-budget fold, round 6): the
-            # write probe already decodes the heavy token column and
-            # evaluates bad_pred, so the epoch's (rare, bad_frac-bounded)
-            # invalid rows can ride the SAME CollectMetrics node the stats
-            # fold uses -- collect_list of the DLQ fields, upstream of the
-            # validation filter. The DLQ append then runs over a tiny
-            # driver-built local relation instead of re-scanning (and
-            # re-decoding) the feed: per-epoch token decodes drop from 3
-            # (probe + winner build + DLQ) to 2 with ZERO new shuffles --
-            # unlike the combined-narrow-pass attempt above, nothing is
-            # added to any critical path. Size-gated by _dlq_obs_gate.
-            dlq_obs = (
-                fold_stats
-                and self.validate
-                and self._dlq_obs_gate()
-                and os.environ.get("STRATUM_COMBINED_NARROW", "0") != "1"
-            )
             if fold_stats:
                 from pyspark.sql import Observation
 
+                # upstream of the validation filter, so it counts every raw row
                 aggs = [
                     F.count(F.lit(1)).alias("rows_in"),
                     F.min("lsn").alias("lsn_min"),
                     F.max("lsn").alias("lsn_max"),
                     F.sum("n_tok").alias("sum_tok"),
-                    F.approx_count_distinct("doc_id").alias("keys_est"),
                 ]
                 if dlq_obs:
                     aggs.append(
@@ -897,56 +562,35 @@ class CdcApplier:
                             F.when(
                                 bad_pred,
                                 F.struct(
-                                    F.col("lsn"),
-                                    F.col("op"),
-                                    F.col("doc_id"),
-                                    F.col("n_tok"),
-                                    F.size("tokens").alias("__sz"),
-                                    F.col("schema_ver"),
+                                    "lsn", "op", "doc_id", "n_tok",
+                                    F.size("tokens").alias("__sz"), "schema_ver",
                                 ),
                             )
                         ).alias("bad_rows")
                     )
                 obs_stats = Observation(f"stats_{epoch}_{time.monotonic_ns()}")
                 events_w = events.observe(obs_stats, *aggs)
-            bexpr = self.tokens._bucket_expr("doc_id")
-            # touched-bucket discovery must cover every row the merge will
-            # consume: with validation ON, bad rows are diverted to the DLQ
-            # and must NOT pin buckets; with validation OFF they merge like
-            # any other row and their buckets must be rewritten
-            touched_expr = F.when(~bad_pred, bexpr) if self.validate else bexpr
 
             def parts_job():
-                # ONE collect, two branches over the persisted slice:
-                #   (a) per-partition lineage stats (one row per input
-                #       partition), and
-                #   (b) the epoch's touched-bucket set, reduced to DISTINCT
-                #       bucket ids EXECUTOR-side (partial-agg distinct over
-                #       an int column -- skew-free), tagged partition_id
-                #       NULL.
-                # The driver thus receives O(partitions + n_buckets) rows.
-                # The previous collect_set-per-partition form returned up to
-                # partitions x n_buckets ints -- fine at sandbox B=16, a
-                # driver OOM risk at the documented 100 TB sizing (B=65536,
-                # ~10^4 input partitions).
-                if need_buckets:
-                    stats_src = events
-                elif narrow_cached:
-                    stats_src = narrow
-                else:
-                    # uncached: keep the stats scan pruned to the three
-                    # cheap columns instead of decoding tokens for __sz
-                    stats_src = events.select("lsn", "schema_ver", "n_tok")
+                # ONE collect, two row kinds: per-partition lineage stats
+                # (one row per input partition) and, for cow, the epoch's
+                # touched-bucket set reduced to DISTINCT ids executor-side
+                # (tagged partition_id NULL) -- the driver receives
+                # O(partitions + n_buckets) rows. With validation ON, bad
+                # rows go to the DLQ and must NOT pin buckets; with it OFF
+                # they merge like any other row.
+                stats_src = events if not mor else events.select("lsn", "schema_ver", "n_tok")
                 stats = stats_src.groupBy(F.spark_partition_id().alias("partition_id")).agg(
                     F.min("lsn").alias("lsn_min"),
                     F.max("lsn").alias("lsn_max"),
                     F.count("*").alias("rows_in"),
                     F.max("schema_ver").alias("v"),
-                    # token volume -> next epoch's LWW cost-model bytes
                     F.sum("n_tok").alias("tok"),
                 ).withColumn("b", F.lit(None).cast("int"))
-                if not need_buckets:
+                if mor:
                     return stats.collect()
+                bexpr = self.tokens._bucket_expr("doc_id")
+                touched_expr = F.when(~bad_pred, bexpr) if self.validate else bexpr
                 bucks = (
                     events.select(touched_expr.cast("int").alias("b"))
                     .where(F.col("b").isNotNull())
@@ -964,6 +608,7 @@ class CdcApplier:
                 return stats.unionByName(bucks).collect()
 
             parts_future = None
+            parts = None  # folded: stats ride the write job's Observation
             if pending_evo:
                 parts = parts_job()  # serial: gates evolution before mapping
                 if not parts:
@@ -971,64 +616,16 @@ class CdcApplier:
                 vs = [int(p["v"]) for p in parts if p["v"] is not None]
                 if vs:
                     self._evolve_to(max(vs))
-            elif fold_stats:
-                parts = None  # stats ride the write job's Observation
-            else:
+            elif not fold_stats:
                 parts_future = pool.submit(parts_job)
-                parts = None
-
-            # COMBINED NARROW PASS -- measured NEGATIVE on this host,
-            # default OFF (STRATUM_COMBINED_NARROW=1 opts in). The idea:
-            # validation needs size(tokens) per row, so the DLQ split and
-            # the valid-winner LWW build each decode the heavy token column
-            # once more than the bare write (3 epoch decodes vs 1); one
-            # per-doc aggregate -- max valid lsn plus collect_list of the
-            # rare bad rows -- could feed BOTH from a single scan (2 decodes
-            # total). Measured at the graded 4-core level on the 8M-event
-            # bench feed (interleaved best-of-3, /tmp/ab_combined A/B,
-            # BASELINE.md round 6): combined 156.7k vs separate 222.0k
-            # ev/s (bare write 267.7k). Why it loses here: collect_list
-            # forces ObjectHashAggregate (no codegen), and at ~2.5
-            # events/doc the map-side partial agg barely reduces the
-            # exchange, so the skinny shuffle + persist on the broadcast-
-            # build critical path costs more than the overlapped DLQ decode
-            # it saves. On a cluster whose scan is remote-object-store-bound
-            # (decode+fetch ≫ local shuffle) the trade can flip -- the knob
-            # stays for that deployment, with correctness pinned by the
-            # differential test either way.
-            lww_strategy = self._lww_strategy_for_epoch(epoch)
-            if (
-                self.write_mode == "mor"
-                and self.epoch_dedup
-                and lww_strategy == "broadcast"
-                and self.validate
-                and narrow is not None
-                and os.environ.get("STRATUM_COMBINED_NARROW", "0") == "1"
-            ):
-                small = (
-                    narrow.groupBy("doc_id")
-                    .agg(
-                        F.max(F.when(~bad_narrow, F.col("lsn"))).alias("win_lsn"),
-                        F.collect_list(
-                            F.when(
-                                bad_narrow,
-                                F.struct("lsn", "op", "n_tok", "__sz", "schema_ver"),
-                            )
-                        ).alias("__bad"),
-                    )
-                    .persist()
-                )
 
             # DLQ write overlaps everything (its own bookmarked exactly-once
-            # commit -- see _append_dlq_frame for the crash-window analysis);
-            # on the mor path it reads the combined per-doc frame (or the
-            # narrow projection when the combined pass is off), not the feed.
+            # commit -- see _append_dlq_frame for the crash-window analysis).
             # Submitted to the applier-wide single DLQ worker, NOT this
             # epoch's pool: overlapped epochs' DLQ commits must land in
             # epoch order or the monotonic bookmark silently drops the
             # older epoch's rows (see _dlq_pool).
             dlq_future = None
-            dlq_q = None
             if self.validate:
                 if dlq_obs:
                     # the frame arrives from _commit_epoch once the write
@@ -1040,24 +637,13 @@ class CdcApplier:
                     dlq_future = self._dlq_pool.submit(
                         self._dlq_obs_worker, dlq_q, epoch
                     )
-                elif small is not None:
-                    dlq_future = self._dlq_pool.submit(
-                        self._append_dlq_frame, self._dlq_frame_small(small), epoch
-                    )
-                elif narrow is not None:
-                    dlq_future = self._dlq_pool.submit(
-                        self._append_dlq_frame,
-                        self._dlq_frame_narrow(narrow, bad_narrow),
-                        epoch,
-                    )
                 else:
                     dlq_future = self._dlq_pool.submit(
                         self._append_dlq_epoch, events, epoch
                     )
 
-            # events_w (== events unless folding) carries the stats
-            # observation, so the metrics node sits in the WRITE plan;
-            # the narrow/DLQ/winner subtrees stay on the raw feed --
+            # events_w carries the stats observation, so the metrics node
+            # sits in the WRITE plan; the DLQ scan stays on the raw feed --
             # an Observation may appear in only one executed query
             good = events_w.where(~bad_pred) if self.validate else events_w
 
@@ -1074,57 +660,18 @@ class CdcApplier:
             if self._table_schema_ver() >= 1:
                 cols.append(F.when(F.col("schema_ver") >= 1, F.col("lang")).alias("lang"))
             mapped = good.select(*cols)
-            if self.tokens_packed:
-                # one Arrow round trip packs the payload to a binary blob;
-                # everything downstream (LWW join/aggregate, delta write,
-                # compaction, read-merge) moves ONE buffer per row. The
-                # narrow/validation branch above stays on the raw feed.
-                from stratum_spark.functions.pack import pack_tokens
 
-                mapped = pack_tokens(mapped, "tokens")
-
-            # LWW dedup: consumed once (by the MERGE), so stays lazy -- the
-            # merge pass is what materializes it, and the integrity digest
-            # observation fires on that same scan. With epoch_dedup=False
-            # (mor), the rows pass through as-is and the append plan has no
-            # exchange at all. The mor delta path picks the configured
-            # strategy (broadcast keeps the token columns exchange-free).
-            # NOTE the strategies are state-equivalent, not row-identical:
-            # the feed has lsn TIES (at-least-once re-emission of identical
-            # events), and the broadcast semi-join keeps every tie copy
-            # where the shuffle aggregate keeps one. Delta files are
-            # therefore NOT (doc_id, lsn)-unique under broadcast; the
-            # identical-payload-on-tie contract (cdc/dedup.py module doc,
-            # asserted by test_broadcast_lww_tie_copies_identical_payload)
-            # is what makes read-merge/compaction -- which resolve by
-            # (doc_id, lsn) with an arbitrary tie-break -- deterministic.
-            if not self.epoch_dedup:
-                deduped = mapped
-            elif self.write_mode == "mor" and lww_strategy == "broadcast":
-                # winner-lsn broadcast semi-join (cdc/dedup.py scale
-                # policy). With the combined pass the winner aggregate is a
-                # projection of the persisted per-doc frame (already decoded
-                # once for the DLQ split); the append action's only
-                # heavy-column decode is the probe scan itself.
-                if small is not None:
-                    winners = small.where(F.col("win_lsn").isNotNull()).select(
-                        "doc_id", F.col("win_lsn").alias("lsn")
-                    )
-                else:
-                    valid_n = narrow.where(~bad_narrow) if self.validate else narrow
-                    winners = valid_n.groupBy("doc_id").agg(F.max("lsn").alias("lsn"))
-                deduped = mapped.join(F.broadcast(winners), ["doc_id", "lsn"], "left_semi")
-            else:
-                deduped = lww_dedup(mapped, key="doc_id", order_col="lsn")
+            # LWW dedup: consumed once (by the MERGE or the delta write), so
+            # it stays lazy and the integrity digest observation fires on
+            # that same scan. The shuffle aggregate keeps one row per key,
+            # so delta files are (doc_id, lsn)-unique. With
+            # epoch_dedup=False (mor) the rows pass through as-is and the
+            # append plan has no exchange at all.
+            deduped = lww_dedup(mapped, key="doc_id", order_col="lsn") if self.epoch_dedup else mapped
             receipt_obs = None
-            # Observation.get resolves via a QueryExecutionListener event.
-            # Round-3 found that a blocking .get inside foreachBatch can
-            # park the stream thread; measured on Spark 4.1, the event DOES
-            # deliver for batch writes executed inside foreachBatch, so
-            # streaming now attaches the observation too and reads it with
-            # a NON-BLOCKING poll (_observed) -- zero extra jobs when it
-            # resolves, with the previous recompute paths kept as the
-            # timeout fallback (round-5 verdict item 6).
+            # Observation.get resolves via a QueryExecutionListener event;
+            # streaming reads it with a NON-BLOCKING poll (_observed) so a
+            # lost event inside foreachBatch never parks the stream thread
             if self.integrity:
                 from pyspark.sql import Observation
 
@@ -1142,16 +689,9 @@ class CdcApplier:
                 "epoch": epoch,
                 "t0": t0,
                 "events": events,
-                "narrow": narrow,
-                "small": small,
                 "deduped": deduped,
                 "receipt_obs": receipt_obs,
                 "obs_stats": obs_stats,
-                "lww_used": (
-                    lww_strategy
-                    if (self.write_mode == "mor" and self.epoch_dedup)
-                    else None
-                ),
                 "dlq_future": dlq_future,
                 "dlq_q": dlq_q,
                 "parts_future": parts_future,
@@ -1160,68 +700,69 @@ class CdcApplier:
             }
         finally:
             if not ok:
-                pool.shutdown(wait=True)
-                events.unpersist()
-                if narrow is not None:
-                    narrow.unpersist()
-                if small is not None:
-                    small.unpersist()
-                if dlq_q is not None:
-                    dlq_q.put(None)  # release the DLQ worker slot
+                self._abandon_prep({"pool": pool, "events": events, "dlq_q": dlq_q})
+
+    def _write_deltas(self, deduped: DataFrame) -> list:
+        """Phase 1 of the two-phase delta append: write the epoch's files,
+        invisible until commit_epoch_files. clustered=False: delta files
+        are never bucket-pruned; stats_cols records per-file lsn bounds
+        from the footers the manifest pass already reads."""
+        return self.deltas.write_epoch_files(deduped, clustered=False, stats_cols=("lsn",))
 
     def _commit_epoch(self, prep: dict) -> EpochStats:
-        """Job 2 of the epoch: the MERGE (atomic lake commit with the epoch
-        bookmark) plus lineage rows. Must run in epoch order."""
+        """Second half of the epoch: the MERGE or delta commit (atomic lake
+        commit with the epoch bookmark) plus lineage rows. Must run in
+        epoch order."""
         epoch = prep["epoch"]
         dbg = os.environ.get("STRATUM_EPOCH_DEBUG") == "1"
-        fold = prep.get("obs_stats") is not None
+        fold = prep["obs_stats"] is not None
         entries = None
-        keys_est = None
         t_c0 = time.time()
         try:
-            if fold:
-                # stats-folded mor epoch: ONE driver-synchronous Spark job.
-                # The delta write runs (or already ran, pipelined), then the
-                # epoch's stats are read from the write job's own metrics --
-                # no separate stats action. clustered=False: the LWW dedup's
-                # plan is the only wide/broadcast step on the delta hot
-                # path; delta files are never bucket-pruned. stats_cols
-                # records per-file lsn bounds from the footers the manifest
-                # pass already reads -- per-file lineage with zero jobs.
-                parts = []
-                touched: list[int] = []
+            if self.write_mode == "mor":
                 entries = prep.get("entries")
                 if entries is None:
-                    entries = self.deltas.write_epoch_files(
-                        prep["deduped"], clustered=False, stats_cols=("lsn",)
-                    )
-                t_parts = time.time()
+                    entries = self._write_deltas(prep["deduped"])
+            t_parts = time.time()
+            if fold:
                 stats = self._observed(prep["obs_stats"])
                 if stats is None:
                     # listener event lost (never observed in practice) --
                     # recompute with one explicit aggregation job
                     stats = self._epoch_stats_job(prep["events"])
-                if prep.get("dlq_q") is not None:
+                if prep["dlq_q"] is not None:
                     # observation-fed DLQ: release the (epoch-ordered)
                     # worker slot with the tiny driver-built frame; the
                     # lost-event fallback rebuilds from the feed instead
-                    bad = stats["bad_rows"] if "bad_rows" in stats else None
-                    frame = (
+                    bad = stats.get("bad_rows")
+                    prep["dlq_q"].put(
                         self._dlq_frame_from_rows(bad)
                         if bad is not None
                         else self._dlq_frame(prep["events"])
                     )
-                    prep["dlq_q"].put(frame)
                     prep["dlq_fed"] = True
+                parts, touched = [], []
                 rows_in = int(stats["rows_in"] or 0)
-                if rows_in == 0:
-                    if prep["dlq_future"] is not None:
-                        prep["dlq_future"].result()
-                    return EpochStats(epoch=epoch, skipped=True)
-                lsn_max = int(stats["lsn_max"])
-                sum_tok = int(stats["sum_tok"] or 0)
-                keys_est = int(stats["keys_est"] or 0)
-                t_merge = time.time()
+                lsn_max = stats["lsn_max"]
+                sum_tok = stats["sum_tok"]
+            else:
+                parts = prep["parts"]
+                if prep["parts_future"] is not None:
+                    parts = prep["parts_future"].result()
+                # per-partition stats rows (partition_id set) and distinct
+                # touched-bucket rows (partition_id NULL, b set)
+                touched = sorted(int(p["b"]) for p in parts if p["b"] is not None)
+                parts = [p for p in parts if p["partition_id"] is not None and p["rows_in"]]
+                rows_in = sum(int(p["rows_in"]) for p in parts)
+                lsn_max = max((int(p["lsn_max"]) for p in parts), default=None)
+                sum_tok = sum(int(p["tok"]) for p in parts if p["tok"] is not None)
+            if rows_in == 0:
+                if prep["dlq_future"] is not None:
+                    prep["dlq_future"].result()
+                return EpochStats(epoch=epoch, skipped=True)
+            lsn_max, sum_tok = int(lsn_max), int(sum_tok or 0)
+            t_merge = time.time()
+            if self.write_mode == "mor":
                 n_appended = self.deltas.commit_epoch_files(
                     entries,
                     job_id=self.job_id,
@@ -1236,55 +777,16 @@ class CdcApplier:
                     wall_ms=int((time.time() - t_merge) * 1000),
                 )
             else:
-                parts = prep["parts"]
-                if prep["parts_future"] is not None:
-                    parts = prep["parts_future"].result()
-                t_parts = time.time()
-                # the parts job returns two row kinds: per-partition stats
-                # (partition_id set) and the distinct touched-bucket ids
-                # (partition_id NULL, b set)
-                touched = sorted(int(p["b"]) for p in parts if p["b"] is not None)
-                parts = [p for p in parts if p["partition_id"] is not None and p["rows_in"]]
-                if not parts:
-                    if prep["dlq_future"] is not None:
-                        prep["dlq_future"].result()
-                    return EpochStats(epoch=epoch, skipped=True)
-                rows_in = sum(int(p["rows_in"]) for p in parts)
-                lsn_max = max(int(p["lsn_max"]) for p in parts)
-                sum_tok = sum(int(p["tok"]) for p in parts if p["tok"] is not None)
-                if self.write_mode == "mor":
-                    t_merge = time.time()
-                    # mor epoch with pending scripted DDL (stats job gated
-                    # the evolution): same two-phase append as the fold path
-                    entries = prep.get("entries")
-                    if entries is None:
-                        entries = self.deltas.write_epoch_files(
-                            prep["deduped"], clustered=False, stats_cols=("lsn",)
-                        )
-                    n_appended = self.deltas.commit_epoch_files(
-                        entries,
-                        job_id=self.job_id,
-                        epoch=epoch,
-                        lsn_max=lsn_max,
-                        epoch_mode=self.epoch_mode,
-                    )
-                    mstats = MergeStats(
-                        epoch_skipped=False,
-                        rows_inserted=n_appended,
-                        buckets_touched=len(touched),
-                        wall_ms=int((time.time() - t_merge) * 1000),
-                    )
-                else:
-                    mstats = self.tokens.merge(
-                        prep["deduped"],
-                        op_col="op",
-                        job_id=self.job_id,
-                        epoch=epoch,
-                        lsn_max=lsn_max,
-                        precedence_col="lsn",
-                        touched=touched,
-                        epoch_mode=self.epoch_mode,
-                    )
+                mstats = self.tokens.merge(
+                    prep["deduped"],
+                    op_col="op",
+                    job_id=self.job_id,
+                    epoch=epoch,
+                    lsn_max=lsn_max,
+                    precedence_col="lsn",
+                    touched=touched,
+                    epoch_mode=self.epoch_mode,
+                )
             t_merge = time.time()
             n_dlq = prep["dlq_future"].result() if prep["dlq_future"] is not None else 0
             if prep["dlq_future"] is not None:
@@ -1306,16 +808,9 @@ class CdcApplier:
                 # receipt observation never fired -- do NOT block on it
                 return EpochStats(epoch=epoch, skipped=True)
         finally:
-            prep["pool"].shutdown(wait=True)
-            prep["events"].unpersist()
-            if prep.get("narrow") is not None:
-                prep["narrow"].unpersist()
-            if prep.get("small") is not None:
-                prep["small"].unpersist()
-            if prep.get("dlq_q") is not None and not prep.get("dlq_fed"):
-                # never leave the single DLQ worker parked on an unfed
-                # queue (it would deadlock every later epoch's DLQ)
-                prep["dlq_q"].put(None)
+            # never leave the single DLQ worker parked on an unfed queue
+            # (it would deadlock every later epoch's DLQ)
+            self._abandon_prep(prep)
 
         wall_ms = int((time.time() - prep["t0"]) * 1000)
         batch_id = f"{self.job_id}-{epoch:08d}"
@@ -1356,21 +851,7 @@ class CdcApplier:
                     }
                 )
         n_applied = mstats.rows_inserted + mstats.rows_updated + mstats.rows_deleted
-        # feed next epoch's auto-LWW cost model: winners = the DISTINCT-key
-        # estimate from the stats observation when available (the broadcast
-        # path's applied-row count includes lsn-tie copies and overestimates
-        # broadcast traffic -- round-5 ADVICE low); epoch bytes ~ fixed
-        # per-event bytes + 4 B/token
-        from stratum_spark.cdc.dedup import EVENT_FIXED_BYTES
-
-        self._lww_obs = {
-            "winners": keys_est if keys_est is not None else n_applied,
-            "epoch_bytes": rows_in * EVENT_FIXED_BYTES + sum_tok * 4,
-            "rows_in": rows_in,
-        }
-        self._tune_feed_split(self._lww_obs["epoch_bytes"])
-        if prep.get("lww_used"):
-            self._record_lww_wall(prep["lww_used"], epoch, wall_ms / 1000.0, rows_in)
+        self._tune_feed_split(rows_in * EVENT_FIXED_BYTES + sum_tok * 4)
         lineage_rows.append(
             {
                 "batch_id": batch_id,
@@ -1489,7 +970,7 @@ class CdcApplier:
                 return None
             time.sleep(poll_s)
 
-    def _epoch_stats_job(self, events: DataFrame):
+    def _epoch_stats_job(self, events: DataFrame) -> dict:
         """Fallback epoch stats (one explicit aggregation job) for the
         never-observed case where the stats observation's listener event
         is lost."""
@@ -1498,8 +979,7 @@ class CdcApplier:
             F.min("lsn").alias("lsn_min"),
             F.max("lsn").alias("lsn_max"),
             F.sum("n_tok").alias("sum_tok"),
-            F.approx_count_distinct("doc_id").alias("keys_est"),
-        ).first()
+        ).first().asDict()
 
     def _receipt_stream_mor(self, epoch: int, obs, paths: list[str]) -> None:
         """Streaming mor receipt, on the lineage worker: prefer the write
@@ -1737,9 +1217,7 @@ class CdcApplier:
             a crash orphans them harmlessly and exactly-once is untouched."""
             prep = self._prepare_epoch(slice_of(ep), ep)
             if prep is not None and self.write_mode == "mor":
-                prep["entries"] = self.deltas.write_epoch_files(
-                    prep["deduped"], clustered=False, stats_cols=("lsn",)
-                )
+                prep["entries"] = self._write_deltas(prep["deduped"])
             return prep
 
         with ThreadPoolExecutor(max_workers=1) as prefetcher:
@@ -1781,39 +1259,30 @@ class CdcApplier:
     def state(self) -> DataFrame:
         """Current user-facing table state (system lsn column dropped).
 
-        tokens_packed tables unpack the payload back to array<int> here --
-        the packed binary form is an internal storage format; the
-        user-facing state always carries the input_hint's token arrays.
-
         cow: the base table IS the state. mor: merge-on-read -- the base
         (implicit op='U') unions the delta files and the SAME LWW rule the
         writer uses resolves each key to its highest-lsn row; 'D' winners
         drop out. One hash aggregate over base+deltas, co-bucketed on the
         key. compact_deltas() bounds the delta fraction, exactly like
         Iceberg v2 read-merge + rewrite_data_files."""
-        if self.write_mode != "mor":
-            out = self.tokens.read().drop("lsn")
-        else:
-            out = self.state_with_lsn().drop("lsn")
-        if self.tokens_packed:
-            from stratum_spark.functions.pack import unpack_tokens
+        return self.state_with_lsn().drop("lsn")
 
-            out = unpack_tokens(out, "tokens")
-        return out
-
-    def state_with_lsn(self) -> DataFrame:
-        """mor note for external delta-table readers: delta files are NOT
-        (doc_id, lsn)-unique -- the broadcast LWW strategy keeps every
-        lsn-tie copy (identical payloads by the at-least-once contract,
-        cdc/dedup.py). Any consumer must resolve keys by max-lsn with an
-        arbitrary tie-break, exactly as lww_dedup below does."""
-        if self.write_mode != "mor":
-            return self.tokens.read()
-        base = self.tokens.read().withColumn("op", F.lit("U"))
+    def _merge_on_read(self, deltas: DataFrame, base: DataFrame) -> DataFrame:
+        """LWW-resolve pinned delta and base reads. Callers pin the deltas
+        FIRST: compact_deltas() commits the base before it truncates the
+        deltas, so a reader racing it sees at worst the folded rows twice
+        (base and deltas) -- harmless under LWW -- and never neither."""
         merged = lww_dedup(
-            base.unionByName(self.deltas.read()), key="doc_id", order_col="lsn"
+            base.withColumn("op", F.lit("U")).unionByName(deltas),
+            key="doc_id", order_col="lsn",
         )
         return merged.where(F.col("op") != "D").drop("op")
+
+    def state_with_lsn(self) -> DataFrame:
+        if self.write_mode != "mor":
+            return self.tokens.read()
+        deltas = self.deltas.read()
+        return self._merge_on_read(deltas, self.tokens.read())
 
     def lookup(self, doc_id) -> DataFrame:
         """Point lookup of one document's CURRENT row -- same user-facing
@@ -1825,19 +1294,9 @@ class CdcApplier:
         resolves by the writer's own LWW rule, so an uncompacted delete
         or update is visible immediately."""
         if self.write_mode != "mor":
-            out = self.tokens.lookup(doc_id).drop("lsn")
-        else:
-            base = self.tokens.lookup(doc_id).withColumn("op", F.lit("U"))
-            dd = self.deltas.read().where(F.col("doc_id") == doc_id)
-            merged = lww_dedup(
-                base.unionByName(dd), key="doc_id", order_col="lsn"
-            )
-            out = merged.where(F.col("op") != "D").drop("op", "lsn")
-        if self.tokens_packed:
-            from stratum_spark.functions.pack import unpack_tokens
-
-            out = unpack_tokens(out, "tokens")
-        return out
+            return self.tokens.lookup(doc_id).drop("lsn")
+        deltas = self.deltas.read().where(F.col("doc_id") == doc_id)
+        return self._merge_on_read(deltas, self.tokens.lookup(doc_id)).drop("lsn")
 
     def sync_out(self, url: str, target_table: str, **kw) -> dict:
         """Propagate the engine's current state to a JDBC database
@@ -1850,18 +1309,9 @@ class CdcApplier:
 
         if self.write_mode == "mor":
             self.compact_deltas()
-        transform = kw.pop("transform", None)
-        if transform is None and self.tokens_packed:
-            # the packed binary is an internal storage format; the
-            # database receives the user-facing token arrays (stringified
-            # downstream by sync_to_jdbc), same contract as state()
-            from stratum_spark.functions.pack import unpack_tokens
-
-            transform = lambda df: unpack_tokens(df, "tokens")  # noqa: E731
         return sync_to_jdbc(
             self.spark, self.tokens, url, target_table,
-            job_id=kw.pop("job_id", f"{self.job_id}::sync"),
-            transform=transform, **kw,
+            job_id=kw.pop("job_id", f"{self.job_id}::sync"), **kw,
         )
 
     def verify_sync_target(self, url: str, target_table: str, **kw) -> dict:
@@ -1871,13 +1321,7 @@ class CdcApplier:
         with, so a clean sync verifies clean."""
         from stratum_spark.cdc.sync_out import verify_target
 
-        transform = kw.pop("transform", None)
-        if transform is None and self.tokens_packed:
-            from stratum_spark.functions.pack import unpack_tokens
-
-            transform = lambda df: unpack_tokens(df, "tokens")  # noqa: E731
-        return verify_target(self.spark, self.tokens, url, target_table,
-                             transform=transform, **kw)
+        return verify_target(self.spark, self.tokens, url, target_table, **kw)
 
     def remove_orphans(self, grace_sec: float = 3600.0) -> dict:
         """Sweep orphaned (written-but-never-committed) data files from

@@ -6,28 +6,25 @@ components/integrity.rs:121-130; resume no-dupes assertions
 crates/engine-tests/src/resume.rs:50-127) to: of all change events for a
 key in a batch, only the highest-LSN one takes effect.
 
-Two implementations:
+* `lww_dedup` (the engine's LWW, every epoch and every read-merge):
+  groupBy(key).agg(max_by(struct, lsn)). A hash aggregate with map-side
+  partial aggregation -- hot keys are pre-combined per input partition
+  BEFORE the shuffle, so a doc_id with 10^6 events in a batch ships
+  ~n_partitions partial rows, not 10^6. This is the "salted-key skew
+  splitting" requirement solved structurally: partial agg is exactly a
+  salt-by-input-partition two-phase merge, chosen by Spark's planner for
+  every hash aggregate. It keeps exactly one row per key, so its output
+  is (key, lsn)-unique.
 
-* `lww_dedup` (DEFAULT, skew-proof): groupBy(key).agg(max_by(struct, lsn)).
-  A hash aggregate with map-side partial aggregation -- hot keys are
-  pre-combined per input partition BEFORE the shuffle, so a doc_id with
-  10^6 events in a batch ships ~n_partitions partial rows, not 10^6.
-  This is the "salted-key skew splitting" requirement solved structurally:
-  partial agg is exactly a salt-by-input-partition two-phase merge, chosen
-  by Spark's planner for every hash aggregate.
-
-* `lww_dedup_window` (row_number over partitionBy(key) orderBy lsn desc):
-  the textbook formulation (SURVEY.md §2.5); shuffles EVERY duplicate row
-  to one partition per key, so it skews on hot keys. Kept for parity tests
-  and as the oracle-comparable formulation.
+* `lww_dedup_window` (row_number over partitionBy(key) orderBy lsn desc)
+  and `lww_dedup_salted` (explicit two-phase salting): reference
+  formulations kept for parity tests.
 
 Ties on lsn (at-least-once re-emission of identical events) are broken
 arbitrarily -- duplicates carry identical payloads by contract.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -38,132 +35,6 @@ def lww_dedup(df: DataFrame, key: str = "doc_id", order_col: str = "lsn") -> Dat
     cols = df.columns
     row = F.max_by(F.struct(*cols), F.col(order_col)).alias("__row")
     return df.groupBy(key).agg(row).select(*[F.col(f"__row.{c}").alias(c) for c in cols])
-
-
-def lww_dedup_broadcast(
-    df: DataFrame, key: str = "doc_id", order_col: str = "lsn"
-) -> DataFrame:
-    """LWW via winner broadcast: the per-key max(order_col) computes on a
-    COLUMN-PRUNED branch (the shuffle carries ~(key, lsn) only -- with
-    parquet input the scan itself skips the heavy columns), then a
-    broadcast SEMI join filters the full rows to the winners -- the heavy
-    columns flow scan -> join -> sink with ZERO exchange. Ties on
-    order_col (at-least-once re-emission of identical events -- duplicates
-    carry identical payloads by contract) keep ALL copies where lww_dedup
-    keeps one: state-equivalent, not row-identical, so use it only where
-    the consumer resolves multi-row keys (the mor delta path does -- its
-    readers and compactor run the LWW rule over arbitrary multi-row delta
-    sets; copy-on-write MERGE requires the collapsing aggregate).
-
-    Scale policy vs lww_dedup (the shuffle aggregate): broadcast traffic is
-    |winners| * ~30 B * n_executors, the shuffle's is 2x the batch's full
-    bytes. For a 2M-event epoch (~0.7M winners, ~20 MB) the broadcast wins
-    up to roughly 50-60 executors and on every single-node/local layout;
-    past that the shuffle aggregate wins -- pick per deployment
-    (CdcApplier(lww_strategy=...))."""
-    winners = df.groupBy(key).agg(F.max(order_col).alias(order_col))
-    return df.join(F.broadcast(winners), [key, order_col], "left_semi")
-
-
-# pick_lww_strategy defaults -- all calibratable via env:
-#   WINNER_ROW_BYTES: a broadcast winner row is (key ~14 B string, lsn 8 B)
-#     plus hashed-relation overhead.
-#   EVENT_FIXED_BYTES: per-event bytes besides the token array (doc_id,
-#     lsn, ts, op, source, lang, schema_ver + row overhead).
-#   XOVER bytes/core: how many epoch bytes ONE core pushes through the
-#     shuffle exchange in the time the broadcast relation build's serial
-#     floor takes (~1.3 s on this host x ~100 MB/s per-core effective
-#     exchange throughput on token-heavy rows = 128 MiB). Measured via the
-#     round-4 interleaved A/B: 2 M-event epochs (~0.5 GB) crossed over
-#     between 8 and 16 threads, giving 2*0.5 GB / P* with P* ~ 8.
-WINNER_ROW_BYTES = 30
-EVENT_FIXED_BYTES = 64
-_DEFAULT_XOVER = 128 << 20
-
-
-def pick_lww_strategy(
-    winners: int,
-    epoch_bytes: int,
-    parallelism: int,
-    n_executors: int = 1,
-    xover_bytes_per_core: int | None = None,
-) -> tuple[str, dict]:
-    """Cost-model choice between the broadcast semi-join LWW and the
-    shuffle aggregate, computed from the PREVIOUS epoch's observed stats
-    (CdcApplier feeds winners + epoch_bytes per epoch; round-4 baked the
-    one-host measurement in as a constant -- this makes the decision an
-    evaluated model with its inputs logged, so a misfit is visible).
-
-    Two bounds, both must favor broadcast:
-
-    1. Cluster traffic: broadcast ships the winner relation to EVERY
-       executor (winners x WINNER_ROW_BYTES x n_executors); the shuffle
-       moves the epoch twice (map write + reduce read = 2 x epoch_bytes).
-       With ~0.36 winners/event at 30 B vs 2 x ~256 B/event this favors
-       broadcast up to ~50 executors at 2 M-event epochs -- the cluster
-       analog documented on lww_dedup_broadcast.
-
-    2. Serial floor (dominates single-node): the broadcast relation
-       build+materialize is a SERIAL stage of roughly constant wall,
-       while the shuffle's extra cost divides by parallelism. Broadcast
-       wins iff parallelism <= P* = 2 x epoch_bytes / xover_bytes_per_core.
-
-    Returns (strategy, inputs) where inputs carries every number the
-    decision used -- callers log it per epoch."""
-    xover = xover_bytes_per_core or int(
-        os.environ.get("STRATUM_LWW_XOVER_BYTES_PER_CORE", _DEFAULT_XOVER)
-    )
-    bc_traffic = winners * WINNER_ROW_BYTES * max(1, n_executors)
-    shuffle_traffic = 2 * epoch_bytes
-    p_star = shuffle_traffic / xover
-    if bc_traffic >= shuffle_traffic:
-        strategy = "shuffle"
-    elif parallelism > p_star:
-        strategy = "shuffle"
-    else:
-        strategy = "broadcast"
-    return strategy, {
-        "winners": winners,
-        "epoch_bytes": epoch_bytes,
-        "parallelism": parallelism,
-        "n_executors": n_executors,
-        "bc_traffic_bytes": bc_traffic,
-        "shuffle_traffic_bytes": shuffle_traffic,
-        "p_star": round(p_star, 2),
-        "xover_bytes_per_core": xover,
-    }
-
-
-def xover_from_walls(
-    wall_broadcast_sec: float,
-    wall_shuffle_sec: float,
-    epoch_bytes: int,
-    parallelism: int,
-) -> int:
-    """xover_bytes_per_core implied by OBSERVED epoch walls under the two
-    LWW strategies at the same parallelism and epoch shape -- the online
-    calibration the round-5 verdict asked for (item 3), done at the level
-    the strategy choice actually lives at.
-
-    Component-level micro-probes (time a synthetic broadcast build, time a
-    synthetic shuffle) were tried first and MEASURED WRONG on this class
-    of host: a probe small enough to be cheap sits in the fixed-cost
-    regime where the exchange wall doesn't divide by parallelism, and the
-    per-core rate it implies flipped the 16-core decision against the
-    round-4 full-epoch A/B (which is ground truth). Full-epoch walls under
-    each strategy are the only signal that already contains every real
-    effect (decode, memory-bandwidth sharing, steal) at the real size.
-
-    Derivation: the model says broadcast wins iff P <= P* and the walls
-    cross exactly at P*, so an observed pair at parallelism P pins
-    P* = P x wall_shuffle / wall_broadcast (slower shuffle pushes the
-    cross-over up). xover = 2 x epoch_bytes / P*, clamped to a sane band
-    so one steal-poisoned sample cannot wedge every future decision."""
-    p_star = max(
-        parallelism * wall_shuffle_sec / max(wall_broadcast_sec, 1e-3), 0.25
-    )
-    xover = 2 * epoch_bytes / p_star
-    return int(min(max(xover, 8 << 20), 4 << 30))
 
 
 def lww_dedup_window(df: DataFrame, key: str = "doc_id", order_col: str = "lsn") -> DataFrame:

@@ -194,7 +194,6 @@ def _applier(args):
         n_events_hint=args.events_hint,
         write_mode=mode,
         auto_compact_ratio=args.compact_ratio,
-        lww_strategy=getattr(args, "lww_strategy", None),
     )
 
 
@@ -499,12 +498,6 @@ def _add_applier_args(p: argparse.ArgumentParser, default_mode: str = "mor") -> 
     p.add_argument("--n-buckets", type=int, default=64)
     p.add_argument("--events-hint", type=int, default=None)
     p.add_argument("--compact-ratio", type=float, default=None)
-    p.add_argument("--lww-strategy", choices=("auto", "shuffle", "broadcast"),
-                   default=None,
-                   help="per-epoch LWW implementation for merge-on-read: "
-                        "'broadcast' (winner-lsn semi-join; low parallelism), "
-                        "'shuffle' (full-row aggregate; scales with "
-                        "parallelism), 'auto' (cost-model pick, default)")
     p.add_argument("--cores", type=int, default=None)
 
 

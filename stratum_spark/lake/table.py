@@ -39,6 +39,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 from dataclasses import dataclass, field as dc_field
@@ -798,18 +799,24 @@ class LakeTable:
                 .collect()
             )
             footers = [by_path[p] for p in paths]
-        return [
-            FileEntry(
+        entries = []
+        for (rel, split, full), (r, bounds, sz) in zip(todo, footers):
+            if r == 0:
+                # an empty task still writes a part file; the manifest
+                # drops it, so it must not outlive the write as an orphan
+                os.remove(full)
+                continue
+            entries.append(FileEntry(
                 path=rel,
                 buckets=p2b.get(split, ()) if clustered else all_buckets,
                 schema_id=snap.schema_id,
                 rows=r,
                 stats=bounds or None,
                 size_bytes=sz,
-            )
-            for (rel, split, _), (r, bounds, sz) in zip(todo, footers)
-            if r > 0
-        ]
+            ))
+        if not entries:
+            shutil.rmtree(out_dir, ignore_errors=True)
+        return entries
 
     def append_local(self, rows: list[dict]) -> int:
         """Driver-side append of a SMALL row batch (lineage/metrics rows)
@@ -1269,8 +1276,6 @@ class LakeTable:
         """DROP TABLE: delete all data files, metadata, and the table root
         (stratum DROP TABLE, SURVEY §2.6). Irreversible; the handle is
         unusable afterwards."""
-        import shutil
-
         shutil.rmtree(self.root)
         self._snap = None
 
@@ -1279,8 +1284,6 @@ class LakeTable:
         versions, delete older version files and any data file no retained
         snapshot references (Iceberg expire_snapshots analog). Time travel
         remains valid for retained versions only. Returns deletion counts."""
-        import shutil
-
         metas = sorted(
             f for f in os.listdir(os.path.join(self.root, _META)) if f.startswith("v")
         )
@@ -1359,8 +1362,6 @@ class LakeTable:
         Driver-side listing is O(files) stat calls on the shared warehouse
         fs — the same visibility the write path already requires — and
         never runs a Spark job. Returns deletion counts."""
-        import shutil
-
         referenced: set[str] = set()
         for s in self.history():
             referenced.update(e.path for e in s.files)

@@ -174,20 +174,16 @@ def test_dlq_exactly_once_crash_after_merge_before_dlq(spark, binlog_dir, tmp_pa
 
 
 def test_broadcast_lww_tie_copies_identical_payload(spark):
-    """The identical-payload-on-tie contract that makes the broadcast LWW
-    strategy safe: the at-least-once feed re-emits events with the SAME
-    (lsn, payload); lww_dedup_broadcast keeps every tie copy (delta files
-    are not (doc_id, lsn)-unique) where the collapsing aggregate keeps
-    one -- state-equivalent because all copies of a winner are identical.
-    Asserts (a) the feed contract and (b) strategy state-equivalence."""
+    """The feed's identical-payload-on-tie contract: the at-least-once
+    feed re-emits events with the SAME (lsn, payload), so every reader
+    that resolves keys by max-lsn with an arbitrary tie-break (lww_dedup,
+    the oracle's keep-first) lands on the same row."""
     import pyspark.sql.functions as F
-
-    from stratum_spark.cdc.dedup import lww_dedup_broadcast
 
     df = generate_binlog(spark, n_docs=40, n_events=1500, seed=5,
                          dup_frac=0.08, with_evolution=False)
     assert df.count() > df.select("doc_id", "lsn").distinct().count()
-    # (a) every (doc_id, lsn) tie group carries exactly ONE distinct payload
+    # every (doc_id, lsn) tie group carries exactly ONE distinct payload
     ties = (
         df.groupBy("doc_id", "lsn")
         .agg(
@@ -200,61 +196,6 @@ def test_broadcast_lww_tie_copies_identical_payload(spark):
     )
     assert ties.count() > 0
     assert ties.where("payloads > 1").count() == 0
-    # (b) broadcast keeps tie copies; resolving them reproduces lww_dedup
-    a = lww_dedup(df, "doc_id", "lsn")
-    b = lww_dedup_broadcast(df, "doc_id", "lsn")
-    assert b.count() >= a.count()
-    want = {r["doc_id"]: (r["lsn"], r["tokens"]) for r in a.collect()}
-    got = {r["doc_id"]: (r["lsn"], r["tokens"])
-           for r in b.dropDuplicates(["doc_id"]).collect()}
-    assert got == want
-
-
-def test_pick_lww_strategy_cost_model():
-    """The auto LWW decision is an EVALUATED cost model, not a constant:
-    both bounds must flip it. Numbers shaped like the bench feed
-    (2M-event epochs ~512 MB, ~0.7M winners)."""
-    from stratum_spark.cdc.dedup import pick_lww_strategy
-
-    s, i = pick_lww_strategy(700_000, 512 << 20, parallelism=4)
-    assert s == "broadcast" and i["p_star"] >= 4
-    # serial-floor bound: the broadcast build can't amortize past P*
-    s, i = pick_lww_strategy(700_000, 512 << 20, parallelism=16)
-    assert s == "shuffle" and i["p_star"] < 16
-    # cluster traffic bound: winner-relation copies dominate at high
-    # executor counts even at low per-executor parallelism
-    s, i = pick_lww_strategy(700_000, 512 << 20, parallelism=4, n_executors=200)
-    assert s == "shuffle" and i["bc_traffic_bytes"] >= i["shuffle_traffic_bytes"]
-    # tiny epochs: the serial build floor dominates at ANY parallelism
-    s, _ = pick_lww_strategy(10_000, 4 << 20, parallelism=1)
-    assert s == "shuffle"
-
-
-def test_lww_auto_resolves_from_observed_stats(spark, binlog_dir, tmp_path):
-    """lww_strategy='auto' re-evaluates per epoch from the previous
-    epoch's observed (winners, bytes); planting stats flips the decision
-    both ways, and a real backfill populates the observation."""
-    ap = CdcApplier(spark, str(tmp_path / "whL"), job_id="t", n_buckets=8,
-                    evolution=[], write_mode="mor")
-    assert ap.lww_auto and ap._lww_obs is None
-    P = spark.sparkContext.defaultParallelism
-    # epoch big enough that P* = 2*bytes/xover > P -> broadcast
-    ap._lww_obs = {"winners": 1000, "epoch_bytes": (128 << 20) * P, "rows_in": 10}
-    assert ap._lww_strategy_for_epoch(1) == "broadcast"
-    # tiny epoch: serial build floor dominates -> shuffle
-    ap._lww_obs = {"winners": 1000, "epoch_bytes": 1 << 20, "rows_in": 10}
-    assert ap._lww_strategy_for_epoch(2) == "shuffle"
-
-    ap2 = CdcApplier(spark, str(tmp_path / "whL2"), job_id="t", n_buckets=8,
-                     evolution=[], write_mode="mor")
-    ap2.run_backfill(binlog_dir, epoch_size=EPOCH, stop_after=2)
-    assert ap2._lww_obs is not None
-    assert ap2._lww_obs["winners"] > 0 and ap2._lww_obs["epoch_bytes"] > 0
-    # explicit strategies bypass the model entirely
-    ap3 = CdcApplier(spark, str(tmp_path / "whL3"), job_id="t", n_buckets=8,
-                     evolution=[], write_mode="mor", lww_strategy="broadcast")
-    ap3._lww_obs = {"winners": 1000, "epoch_bytes": 1 << 20, "rows_in": 10}
-    assert ap3._lww_strategy_for_epoch(0) == "broadcast"
 
 
 def test_dlq_pipelined_commits_in_epoch_order(spark, binlog_dir, tmp_path):

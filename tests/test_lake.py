@@ -270,3 +270,17 @@ def test_latest_version_recovers_without_hint_after_expiry(spark, tmp_path):
         fh.write("999")
     t3 = LakeTable.load(spark, root)
     assert t3.snapshot().version == 5
+
+
+def test_write_epoch_files_of_empty_frame_leaves_no_files(spark, tmp_path):
+    """A write whose tasks produce no rows still makes Spark emit a
+    zero-row part file; the manifest drops it, so the write must delete it
+    too, or a clean run leaves orphans for the sweep to find."""
+    import glob
+    import os
+
+    root = str(tmp_path / "empty")
+    t = LakeTable.create(spark, root, DDL, key="doc_id", n_buckets=4)
+    empty = spark.createDataFrame([], DDL)
+    assert t.write_epoch_files(empty, clustered=False) == []
+    assert glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True) == []

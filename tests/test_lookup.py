@@ -60,12 +60,6 @@ def test_lookup_cow_and_packed(spark, tmp_path):
     ap.run_backfill(binlog, epoch_size=250)
     _check_lookups(ap)
 
-    app = CdcApplier(spark, str(tmp_path / "whp"), job_id="lkp", n_buckets=8,
-                     write_mode="mor", tokens_packed=True,
-                     n_events_hint=N_EVENTS)
-    app.run_backfill(binlog, epoch_size=250)
-    _check_lookups(app)
-
 
 def test_cli_lookup_and_changes_verbs(spark, tmp_path, capsys):
     binlog = _feed(spark, tmp_path)

@@ -232,28 +232,59 @@ def test_mor_deep_pipelined_kill_and_resume(spark, tmp_path):
     assert b.deltas.row_count() == c.deltas.row_count()
 
 
-def test_lww_broadcast_strategy_matches_shuffle(spark, tmp_path):
-    """The two per-epoch LWW implementations (full-row shuffle aggregate
-    vs winner-lsn broadcast semi-join -- cdc/dedup.py) must converge to the
-    identical final state, including under schema evolution and with
-    validation failures in the feed. The broadcast path keeps lsn-tie
-    duplicates (at-least-once re-emissions with identical payloads), so
-    the comparison is state equality, with each run's own batch receipts
-    verifying clean against its own delta files."""
-    binlog = _mk_feed(spark, tmp_path, with_evolution=True)
-    a = CdcApplier(spark, str(tmp_path / "wsh"), job_id="s", n_buckets=8,
-                   n_events_hint=N_EVENTS, write_mode="mor", lww_strategy="shuffle")
-    a.run_backfill(binlog, epoch_size=150)
-    b = CdcApplier(spark, str(tmp_path / "wbc"), job_id="s", n_buckets=8,
-                   n_events_hint=N_EVENTS, write_mode="mor", lww_strategy="broadcast")
-    b.run_backfill(binlog, epoch_size=150)
-    assert _rows(a.state()) == _rows(b.state())
-    assert len(b.epoch_receipts()) >= 5
-    assert all(r["status"] == "ok" for r in b.verify_epoch_receipts())
-    # DLQ side-channel identical as well
-    assert sorted(r["lsn"] for r in a.dlq.read().collect()) == sorted(
-        r["lsn"] for r in b.dlq.read().collect()
-    )
+def test_mor_reads_race_compaction(spark, tmp_path):
+    """state() and lookup() pin two snapshots: the deltas and the base. A
+    compaction by another applier (base MERGE commit, then delta truncate)
+    may land between the pins. Deterministic interleaving: the first of
+    the reader's tokens.read / tokens.lookup / deltas.read to return runs
+    a full compact_deltas() on a second applier. The reads must still
+    equal the replay oracle -- folded rows may be seen twice (LWW collapses
+    them), never not at all."""
+    binlog = _mk_feed(spark, tmp_path, with_evolution=False)
+    want = state_as_records(replay_binlog(binlog), table_schema_ver=0)
+    early = state_as_records(replay_binlog(binlog, max_lsn=300), table_schema_ver=0)
+
+    def racing_reader(wh):
+        mk = lambda: CdcApplier(spark, wh, job_id="rc", n_buckets=8,  # noqa: E731
+                                evolution=[], write_mode="mor")
+        writer = mk()
+        writer.run_backfill(binlog, epoch_size=300, stop_after=1)
+        writer.compact_deltas()
+        writer.run_backfill(binlog, epoch_size=300)  # epochs 1-2 stay deltas
+        reader, compactor = mk(), mk()
+        assert reader.tokens.row_count() > 0 and reader.deltas.row_count() > 0
+        fired = []
+
+        def race(fn):
+            def wrapped(*a, **kw):
+                out = fn(*a, **kw)
+                if not fired:
+                    fired.append(True)
+                    compactor.compact_deltas()
+                return out
+            return wrapped
+
+        for t, m in ((reader.tokens, "read"), (reader.tokens, "lookup"),
+                     (reader.deltas, "read")):
+            setattr(t, m, race(getattr(t, m)))
+        return reader, fired
+
+    reader, fired = racing_reader(str(tmp_path / "ws"))
+    got = _rows(reader.state())
+    assert fired and reader.deltas.row_count() == 0  # the race ran
+    assert set(got) == set(want)
+    for k, w in want.items():
+        assert got[k]["tokens"] == list(w["tokens"]), k
+
+    # a live doc whose current row arrived in the (now folded) deltas
+    doc = sorted(
+        k for k, w in want.items()
+        if k not in early or list(early[k]["tokens"]) != list(w["tokens"])
+    )[0]
+    reader, fired = racing_reader(str(tmp_path / "wl"))
+    rows = reader.lookup(doc).collect()
+    assert fired and reader.deltas.row_count() == 0
+    assert len(rows) == 1 and list(rows[0]["tokens"]) == list(want[doc]["tokens"])
 
 
 def test_verify_epoch_receipts_expiry_without_compaction(spark, tmp_path):
@@ -396,8 +427,7 @@ def test_mor_stream_kill_between_append_and_checkpoint(spark, tmp_path):
     got = _rows(ap2.state())
     assert set(got) == set(want)
     # the replayed micro-batch appended nothing: the killed-and-resumed
-    # run's delta volume equals a clean one-shot run's (feed lsn-ties make
-    # (doc_id, lsn) uniqueness too strong a proxy under the broadcast LWW)
+    # run's delta volume equals a clean one-shot run's
     clean = CdcApplier(spark, str(tmp_path / "wclean"), job_id="kc", n_buckets=8,
                        evolution=[], write_mode="mor")
     run_stream_until_idle(clean, binlog, str(tmp_path / "ckptclean"),
@@ -461,3 +491,22 @@ def test_mor_streaming_end_to_end(spark, tmp_path):
     assert set(got) == set(want)
     for k, w in want.items():
         assert got[k]["tokens"] == list(w["tokens"]), k
+
+
+def test_binary_tokens_warehouse_is_rejected(spark, tmp_path):
+    """Only array<int> token tables are supported: a warehouse whose
+    tokens column is packed binary must fail on load instead of handing
+    raw bytes to state()."""
+    import pytest
+
+    from stratum_spark.cdc import TOKENS_DDL
+    from stratum_spark.lake import LakeTable
+
+    wh = tmp_path / "wb"
+    LakeTable.create(
+        spark, str(wh / "tokens"),
+        TOKENS_DDL.replace("tokens array<int>", "tokens binary"),
+        key="doc_id", n_buckets=4,
+    )
+    with pytest.raises(ValueError, match="packed binary"):
+        CdcApplier(spark, str(wh), write_mode="mor")

@@ -1,23 +1,18 @@
 """Round-6 additions: stats-fold (one less epoch action), per-file lineage
-offset ranges from parquet footers, walls-based online LWW calibration, and
-zero-extra-job streaming receipts.
+offset ranges from parquet footers, the DLQ riding the write observation,
+and zero-extra-job streaming receipts.
 
-Reference parity anchors: the folded stats mirror the reference's per-batch
+Reference parity anchor: the folded stats mirror the reference's per-batch
 MetricsSnapshot gathered during the apply itself
-(crates/engine-infra/src/metrics.rs:22-31); the persisted cross-over mirrors
-its estimator constants (crates/engine-analyzer/src/estimator.rs:22-60) made
-observational.
+(crates/engine-infra/src/metrics.rs:22-31).
 """
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from stratum_spark.cdc import CdcApplier, generate_binlog, write_binlog
-from stratum_spark.cdc.dedup import pick_lww_strategy, xover_from_walls
 from stratum_spark.cdc.oracle import replay_binlog, state_as_records
 from stratum_spark.lake.table import FileEntry
 
@@ -36,69 +31,6 @@ def _oracle(binlog_dir):
 
 
 # ---------------------------------------------------------------------------
-# planted-walls calibration (round-5 verdict item 3 done-criterion: a test
-# planting slow/fast observed walls flips the decision WITHOUT env vars)
-# ---------------------------------------------------------------------------
-def test_xover_from_walls_flips_decision_without_env():
-    epoch_bytes, parallelism = 512 << 20, 4
-    # slow broadcast (10 s) vs fast shuffle (2 s) at P=4: the implied
-    # cross-over sits BELOW the operating point -> shuffle
-    slow_bc = xover_from_walls(10.0, 2.0, epoch_bytes, parallelism)
-    s1, i1 = pick_lww_strategy(700_000, epoch_bytes, parallelism, 1,
-                               xover_bytes_per_core=slow_bc)
-    assert s1 == "shuffle" and i1["p_star"] < parallelism
-    # fast broadcast (1 s) vs slow shuffle (5 s): cross-over above -> broadcast
-    fast_bc = xover_from_walls(1.0, 5.0, epoch_bytes, parallelism)
-    s2, i2 = pick_lww_strategy(700_000, epoch_bytes, parallelism, 1,
-                               xover_bytes_per_core=fast_bc)
-    assert s2 == "broadcast" and i2["p_star"] > parallelism
-    # clamps: a steal-poisoned extreme sample cannot wedge the decision
-    assert xover_from_walls(1e6, 1e-9, epoch_bytes, 64) <= 4 << 30
-    assert xover_from_walls(1e-9, 1e6, epoch_bytes, 64) >= 8 << 20
-
-
-def test_lww_probe_calibrates_and_persists(spark, binlog6, tmp_path, monkeypatch):
-    """STRATUM_LWW_PROBE=1 forces the one-epoch probe of the non-picked
-    strategy; with warm samples of both, the applier calibrates the
-    cross-over from the observed walls, logs it, persists it in the table
-    properties, and a fresh applier on the same warehouse inherits it.
-    State equality with the replay oracle must hold across the probe epoch
-    (the strategies are state-equivalent by contract)."""
-    monkeypatch.setenv("STRATUM_LWW_PROBE", "1")
-    wh = str(tmp_path / "wh_cal")
-    ap = CdcApplier(spark, wh, job_id="cal", n_buckets=8, evolution=[],
-                    write_mode="mor", lww_strategy="auto")
-    ap.run_backfill(binlog6, epoch_size=800)
-    assert "broadcast" in ap._lww_walls and "shuffle" in ap._lww_walls
-    assert ap._lww_xover is not None and ap._lww_cal is not None
-    assert (8 << 20) <= ap._lww_xover <= (4 << 30)
-    persisted = ap.tokens.snapshot().properties.get("lww_xover_bytes_per_core")
-    assert persisted == str(ap._lww_xover)
-    # correctness across the probe epoch
-    ap.compact_deltas()
-    got = {r["doc_id"]: r["tokens"] for r in ap.state().collect()}
-    want = {k: v["tokens"] for k, v in _oracle(binlog6).items()}
-    assert got == want
-    # inheritance: a new applier on the same warehouse starts calibrated
-    ap2 = CdcApplier(spark, wh, job_id="cal2", n_buckets=8, evolution=[],
-                     write_mode="mor", lww_strategy="auto")
-    assert ap2._lww_xover == ap._lww_xover
-
-
-def test_lww_probe_auto_skips_when_model_confident(spark, binlog6, tmp_path,
-                                                   monkeypatch):
-    """Default probe mode 'auto' spends an epoch only inside the 1.5x
-    uncertainty band around P*; tiny epochs at parallelism far from the
-    cross-over must NOT probe (the bench path stays unperturbed)."""
-    monkeypatch.delenv("STRATUM_LWW_PROBE", raising=False)
-    ap = CdcApplier(spark, str(tmp_path / "wh_np"), job_id="np", n_buckets=8,
-                    evolution=[], write_mode="mor", lww_strategy="auto")
-    ap.run_backfill(binlog6, epoch_size=800)
-    # tiny epochs: P* = 2*epoch_bytes/xover << parallelism/1.5 -> confident
-    assert len(ap._lww_walls) <= 1
-
-
-# ---------------------------------------------------------------------------
 # stats fold: one less driver-synchronous Spark action per mor epoch
 # ---------------------------------------------------------------------------
 def _jobs_for_epoch(spark, ap, events, epoch):
@@ -111,36 +43,24 @@ def _jobs_for_epoch(spark, ap, events, epoch):
     return len(after - before)
 
 
-def test_stats_fold_removes_one_job_per_epoch(spark, binlog6, tmp_path,
-                                              monkeypatch):
-    """The folded mor epoch must run exactly one job FEWER than the same
-    epoch with the separate stats action (STRATUM_STATS_FOLD=0) -- the
-    round-5 verdict's 'fold the parts/stats job into the delta-write job'
-    criterion, measured as submitted Spark jobs (AQE inflates both sides
-    equally)."""
-    monkeypatch.delenv("STRATUM_LWW_PROBE", raising=False)
+def test_stats_fold_removes_one_job_per_epoch(spark, binlog6, tmp_path):
+    """A stats-folded mor epoch (no pending DDL) runs no separate stats
+    action: its stats ride the delta write's Observation. Pinned as the
+    absolute count of submitted Spark jobs for a warm epoch at local[4]:
+    3 (AQE surfaces the LWW shuffle's map stage as its own job); a
+    separate stats action would add 2 more."""
     feed = spark.read.parquet(binlog6)
     sl = [feed.where((F.col("lsn") >= i * 1000 + 1) & (F.col("lsn") <= (i + 1) * 1000))
-          for i in range(4)]
-    ap_fold = CdcApplier(spark, str(tmp_path / "wf"), job_id="f", n_buckets=8,
-                         evolution=[], write_mode="mor")
-    monkeypatch.setenv("STRATUM_STATS_FOLD", "0")
-    ap_sep = CdcApplier(spark, str(tmp_path / "ws"), job_id="f", n_buckets=8,
-                        evolution=[], write_mode="mor")
-    # epoch 0 warms both JVM paths; epoch 1 is the measured one
-    monkeypatch.setenv("STRATUM_STATS_FOLD", "1")
-    _jobs_for_epoch(spark, ap_fold, sl[0], 0)
-    jobs_fold = _jobs_for_epoch(spark, ap_fold, sl[1], 1)
-    monkeypatch.setenv("STRATUM_STATS_FOLD", "0")
-    _jobs_for_epoch(spark, ap_sep, sl[0], 0)
-    jobs_sep = _jobs_for_epoch(spark, ap_sep, sl[2], 1)
-    # the stats action costs >= 1 job (2 under AQE: its partial-agg
-    # exchange surfaces as a stage-job); folding removes all of it
-    assert jobs_fold < jobs_sep and jobs_fold <= 3, (jobs_fold, jobs_sep)
-    # both paths produce identical summary lineage counts
-    f = ap_fold.lineage.read().where(F.col("partition_id") == -1).orderBy("epoch")
-    s = ap_sep.lineage.read().where(F.col("partition_id") == -1).orderBy("epoch")
-    assert [r["rows_in"] for r in f.collect()][0] == [r["rows_in"] for r in s.collect()][0]
+          for i in range(2)]
+    ap = CdcApplier(spark, str(tmp_path / "wf"), job_id="f", n_buckets=8,
+                    evolution=[], write_mode="mor")
+    # epoch 0 warms the JVM paths; epoch 1 is the measured one
+    _jobs_for_epoch(spark, ap, sl[0], 0)
+    jobs_fold = _jobs_for_epoch(spark, ap, sl[1], 1)
+    assert jobs_fold == 3, jobs_fold
+    # the folded stats count every raw row of the slice
+    lin = ap.lineage.read().where(F.col("partition_id") == -1).orderBy("epoch")
+    assert [r["rows_in"] for r in lin.collect()] == [sl[0].count(), sl[1].count()]
 
 
 def test_fold_lineage_detail_is_per_file_offset_ranges(spark, binlog6, tmp_path):
@@ -195,174 +115,79 @@ def test_stream_receipts_use_write_observation(spark, binlog6, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# pack.py guards (round-5 ADVICE lows)
-# ---------------------------------------------------------------------------
-def test_unpack_rejects_interior_misaligned_offsets():
-    import pyarrow as pa
-
-    from stratum_spark.functions.pack import unpack_array
-
-    # lengths 2+2: end offsets (0, 4) are 4-byte aligned, the interior
-    # boundary (2) is not -- the old ends-only guard passed this silently
-    bad = pa.array([b"\x01\x00", b"\x00\x00"], type=pa.binary())
-    with pytest.raises(ValueError, match="token-packed"):
-        unpack_array(bad)
-
-
-def test_pack_int32_offset_overflow_guarded(monkeypatch):
-    import numpy as np
-    import pyarrow as pa
-
-    from stratum_spark.functions import pack as packmod
-
-    # build a list<int32> whose BYTE offsets would exceed int32 without
-    # allocating 2 GiB: fake the overflow by patching the iinfo bound
-    col = pa.array([[1, 2, 3], [4]], type=pa.list_(pa.int32()))
-    real_iinfo = np.iinfo
-
-    class FakeInfo:
-        max = 8  # pretend int32 tops out at 8 so 16 B of offsets overflows
-
-    monkeypatch.setattr(packmod.np, "iinfo", lambda t: FakeInfo)
-    try:
-        with pytest.raises(ValueError, match="too large to pack"):
-            packmod.pack_array(col)
-    finally:
-        monkeypatch.setattr(packmod.np, "iinfo", real_iinfo)
-    # sanity: the real bound passes and round-trips
-    packed = packmod.pack_array(col)
-    assert packmod.unpack_array(packed).to_pylist() == [[1, 2, 3], [4]]
-
-
-# ---------------------------------------------------------------------------
-# combined narrow pass (opt-in, measured negative on this host -- see the
-# _prepare_epoch comment + BASELINE.md round 6): the broadcast-LWW winner
-# build and the DLQ split share ONE narrow scan, trading the DLQ's token
-# decode for a skinny ObjectHashAggregate shuffle. Correctness of both
-# paths is pinned here regardless of which a deployment picks.
-
-
-def test_combined_narrow_pass_matches_separate_scans(spark, binlog6, tmp_path,
-                                                     monkeypatch):
-    """Differential: STRATUM_COMBINED_NARROW=1 (opt-in) vs =0 (default) must
-    produce byte-identical final state AND identical DLQ content (the feed
-    carries bad_frac invalid rows, so the DLQ branch is genuinely
-    exercised)."""
-    monkeypatch.delenv("STRATUM_LWW_PROBE", raising=False)
-
-    def run(flag: str, wh: str):
-        monkeypatch.setenv("STRATUM_COMBINED_NARROW", flag)
-        ap = CdcApplier(spark, str(tmp_path / wh), job_id="c", n_buckets=8,
-                        evolution=[], write_mode="mor",
-                        n_events_hint=4000)
-        ap.run_backfill(binlog6, epoch_size=1000, pipelined=True)
-        state = {
-            r["doc_id"]: (list(r["tokens"] or []), r["n_tok"], r["source"])
-            for r in ap.state().collect()
-        }
-        dlq = sorted(
-            (r["lsn"], r["doc_id"], r["rule"], r["message"], r["payload"])
-            for r in ap.dlq.read().collect()
-        )
-        return ap, state, dlq
-
-    ap1, state1, dlq1 = run("1", "w1")
-    ap0, state0, dlq0 = run("0", "w0")
-    assert state1 == state0
-    assert len(dlq1) > 0  # the split actually fired
-    assert dlq1 == dlq0
-    # and both match the sequential replay oracle
-    oracle = _oracle(binlog6)
-    assert set(state1) == set(oracle)
-    for k, w in oracle.items():
-        assert state1[k][0] == list(w["tokens"]), k
-
-
-def test_combined_pass_gated_off_for_shuffle_strategy(spark, binlog6, tmp_path,
-                                                      monkeypatch):
-    """Under the shuffle LWW strategy there is no winner broadcast build, so
-    the combined frame must not be constructed (its skinny shuffle would be
-    pure overhead) even when opted in; the DLQ falls back to the narrow-scan
-    path and content is unchanged."""
-    monkeypatch.delenv("STRATUM_LWW_PROBE", raising=False)
-    monkeypatch.setenv("STRATUM_COMBINED_NARROW", "1")
-    monkeypatch.setenv("STRATUM_LWW_STRATEGY", "shuffle")
-    ap = CdcApplier(spark, str(tmp_path / "wsfl"), job_id="c", n_buckets=8,
-                    evolution=[], write_mode="mor", n_events_hint=4000)
-    prep = ap._prepare_epoch(
-        spark.read.parquet(binlog6).where(F.col("lsn") <= 1000), 0
-    )
-    try:
-        assert prep is not None and prep["small"] is None
-        ap._commit_epoch(prep)
-    finally:
-        monkeypatch.delenv("STRATUM_LWW_STRATEGY", raising=False)
-    assert ap.dlq.read().count() > 0
-
-
-# ---------------------------------------------------------------------------
 # DLQ via the write job's observation: the write probe already decodes the
 # token column and evaluates the validity predicate, so the epoch's rare
 # bad rows ride the SAME CollectMetrics node the stats fold uses and the
-# DLQ append becomes a tiny driver-built local relation -- per-epoch token
-# decodes drop from 3 to 2 with zero new shuffles (unlike the rejected
-# combined-narrow-pass, nothing lands on a critical path).
+# DLQ append becomes a tiny driver-built local relation. The feed-scan
+# path stays as the fallback (over-cap epochs, pending DDL, cow, a lost
+# listener event); both must write identical DLQ rows.
+def _oracle_dlq_lsns6(binlog_dir):
+    return sorted(replay_binlog(binlog_dir).dlq_lsns)
+
+
+def _dlq_run(spark, binlog_dir, wh):
+    ap = CdcApplier(spark, wh, job_id="o", n_buckets=8, evolution=[],
+                    write_mode="mor")
+    ap.run_backfill(binlog_dir, epoch_size=1000, pipelined=True)
+    state = {r["doc_id"]: (list(r["tokens"] or []), r["n_tok"])
+             for r in ap.state().collect()}
+    dlq = sorted(
+        (r["lsn"], r["doc_id"], r["rule"], r["message"], r["payload"])
+        for r in ap.dlq.read().collect()
+    )
+    return ap, state, dlq
+
+
+def _assert_oracle_state(state, binlog_dir):
+    oracle = _oracle(binlog_dir)
+    assert set(state) == set(oracle)
+    for k, w in oracle.items():
+        assert state[k][0] == list(w["tokens"]), k
 
 
 def test_dlq_via_observation_matches_scan_path(spark, binlog6, tmp_path,
                                                monkeypatch):
-    """Differential: STRATUM_DLQ_OBS=1 (default) vs =0 must produce
-    identical DLQ content AND final state; the obs path must actually
-    engage (bad rows present in the feed)."""
-    monkeypatch.delenv("STRATUM_LWW_PROBE", raising=False)
+    """Differential: the observation-fed DLQ vs the feed-scan DLQ (forced
+    on every epoch by a negative cap) must produce identical DLQ content
+    equal to the replay oracle's, and the oracle state; the obs path must
+    actually engage (bad rows present in the feed)."""
+    import stratum_spark.cdc.applier as applier_mod
 
-    def run(flag: str, wh: str):
-        monkeypatch.setenv("STRATUM_DLQ_OBS", flag)
-        ap = CdcApplier(spark, str(tmp_path / wh), job_id="o", n_buckets=8,
-                        evolution=[], write_mode="mor", n_events_hint=4000)
-        ap.run_backfill(binlog6, epoch_size=1000, pipelined=True)
-        state = {r["doc_id"]: (list(r["tokens"] or []), r["n_tok"])
-                 for r in ap.state().collect()}
-        dlq = sorted(
-            (r["lsn"], r["doc_id"], r["rule"], r["message"], r["payload"])
-            for r in ap.dlq.read().collect()
-        )
-        return ap, state, dlq
+    from_rows = []
+    real = CdcApplier._dlq_frame_from_rows
 
-    ap1, state1, dlq1 = run("1", "wo1")
-    ap0, state0, dlq0 = run("0", "wo0")
+    def spy(self, rows):
+        from_rows.append(len(rows))
+        return real(self, rows)
+
+    monkeypatch.setattr(CdcApplier, "_dlq_frame_from_rows", spy)
+    ap1, state1, dlq1 = _dlq_run(spark, binlog6, str(tmp_path / "wo1"))
+    assert len(from_rows) == 4 and sum(from_rows) > 0  # every epoch via obs
+    from_rows.clear()
+    monkeypatch.setattr(applier_mod, "_DLQ_OBS_CAP", -1)
+    ap0, state0, dlq0 = _dlq_run(spark, binlog6, str(tmp_path / "wo0"))
+    assert from_rows == []  # every epoch via the feed scan
     assert len(dlq1) > 0
     assert dlq1 == dlq0
+    assert [d[0] for d in dlq1] == _oracle_dlq_lsns6(binlog6)
     assert state1 == state0
-    # obs path really fed the gate counter
     assert ap1._last_bad_count is not None and ap1._last_bad_count > 0
-    # and the state matches the sequential replay oracle
-    oracle = _oracle(binlog6)
-    assert set(state1) == set(oracle)
-    for k, w in oracle.items():
-        assert state1[k][0] == list(w["tokens"]), k
+    _assert_oracle_state(state1, binlog6)
 
 
 def test_dlq_obs_cap_flips_to_scan_path(spark, binlog6, tmp_path, monkeypatch):
-    """A bad-row count above STRATUM_DLQ_OBS_CAP must flip subsequent
-    epochs back to the scan path (driver-memory bound), with DLQ content
-    unchanged; an under-cap feed keeps the obs path on."""
-    monkeypatch.delenv("STRATUM_LWW_PROBE", raising=False)
-    monkeypatch.setenv("STRATUM_DLQ_OBS_CAP", "1")
-    ap = CdcApplier(spark, str(tmp_path / "wcap"), job_id="o", n_buckets=8,
-                    evolution=[], write_mode="mor", n_events_hint=4000)
-    ap.run_backfill(binlog6, epoch_size=1000)
+    """A bad-row count above the observation cap must flip subsequent
+    epochs back to the scan path (driver-memory bound) with the DLQ and
+    state still equal to the replay oracle's; under the cap the obs path
+    stays on."""
+    import stratum_spark.cdc.applier as applier_mod
+
+    monkeypatch.setattr(applier_mod, "_DLQ_OBS_CAP", 1)
+    ap, state, dlq = _dlq_run(spark, binlog6, str(tmp_path / "wcap"))
     assert ap._last_bad_count is not None and ap._last_bad_count > 1
     assert not ap._dlq_obs_gate()
-    # content equals the no-obs run bit for bit
-    monkeypatch.setenv("STRATUM_DLQ_OBS", "0")
-    ap0 = CdcApplier(spark, str(tmp_path / "wcap0"), job_id="o", n_buckets=8,
-                     evolution=[], write_mode="mor", n_events_hint=4000)
-    ap0.run_backfill(binlog6, epoch_size=1000)
-    monkeypatch.setenv("STRATUM_DLQ_OBS", "1")
-    a = sorted((r["lsn"], r["doc_id"], r["payload"]) for r in ap.dlq.read().collect())
-    b = sorted((r["lsn"], r["doc_id"], r["payload"]) for r in ap0.dlq.read().collect())
-    assert a == b
+    assert [d[0] for d in dlq] == _oracle_dlq_lsns6(binlog6)
+    _assert_oracle_state(state, binlog6)
     # a fresh prepare on the over-cap applier takes the scan path (probe
     # LAST: the scan path commits its DLQ rows at prepare by design)
     feed = spark.read.parquet(binlog6).where(F.col("lsn") <= 1000)
@@ -371,10 +196,8 @@ def test_dlq_obs_cap_flips_to_scan_path(spark, binlog6, tmp_path, monkeypatch):
         assert prep["dlq_q"] is None  # scan path (cap exceeded)
     finally:
         ap._abandon_prep(prep)
-
-
-def _oracle_dlq_lsns6(binlog_dir):
-    return sorted(replay_binlog(binlog_dir).dlq_lsns)
+    monkeypatch.setattr(applier_mod, "_DLQ_OBS_CAP", 100_000)
+    assert ap._dlq_obs_gate()
 
 
 def test_dlq_obs_exactly_once_crash_after_dlq_before_merge(spark, binlog6,

@@ -255,51 +255,6 @@ def test_sync_out_propagates_schema_adds(spark, tmp_path):
                      job_id="other")
 
 
-def test_applier_sync_out_packed_unpacks_at_egress(spark, tmp_path):
-    """tokens_packed is an internal storage format: the sync target must
-    receive the user-facing token arrays (stringified), byte-identical
-    to what an unpacked applier would ship."""
-    from stratum_spark.cdc import CdcApplier, generate_binlog, write_binlog
-
-    url = "jdbc:derby:memory:syncpk;create=true"
-    url_plain = "jdbc:derby:memory:syncpk"
-    conn = _conn(spark, url)
-    st = conn.createStatement()
-    for ddl in ("DROP TABLE tokp", "DROP TABLE tokp_sync"):
-        try:
-            st.executeUpdate(ddl)
-        except Exception:
-            pass
-    st.executeUpdate(
-        'CREATE TABLE tokp ("doc_id" VARCHAR(64) PRIMARY KEY, "tokens" '
-        'VARCHAR(4096), "n_tok" INT, "source" VARCHAR(32), "lsn" BIGINT)'
-    )
-    conn.close()
-
-    feed = generate_binlog(spark, n_docs=40, n_events=200, seed=9,
-                           max_tokens=6, with_evolution=False)
-    write_binlog(feed, str(tmp_path / "binlog"), n_chunks=2)
-    ap = CdcApplier(spark, str(tmp_path / "wh"), job_id="pk", n_buckets=4,
-                    write_mode="mor", tokens_packed=True, evolution=[],
-                    n_events_hint=200)
-    ap.run_backfill(str(tmp_path / "binlog"), epoch_size=200)
-    res = ap.sync_out(url_plain, "tokp", properties=PROPS)
-    assert res["mode"] == "full" and res["applied"] > 0
-
-    want = {}
-    for r in ap.state().collect():
-        d = r.asDict()
-        want[d["doc_id"]] = (
-            "[" + ",".join(str(x) for x in d["tokens"]) + "]"
-            if d["tokens"] is not None else None
-        )
-    got = _target_rows(spark, url_plain, "tokp")
-    assert set(got) == set(want)
-    for k, w in want.items():
-        g = {kk.lower(): vv for kk, vv in got[k].items()}
-        assert g["tokens"] == w, (k, g["tokens"], w)
-
-
 def test_verify_target_detects_tamper(spark, tmp_path):
     """verify_target: clean sync verifies clean; a tampered, a deleted,
     and an injected target row are each reported by key."""

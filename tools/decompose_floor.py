@@ -2,11 +2,9 @@
 
 The graded criterion compares the engine's steady throughput to a bare
 feed-slice->parquet write at the same level. The engine's extra work per
-mor epoch is (a) the validation/DLQ split, (b) the LWW winner broadcast
-build, (c) commit/bookkeeping. (a) and (b) each decode the heavy token
-column once more than the bare write does (F.size(tokens) for validity;
-the probe scan is common), so on a memory-bandwidth-bound host they are
-the prime suspects for the 4-core ratio dropping below 0.9.
+mor epoch is (a) the validation/DLQ split, (b) the LWW shuffle aggregate,
+(c) commit/bookkeeping. (a) and (b) are the prime suspects for the 4-core
+ratio dropping below 0.9 on a memory-bandwidth-bound host.
 
 This tool measures steady ev/s at one core count for four configs,
 interleaved round-robin across fresh JVMs (the box's window variance
@@ -14,7 +12,7 @@ swamps back-to-back comparisons):
 
   engine      validate=True  epoch_dedup=True   (the graded config)
   novalidate  validate=False epoch_dedup=True   (drops DLQ scan + validity)
-  nodedup     validate=True  epoch_dedup=False  (drops the winner build)
+  nodedup     validate=True  epoch_dedup=False  (drops the LWW aggregate)
   bare        feed slice -> parquet, no engine   (the exhibit baseline)
 
 Usage: python tools/decompose_floor.py [cores=4] [n_events=2000000] [trials=3]
@@ -71,10 +69,6 @@ def _worker(config: str, cores: int, binlog_dir: str, n_events: int) -> None:
 
         from stratum_spark.cdc import CdcApplier
 
-        if config == "sep":  # combined narrow pass OFF (separate scans A/B)
-            os.environ["STRATUM_COMBINED_NARROW"] = "0"
-        if config == "noobs":  # DLQ-via-observation OFF (scan-path A/B)
-            os.environ["STRATUM_DLQ_OBS"] = "0"
         validate = config != "novalidate"
         dedup = config != "nodedup"
         ap = CdcApplier(
