@@ -114,9 +114,6 @@ def _worker_cdc(cores: int, binlog_dir: str, n_events: int) -> None:
         ap = CdcApplier(
             spark, wh, job_id="bench", n_buckets=64, evolution=[], validate=True,
             write_mode=mode,
-            # BENCH_EPOCH_DEDUP=0 (mor only): defer LWW entirely to the
-            # compactor/readers -- the delta append becomes a narrow plan
-            epoch_dedup=not (mode == "mor" and os.environ.get("BENCH_EPOCH_DEDUP") == "0"),
         )
         t0 = time.time()
         warm = ap.run_backfill(binlog_dir, epoch_size=epoch_size, stop_after=1)

@@ -51,6 +51,11 @@ EVENT_FIXED_BYTES = 64
 # driver-memory bound (~10 MB) on the bad rows one epoch's write
 # observation may collect for the DLQ (see _dlq_obs_gate)
 _DLQ_OBS_CAP = 100_000
+# metadata-table maintenance cadence (see _binpack_and_expire): bin-pack
+# lineage and DLQ every _BINPACK_EPOCHS epochs, then expire their history
+# down to _META_KEEP versions
+_BINPACK_EPOCHS = 64
+_META_KEEP = 16
 
 TOKENS_DDL = "doc_id string, tokens array<int>, n_tok int, source string, lsn bigint"
 LINEAGE_DDL = (
@@ -88,7 +93,6 @@ class CdcApplier:
         integrity: bool = True,
         write_mode: str = "cow",
         auto_compact_ratio: float | None = None,
-        epoch_dedup: bool = True,
     ):
         # scale-adaptive feed-scan split sizing (_tune_feed_split): derived
         # per epoch from OBSERVED epoch bytes, never a host-tuned constant
@@ -98,24 +102,6 @@ class CdcApplier:
         # (the zero-extra-job path) vs recomputed from files -- counted so
         # tests can pin that the observation path actually engages
         self._receipts_from_obs = 0
-        # epoch_dedup=False (mor only): skip the per-epoch LWW aggregate
-        # and append the epoch's valid rows AS-IS -- the delta write
-        # becomes a fully NARROW plan (scan -> map -> write, zero
-        # exchanges), trading delta volume (intra-epoch duplicates are
-        # kept) for hot-path shuffle traffic. The trade is feed-dependent:
-        # on feeds where epochs revisit keys heavily the LWW aggregate
-        # SHRINKS the write (this repo's bench feed: 2M events -> 0.73M
-        # rows, and dedup=True measured 400k vs 274k ev/s at 16 cores);
-        # on near-append-only feeds the narrow plan wins. Correctness is
-        # unchanged either way:
-        # the read path and the compactor already resolve LWW over
-        # arbitrary multi-row-per-key delta sets by the same
-        # (doc_id, lsn) rule (Hudi's insert-vs-upsert write-path
-        # distinction). Copy-on-write REQUIRES the dedup (its MERGE
-        # contract is one source row per key).
-        if not epoch_dedup and write_mode != "mor":
-            raise ValueError("epoch_dedup=False requires write_mode='mor'")
-        self.epoch_dedup = epoch_dedup
         # merge-on-read compaction POLICY: when set, deltas are folded into
         # the base as soon as delta rows exceed ratio x base rows (metadata
         # row counts -- no Spark job), so read-merge cost is bounded by
@@ -245,8 +231,8 @@ class CdcApplier:
         """Periodic metadata-table maintenance, run ON the table's own
         single writer worker (serialized with its appends): bin-pack the
         per-epoch small files (driver-side pyarrow path -- zero Spark
-        jobs), then expire history down to STRATUM_META_KEEP versions
-        (default 16) so the superseded pre-pack files and the per-epoch
+        jobs), then expire history down to _META_KEEP versions so the
+        superseded pre-pack files and the per-epoch
         version JSONs actually leave the disk. Applied only to the
         append-only metadata tables (lineage, DLQ) whose old versions
         carry no time-travel value -- the data tables (tokens, deltas)
@@ -258,8 +244,7 @@ class CdcApplier:
             r = table.compact_binpack(
                 small_file_bytes=8 << 20, target_file_bytes=64 << 20
             )
-            keep = int(os.environ.get("STRATUM_META_KEEP", "16"))
-            r.update(table.expire_snapshots(keep_last=keep))
+            r.update(table.expire_snapshots(keep_last=_META_KEEP))
             return r
         except CommitConflict:
             # maintenance is best-effort: a lost race (external writer on
@@ -664,10 +649,8 @@ class CdcApplier:
             # LWW dedup: consumed once (by the MERGE or the delta write), so
             # it stays lazy and the integrity digest observation fires on
             # that same scan. The shuffle aggregate keeps one row per key,
-            # so delta files are (doc_id, lsn)-unique. With
-            # epoch_dedup=False (mor) the rows pass through as-is and the
-            # append plan has no exchange at all.
-            deduped = lww_dedup(mapped, key="doc_id", order_col="lsn") if self.epoch_dedup else mapped
+            # so delta files are (doc_id, lsn)-unique.
+            deduped = lww_dedup(mapped, key="doc_id", order_col="lsn")
             receipt_obs = None
             # Observation.get resolves via a QueryExecutionListener event;
             # streaming reads it with a NON-BLOCKING poll (_observed) so a
@@ -714,16 +697,13 @@ class CdcApplier:
         commit with the epoch bookmark) plus lineage rows. Must run in
         epoch order."""
         epoch = prep["epoch"]
-        dbg = os.environ.get("STRATUM_EPOCH_DEBUG") == "1"
         fold = prep["obs_stats"] is not None
         entries = None
-        t_c0 = time.time()
         try:
             if self.write_mode == "mor":
                 entries = prep.get("entries")
                 if entries is None:
                     entries = self._write_deltas(prep["deduped"])
-            t_parts = time.time()
             if fold:
                 stats = self._observed(prep["obs_stats"])
                 if stats is None:
@@ -787,22 +767,10 @@ class CdcApplier:
                     touched=touched,
                     epoch_mode=self.epoch_mode,
                 )
-            t_merge = time.time()
             n_dlq = prep["dlq_future"].result() if prep["dlq_future"] is not None else 0
             if prep["dlq_future"] is not None:
                 # gates the NEXT epoch's dlq-via-observation attachment
                 self._last_bad_count = n_dlq
-            if dbg:
-                import sys as _sys
-
-                at = getattr(self.deltas or self.tokens, "last_append_timings", {})
-                print(
-                    f"## epoch={epoch} parts_wait_ms={int((t_parts - t_c0) * 1000)} "
-                    f"merge_ms={int((t_merge - t_parts) * 1000)} "
-                    f"(write_ms={at.get('write_ms')} commit_ms={at.get('commit_ms')}) "
-                    f"dlq_wait_ms={int((time.time() - t_merge) * 1000)}",
-                    file=_sys.stderr,
-                )
             if mstats.epoch_skipped:
                 # replayed epoch: the merge never scanned the batch, so the
                 # receipt observation never fired -- do NOT block on it
@@ -877,13 +845,12 @@ class CdcApplier:
         )
         # auto small-file maintenance: lineage accretes ONE tiny file per
         # epoch (append_local), so a 10^5-epoch job would leave 10^5 files
-        # and O(files) snapshot JSON. Every STRATUM_BINPACK_EPOCHS epochs
-        # (default 64, 0 disables) the same single lineage worker bin-packs
-        # them -- the driver-side pyarrow fast path applies (same schema,
-        # KB-sized files), so this costs zero Spark jobs and cannot
-        # conflict with the appends it is serialized behind.
-        k = int(os.environ.get("STRATUM_BINPACK_EPOCHS", "64"))
-        if k > 0 and epoch > 0 and epoch % k == 0:
+        # and O(files) snapshot JSON. Every _BINPACK_EPOCHS epochs the same
+        # single lineage worker bin-packs them -- the driver-side pyarrow
+        # fast path applies (same schema, KB-sized files), so this costs
+        # zero Spark jobs and cannot conflict with the appends it is
+        # serialized behind.
+        if epoch > 0 and epoch % _BINPACK_EPOCHS == 0:
             self._lineage_futures.append(
                 self._lineage_pool.submit(self._binpack_and_expire, self.lineage)
             )
@@ -1142,23 +1109,29 @@ class CdcApplier:
         committed epoch; `stop_after` epochs simulates a crash/pause for
         kill-and-resume tests (crates/engine-tests/src/resume.rs:50-127).
 
-        pipelined=True overlaps epoch N+1's preparation (scan/validate/
-        dedup/bucket discovery) with epoch N's merge commit -- merges stay
+        pipelined=True overlaps epoch N+1's preparation and, on the mor
+        path, its delta-file write with epoch N's commit -- commits stay
         strictly ordered, so exactly-once and replay semantics are
-        unchanged. Pipelining pauses automatically while scripted schema
-        evolution is still pending (column mapping must see the table
-        schema its own prepare produced). Off by default: on this sandbox's
-        single box the serial loop already saturates the usable cores, and
-        concurrent prepare/commit jobs contend; on a cluster with separate
-        executors the overlap buys up to the prepare fraction of the epoch."""
+        unchanged. The prefetch pauses while scripted schema evolution is
+        still pending (column mapping must see the table schema its own
+        prepare produced). Either way the epochs run through one loop that
+        shares the feed, the DLQ catch-up, pause, `stop_after`, the
+        compaction policy (compact_deltas every `compact_every` epochs,
+        else maybe_compact) and the final lineage flush; without
+        pipelining each epoch is one apply_epoch call. Off by default: on
+        a single box the serial loop already saturates the usable cores,
+        and concurrent prepare/commit jobs contend; on a cluster with
+        separate executors the overlap buys up to the prepare fraction of
+        the epoch."""
+        from concurrent.futures import ThreadPoolExecutor
+
         self._check_epoch_mode()
-        if pipelined:
-            return self._run_backfill_pipelined(binlog_path, epoch_size, stop_after, max_lsn)
         feed = self.spark.read.parquet(binlog_path)
         if max_lsn is None:
             max_lsn = feed.agg(F.max("lsn")).collect()[0][0] or 0
-        out: list[EpochStats] = []
         start_epoch = self._bookmark_table.committed_epoch(self.job_id) + 1
+        n_epochs = (max_lsn + epoch_size - 1) // epoch_size
+        epochs = list(range(start_epoch, n_epochs))[:stop_after]
 
         def slice_of(ep: int):
             lo, hi = ep * epoch_size + 1, (ep + 1) * epoch_size
@@ -1167,91 +1140,46 @@ class CdcApplier:
         # crash recovery: epochs the merge committed but whose DLQ flush was
         # lost replay their (bookmarked, idempotent) DLQ append first
         self._dlq_catchup(slice_of, start_epoch - 1)
-        n_epochs = (max_lsn + epoch_size - 1) // epoch_size
-        done = 0
-        for ep in range(start_epoch, n_epochs):
-            if self.pause_requested():
-                break
-            out.append(self.apply_epoch(slice_of(ep), ep))
-            done += 1
-            if compact_every and done % compact_every == 0:
-                self.compact_deltas()
-            else:
-                self.maybe_compact()
-            if stop_after is not None and done >= stop_after:
-                break
-        self.flush_lineage()
-        return out
-
-    def _run_backfill_pipelined(
-        self,
-        binlog_path: str,
-        epoch_size: int,
-        stop_after: int | None,
-        max_lsn: int | None,
-    ) -> list[EpochStats]:
-        from concurrent.futures import ThreadPoolExecutor
-
-        feed = self.spark.read.parquet(binlog_path)
-        if max_lsn is None:
-            max_lsn = feed.agg(F.max("lsn")).collect()[0][0] or 0
-        start_epoch = self._bookmark_table.committed_epoch(self.job_id) + 1
-        n_epochs = (max_lsn + epoch_size - 1) // epoch_size
-        epochs = list(range(start_epoch, n_epochs))
-        if stop_after is not None:
-            epochs = epochs[:stop_after]
-        out: list[EpochStats] = []
-
-        def slice_of(ep: int):
-            lo, hi = ep * epoch_size + 1, (ep + 1) * epoch_size
-            return feed.where((F.col("lsn") >= lo) & (F.col("lsn") <= hi))
-
-        self._dlq_catchup(slice_of, start_epoch - 1)
 
         def prep_and_write(ep: int):
             """Prefetch body: prepare the epoch AND, on the mor path, run
-            its delta-file WRITE (phase 1 of the two-phase append) -- the
-            epoch's whole Spark-side cost overlaps the previous epoch's
-            commit; only the ordered bookmark commit remains on the main
-            thread. Files written here are invisible until committed, so
-            a crash orphans them harmlessly and exactly-once is untouched."""
+            its delta-file WRITE (phase 1 of the two-phase append), so only
+            the ordered bookmark commit remains on the main thread. Files
+            written here are invisible until committed, so a crash orphans
+            them harmlessly and exactly-once is untouched."""
             prep = self._prepare_epoch(slice_of(ep), ep)
             if prep is not None and self.write_mode == "mor":
                 prep["entries"] = self._write_deltas(prep["deduped"])
             return prep
 
+        out: list[EpochStats] = []
+        next_prep = None
         with ThreadPoolExecutor(max_workers=1) as prefetcher:
-            i = 0
-            next_prep = None
-            while i < len(epochs):
+            for i, ep in enumerate(epochs):
                 if self.pause_requested():
-                    if next_prep is not None:
-                        prep = next_prep.result()
-                        if prep is not None:  # abandon the prefetched epoch
-                            self._abandon_prep(prep)
+                    prep = next_prep.result() if next_prep is not None else None
+                    if prep is not None:  # abandon the prefetched epoch
+                        self._abandon_prep(prep)
                     break
-                ep = epochs[i]
-                if next_prep is not None:
-                    prep = next_prep.result()
+                if not pipelined:
+                    out.append(self.apply_epoch(slice_of(ep), ep))
+                else:
+                    prep = next_prep.result() if next_prep is not None else prep_and_write(ep)
                     next_prep = None
-                else:
-                    prep = prep_and_write(ep)
-                # prefetch the NEXT epoch's prepare + delta write unless
-                # schema evolution may still change the table (column
-                # mapping and file schema ids depend on it)
-                if i + 1 < len(epochs) and not self.evolution_pending():
-                    nxt = epochs[i + 1]
-                    next_prep = prefetcher.submit(prep_and_write, nxt)
-                if prep is None:
-                    out.append(EpochStats(epoch=ep, skipped=True))
-                else:
-                    out.append(self._commit_epoch(prep))
+                    if i + 1 < len(epochs) and not self.evolution_pending():
+                        next_prep = prefetcher.submit(prep_and_write, epochs[i + 1])
+                    out.append(
+                        self._commit_epoch(prep) if prep is not None
+                        else EpochStats(epoch=ep, skipped=True)
+                    )
                 # safe between commits even with the next prepare+write in
                 # flight: prepare reads only the feed and the epoch
                 # bookmark, which compaction's truncate preserves, and
                 # uncommitted delta files are invisible to the compactor
-                self.maybe_compact()
-                i += 1
+                if compact_every and (i + 1) % compact_every == 0:
+                    self.compact_deltas()
+                else:
+                    self.maybe_compact()
         self.flush_lineage()
         return out
 

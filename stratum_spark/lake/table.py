@@ -37,11 +37,13 @@ checkpoint/commit protocol
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import shutil
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field as dc_field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -52,6 +54,9 @@ from stratum_spark.lake.schema import TableSchema
 _META = "_meta"
 _DATA = "data"
 _BUCKET = "_bucket"
+# commits that rebase onto a concurrent writer's snapshot give up after
+# this many lost races
+_COMMIT_ATTEMPTS = 20
 
 
 class CommitConflict(RuntimeError):
@@ -173,10 +178,44 @@ class Snapshot:
         )
 
 
-def _parquet_rows(path: str) -> int:
-    import pyarrow.parquet as pq
+def _successor(snap: Snapshot, **changes) -> Snapshot:
+    """The next version of snap: every field inherited except `changes` --
+    the one way a writer derives the snapshot it commits."""
+    return dataclasses.replace(snap, version=snap.version + 1, **changes)
 
-    return pq.ParquetFile(path).metadata.num_rows
+
+def _bookmarked(
+    snap: Snapshot, job_id: str, epoch: int, lsn_max: int | None = None,
+    epoch_mode: str | None = None,
+) -> dict | None:
+    """snap's `committed` map with job_id's bookmark advanced to epoch, or
+    None when epoch is already committed (a replay, which the exactly-once
+    writers skip). Batch backfills number epochs by lsn range and streams
+    by Spark batch id; the bookmark's mode tag lets a mismatched resume
+    fail loudly instead of skipping data."""
+    if epoch <= snap.committed.get(job_id, {}).get("epoch", -1):
+        return None
+    mark = {"epoch": epoch, "lsn_max": lsn_max}
+    if epoch_mode is not None:
+        mark["mode"] = epoch_mode
+    return {**snap.committed, job_id: mark}
+
+
+def _key_bucket(key_col: str, n_buckets: int) -> F.Column:
+    """The hash-bucket rule: pmod(xxhash64(key as string), n_buckets)
+    (functions/xxh64.key_bucket is its bit-identical driver-side twin)."""
+    return F.pmod(F.xxhash64(F.col(key_col).cast("string")), F.lit(n_buckets)).cast("int")
+
+
+def _with_bucket(df: DataFrame, snap: Snapshot) -> DataFrame:
+    """Add the _bucket column a clustered write needs: the merge key's
+    hash bucket on a keyed table, a round-robin spread over
+    snap.n_buckets on a keyless one."""
+    if snap.key:
+        b = _key_bucket(snap.key, snap.n_buckets)
+    else:
+        b = F.pmod(F.monotonically_increasing_id(), F.lit(snap.n_buckets)).cast("int")
+    return df.withColumn(_BUCKET, b)
 
 
 def _parquet_footer(
@@ -400,41 +439,36 @@ class LakeTable:
         os.replace(tmp, os.path.join(self.root, _META, "_latest"))
         self._snap = snap
 
-    def _append_files_with_retry(self, entries: list[FileEntry], max_attempts: int = 20) -> None:
-        """Commit already-written data files as an APPEND, retrying on
-        CommitConflict by refreshing the snapshot and rebasing (the file
-        set only grows, so an append rebases safely -- unlike MERGE, whose
-        kept-file computation is tied to the snapshot it planned against
-        and must surface the conflict to its caller). This is what makes
-        concurrent DLQ/lineage appends from overlapped epochs safe."""
-        for _ in range(max_attempts):
-            snap = self.snapshot()  # refresh
-            new = Snapshot(
-                version=snap.version + 1,
-                schema_id=snap.schema_id,
-                schemas=snap.schemas,
-                key=snap.key,
-                key_field_id=snap.key_field_id,
-                n_buckets=snap.n_buckets,
-                files=snap.files + entries,
-                committed=snap.committed,
-                properties=snap.properties,
-            )
+    def _commit_rebased(self, derive, what: str) -> Snapshot:
+        """Commit derive(latest snapshot), re-deriving from a refreshed
+        snapshot each time the CAS loses to a concurrent writer, at most
+        _COMMIT_ATTEMPTS times. Only commits that rebase safely come here
+        (appends, rewrites whose inputs survive, rollbacks); a MERGE's
+        kept-file set is tied to the snapshot it planned against, so it
+        commits once and surfaces the conflict. derive may raise
+        CommitConflict itself to abandon."""
+        for _ in range(_COMMIT_ATTEMPTS):
+            new = derive(self.snapshot())
             try:
                 self._write_snapshot(new)
-                return
+                return new
             except CommitConflict:
                 continue
         raise CommitConflict(
-            f"append to {self.root} lost the commit race {max_attempts} times"
+            f"{what} of {self.root} lost the commit race {_COMMIT_ATTEMPTS} times"
         )
+
+    def _append_files_with_retry(self, entries: list[FileEntry]) -> None:
+        """Commit already-written data files as an APPEND (the file set
+        only grows, so it rebases safely). This is what makes concurrent
+        DLQ/lineage appends from overlapped epochs safe."""
+        self._commit_rebased(lambda s: _successor(s, files=s.files + entries), "append")
 
     # ------------------------------------------------------------------
     # read path (schema-evolution-resolving, bucket-pruned)
     # ------------------------------------------------------------------
     def _bucket_expr(self, key_col: str) -> F.Column:
-        snap = self.snapshot(refresh=False)
-        return F.pmod(F.xxhash64(F.col(key_col).cast("string")), F.lit(snap.n_buckets)).cast("int")
+        return _key_bucket(key_col, self.snapshot(refresh=False).n_buckets)
 
     def _resolve(self, df: DataFrame, from_schema: TableSchema, to_schema: TableSchema) -> DataFrame:
         """Map a DataFrame written under from_schema to to_schema by field id:
@@ -604,8 +638,6 @@ class LakeTable:
         canonical whole-row hash detecting updates (any stored column,
         including lsn bookkeeping, counts as a change -- Delta CDF
         semantics); keyless tables diff by whole-row multiplicity."""
-        import dataclasses
-
         s_from = self.snapshot(from_version)
         s_to = self.snapshot(to_version)
         if s_from.version > s_to.version:
@@ -710,6 +742,13 @@ class LakeTable:
         cols = tuple(c.strip() for c in prop.split(",") if c.strip())
         return tuple(dict.fromkeys(cols + tuple(extra)))
 
+    def _recorded_stats_cols(self, snap: Snapshot) -> tuple[str, ...]:
+        """_stats_cols plus every column some live file already records
+        bounds for, so a rewrite keeps the inputs' pruning stats."""
+        return self._stats_cols(
+            snap, tuple(sorted({c for e in snap.files if e.stats for c in e.stats}))
+        )
+
     def _write_data(
         self,
         df: DataFrame,
@@ -765,40 +804,12 @@ class LakeTable:
             if fn.endswith(".parquet") and fn.startswith("part-"):
                 split = int(fn.split("-")[1])
                 todo.append((os.path.join(rel_dir, fn), split, os.path.join(out_dir, fn)))
-        # per-file row counts for the manifest: driver-side footer reads are
-        # bounded by a CONSTANT (small commits -- the epoch hot path, where
-        # a Spark job's fixed latency would cost more than the reads); past
-        # the threshold the footers are read EXECUTOR-side in one tiny job,
-        # so commits of thousands of files never serialize metadata work on
-        # the driver -- the same reason real table formats have executors
-        # emit manifest entries. The executor path requires executors to
-        # see the warehouse at the driver's path: always true on local
-        # masters (same host); on a multi-node cluster it holds exactly
-        # when the warehouse is on a shared mount (NFS/Lustre/FUSE object
-        # store) -- the SAME requirement this lake's data writes already
-        # impose (executors write part files under the warehouse root), so
-        # a deployment that works at all satisfies it; declare it with
-        # STRATUM_SHARED_WAREHOUSE=1, else we stay driver-side rather than
-        # fail on executor-local paths.
-        limit = int(os.environ.get("STRATUM_FOOTER_DRIVER_MAX", "64"))
-        shared_fs = self.spark.sparkContext.master.startswith("local") or (
-            os.environ.get("STRATUM_SHARED_WAREHOUSE") == "1"
-        )
-        if len(todo) <= limit or not shared_fs:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=16) as ex:
-                footers = list(ex.map(lambda t: _parquet_footer(t[2], stats_cols), todo))
-        else:
-            paths = [t[2] for t in todo]
-            k = max(1, min(len(paths) // 16 + 1, 64))
-            cols = stats_cols
-            by_path = dict(
-                self.spark.sparkContext.parallelize(paths, k)
-                .map(lambda p: (p, _parquet_footer(p, cols)))
-                .collect()
-            )
-            footers = [by_path[p] for p in paths]
+        # per-file row counts, bounds and sizes for the manifest: one footer
+        # read per part file (one file per write task -- clustered writes
+        # have min(shuffle partitions, n_buckets) tasks, delta writes the
+        # LWW shuffle's), threaded on the driver, no Spark job
+        with ThreadPoolExecutor(max_workers=16) as ex:
+            footers = list(ex.map(lambda t: _parquet_footer(t[2], stats_cols), todo))
         entries = []
         for (rel, split, full), (r, bounds, sz) in zip(todo, footers):
             if r == 0:
@@ -873,13 +884,7 @@ class LakeTable:
         crates/model/src/execution/pipeline.rs:47-52): blind fast-path append,
         no key matching. Returns rows appended."""
         snap = self.snapshot()
-        aligned = self._align(df, snap.schema)
-        if snap.key:
-            aligned = aligned.withColumn(_BUCKET, self._bucket_expr(snap.key))
-        else:
-            aligned = aligned.withColumn(
-                _BUCKET, F.pmod(F.monotonically_increasing_id(), F.lit(snap.n_buckets)).cast("int")
-            )
+        aligned = _with_bucket(self._align(df, snap.schema), snap)
         entries = self._write_data(aligned, snap, stats_cols=self._stats_cols(snap))
         if not entries:
             return 0  # empty append: no snapshot churn
@@ -904,13 +909,7 @@ class LakeTable:
         snap = self.snapshot()
         aligned = self._align(df, snap.schema, passthrough=passthrough)
         if clustered:
-            if snap.key:
-                aligned = aligned.withColumn(_BUCKET, self._bucket_expr(snap.key))
-            else:
-                aligned = aligned.withColumn(
-                    _BUCKET,
-                    F.pmod(F.monotonically_increasing_id(), F.lit(snap.n_buckets)).cast("int"),
-                )
+            aligned = _with_bucket(aligned, snap)
         return self._write_data(
             aligned, snap, clustered=clustered,
             stats_cols=self._stats_cols(snap, stats_cols),
@@ -929,25 +928,10 @@ class LakeTable:
         (epoch <= committed) commits nothing -- its pre-written files stay
         orphaned, preserving exactly-once."""
         snap = self.snapshot()
-        last = snap.committed.get(job_id, {}).get("epoch", -1)
-        if epoch <= last:
+        committed = _bookmarked(snap, job_id, epoch, lsn_max, epoch_mode)
+        if committed is None:
             return 0
-        committed = dict(snap.committed)
-        committed[job_id] = {"epoch": epoch, "lsn_max": lsn_max}
-        if epoch_mode is not None:
-            committed[job_id]["mode"] = epoch_mode
-        new = Snapshot(
-            version=snap.version + 1,
-            schema_id=snap.schema_id,
-            schemas=snap.schemas,
-            key=snap.key,
-            key_field_id=snap.key_field_id,
-            n_buckets=snap.n_buckets,
-            files=snap.files + entries,
-            committed=committed,
-            properties=snap.properties,
-        )
-        self._write_snapshot(new)
+        self._write_snapshot(_successor(snap, files=snap.files + entries, committed=committed))
         return sum(e.rows for e in entries)
 
     def append_epoch(
@@ -971,48 +955,19 @@ class LakeTable:
         repartition (delta files are never bucket-pruned, so clustering
         them costs a second full-row shuffle for nothing). Returns rows
         appended (0 if the epoch replayed)."""
-        snap = self.snapshot()
-        last = snap.committed.get(job_id, {}).get("epoch", -1)
-        if epoch <= last:
-            return 0
-        t_w0 = time.time()
+        if _bookmarked(self.snapshot(), job_id, epoch) is None:
+            return 0  # replayed: write no files the commit would orphan
         entries = self.write_epoch_files(df, passthrough=passthrough, clustered=clustered)
-        t_w1 = time.time()
-        n = self.commit_epoch_files(
+        return self.commit_epoch_files(
             entries, job_id, epoch, lsn_max=lsn_max, epoch_mode=epoch_mode
         )
-        # phase timings for the epoch-debug instrument (write action vs
-        # manifest/commit metadata work) -- read by CdcApplier when
-        # STRATUM_EPOCH_DEBUG=1
-        self.last_append_timings = {
-            "write_ms": int((t_w1 - t_w0) * 1000),
-            "commit_ms": int((time.time() - t_w1) * 1000),
-        }
-        return n
 
     def overwrite(self, df: DataFrame) -> int:
         """Replace write-mode: new snapshot referencing only the new files."""
         snap = self.snapshot()
-        aligned = self._align(df, snap.schema)
-        if snap.key:
-            aligned = aligned.withColumn(_BUCKET, self._bucket_expr(snap.key))
-        else:
-            aligned = aligned.withColumn(
-                _BUCKET, F.pmod(F.monotonically_increasing_id(), F.lit(snap.n_buckets)).cast("int")
-            )
+        aligned = _with_bucket(self._align(df, snap.schema), snap)
         entries = self._write_data(aligned, snap, stats_cols=self._stats_cols(snap))
-        new = Snapshot(
-            version=snap.version + 1,
-            schema_id=snap.schema_id,
-            schemas=snap.schemas,
-            key=snap.key,
-            key_field_id=snap.key_field_id,
-            n_buckets=snap.n_buckets,
-            files=entries,
-            committed=snap.committed,
-            properties=snap.properties,
-        )
-        self._write_snapshot(new)
+        self._write_snapshot(_successor(snap, files=entries))
         return sum(e.rows for e in entries)
 
     # ------------------------------------------------------------------
@@ -1055,9 +1010,10 @@ class LakeTable:
         snap = self.snapshot()
         if snap.key is None:
             raise ValueError("merge requires a key-ed table")
+        committed = snap.committed
         if job_id is not None and epoch is not None:
-            last = snap.committed.get(job_id, {}).get("epoch", -1)
-            if epoch <= last:
+            committed = _bookmarked(snap, job_id, epoch, lsn_max, epoch_mode)
+            if committed is None:
                 return MergeStats(epoch_skipped=True)
 
         key = snap.key
@@ -1071,9 +1027,7 @@ class LakeTable:
             src = src.withColumnRenamed(op_col, "__op")
         src = src.withColumn("__op", F.coalesce(F.col("__op"), F.lit("U")))
         # align payload columns (D rows may carry nulls; key must be present)
-        src_aligned = self._align(src, schema, passthrough=("__op",)).withColumn(
-            _BUCKET, self._bucket_expr(key)
-        )
+        src_aligned = _with_bucket(self._align(src, schema, passthrough=("__op",)), snap)
 
         # bucket pruning: read only buckets the batch touches. The distinct
         # bucket list is tiny (<= n_buckets ints) -- driver collect is safe.
@@ -1084,9 +1038,7 @@ class LakeTable:
                 touched = list(range(snap.n_buckets))
             else:
                 touched = [r[0] for r in src_aligned.select(_BUCKET).distinct().collect()]
-        target = self.read_buckets(touched, version=snap.version).withColumn(
-            _BUCKET, self._bucket_expr(key)
-        )
+        target = _with_bucket(self.read_buckets(touched, version=snap.version), snap)
 
         s_cols = [F.col(f"s.{c}").alias(f"s_{c}") for c in data_cols]
         t_cols = [F.col(f"t.{c}").alias(f"t_{c}") for c in data_cols]
@@ -1154,26 +1106,9 @@ class LakeTable:
         entries = self._write_data(result, snap, stats_cols=self._stats_cols(snap))
         touched_set = set(touched)
         kept_files = [e for e in snap.files if not touched_set.intersection(e.buckets)]
-        committed = dict(snap.committed)
-        if job_id is not None and epoch is not None:
-            committed[job_id] = {"epoch": epoch, "lsn_max": lsn_max}
-            if epoch_mode is not None:
-                # batch backfills number epochs by lsn range, streams by
-                # Spark batch id -- tagging the bookmark with its mode lets
-                # a mismatched resume fail loudly instead of skipping data
-                committed[job_id]["mode"] = epoch_mode
-        new = Snapshot(
-            version=snap.version + 1,
-            schema_id=snap.schema_id,
-            schemas=snap.schemas,
-            key=snap.key,
-            key_field_id=snap.key_field_id,
-            n_buckets=snap.n_buckets,
-            files=kept_files + entries,
-            committed=committed,
-            properties=snap.properties,
+        self._write_snapshot(
+            _successor(snap, files=kept_files + entries, committed=committed)
         )
-        self._write_snapshot(new)
         try:
             row = obs.get
         except Exception:
@@ -1217,18 +1152,9 @@ class LakeTable:
             if kf is None:
                 raise ValueError("cannot drop/lose the merge key column")
             key = kf.name
-        new = Snapshot(
-            version=snap.version + 1,
-            schema_id=new_schema.schema_id,
-            schemas=schemas,
-            key=key,
-            key_field_id=snap.key_field_id,
-            n_buckets=snap.n_buckets,
-            files=snap.files,
-            committed=snap.committed,
-            properties=snap.properties,
+        self._write_snapshot(
+            _successor(snap, schema_id=new_schema.schema_id, schemas=schemas, key=key)
         )
-        self._write_snapshot(new)
 
     def add_column(self, name: str, type_ddl: str) -> None:
         self._evolve(self.snapshot().schema.add_column(name, type_ddl))
@@ -1248,20 +1174,7 @@ class LakeTable:
     def set_properties(self, updates: dict[str, str]) -> None:
         """Metadata-only commit updating table properties."""
         snap = self.snapshot()
-        props = dict(snap.properties)
-        props.update(updates)
-        new = Snapshot(
-            version=snap.version + 1,
-            schema_id=snap.schema_id,
-            schemas=snap.schemas,
-            key=snap.key,
-            key_field_id=snap.key_field_id,
-            n_buckets=snap.n_buckets,
-            files=snap.files,
-            committed=snap.committed,
-            properties=props,
-        )
-        self._write_snapshot(new)
+        self._write_snapshot(_successor(snap, properties={**snap.properties, **updates}))
 
     def committed_epoch(self, job_id: str) -> int:
         return self.snapshot().committed.get(job_id, {}).get("epoch", -1)
@@ -1324,26 +1237,13 @@ class LakeTable:
         replay after rollback resumes from the rolled-back epoch and
         converges to the identical final state (asserted by
         test_rollback_then_replay_converges). Raises FileNotFoundError if
-        `version` was expired by expire_snapshots. Returns the new version."""
+        `version` was expired by expire_snapshots, and CommitConflict if it
+        loses the commit race _COMMIT_ATTEMPTS times. Returns the new
+        version."""
         target = self.snapshot(version)
-        while True:
-            cur = self.snapshot()
-            new = Snapshot(
-                version=cur.version + 1,
-                schema_id=target.schema_id,
-                schemas=target.schemas,
-                key=target.key,
-                key_field_id=target.key_field_id,
-                n_buckets=target.n_buckets,
-                files=list(target.files),
-                committed=dict(target.committed),
-                properties=dict(target.properties),
-            )
-            try:
-                self._write_snapshot(new)
-                return new.version
-            except CommitConflict:
-                continue
+        return self._commit_rebased(
+            lambda cur: dataclasses.replace(target, version=cur.version + 1), "rollback"
+        ).version
 
     def remove_orphaned_files(self, grace_sec: float = 3600.0) -> dict:
         """Delete data files under the table root that NO retained snapshot
@@ -1416,30 +1316,11 @@ class LakeTable:
         todo = [b for b, es in by_bucket.items() if len(es) > target_files_per_bucket]
         if not todo:
             return
-        df = self.read_buckets(todo, version=snap.version)
-        if snap.key:
-            df = df.withColumn(_BUCKET, self._bucket_expr(snap.key))
-        else:
-            df = df.withColumn(
-                _BUCKET, F.pmod(F.monotonically_increasing_id(), F.lit(snap.n_buckets)).cast("int")
-            )
-        stats_cols = self._stats_cols(
-            snap, tuple(sorted({c for e in snap.files if e.stats for c in e.stats}))
-        )
-        entries = self._write_data(df, snap, stats_cols=stats_cols)
+        df = _with_bucket(self.read_buckets(todo, version=snap.version), snap)
+        entries = self._write_data(df, snap, stats_cols=self._recorded_stats_cols(snap))
         todo_set = set(todo)
-        new = Snapshot(
-            version=snap.version + 1,
-            schema_id=snap.schema_id,
-            schemas=snap.schemas,
-            key=snap.key,
-            key_field_id=snap.key_field_id,
-            n_buckets=snap.n_buckets,
-            files=[e for e in snap.files if not todo_set.intersection(e.buckets)] + entries,
-            committed=snap.committed,
-            properties=snap.properties,
-        )
-        self._write_snapshot(new)
+        kept = [e for e in snap.files if not todo_set.intersection(e.buckets)]
+        self._write_snapshot(_successor(snap, files=kept + entries))
 
     def rebucket(self, new_n_buckets: int) -> int:
         """Bucket-count evolution (Iceberg partition-spec evolution analog):
@@ -1461,8 +1342,6 @@ class LakeTable:
         Readers/writers derive the modulus from the snapshot
         (_bucket_expr), so merges, touched-bucket discovery and pruning
         adopt the new count on their next snapshot read."""
-        import dataclasses
-
         snap = self.snapshot()
         if snap.key is None:
             raise ValueError("rebucket requires a merge key (keyless tables "
@@ -1483,31 +1362,12 @@ class LakeTable:
                 for e in snap.files
             ]
         else:
-            df = self._read_entries(snap.files, snap).withColumn(
-                _BUCKET,
-                F.pmod(
-                    F.xxhash64(F.col(snap.key).cast("string")),
-                    F.lit(new_n_buckets),
-                ).cast("int"),
-            )
-            stats_cols = self._stats_cols(snap, tuple(sorted(
-                {c for e in snap.files if e.stats for c in e.stats}
-            )))
+            layout = dataclasses.replace(snap, n_buckets=new_n_buckets)
             files = self._write_data(
-                df, dataclasses.replace(snap, n_buckets=new_n_buckets),
-                stats_cols=stats_cols,
+                _with_bucket(self._read_entries(snap.files, snap), layout), layout,
+                stats_cols=self._recorded_stats_cols(snap),
             )
-        new = Snapshot(
-            version=snap.version + 1,
-            schema_id=snap.schema_id,
-            schemas=snap.schemas,
-            key=snap.key,
-            key_field_id=snap.key_field_id,
-            n_buckets=new_n_buckets,
-            files=files,
-            committed=snap.committed,
-            properties=snap.properties,
-        )
+        new = _successor(snap, n_buckets=new_n_buckets, files=files)
         self._write_snapshot(new)
         return new.version
 
@@ -1541,7 +1401,6 @@ class LakeTable:
         candidate files are resolved to the current schema on read, so
         bin-pack doubles as lazy schema-migration of cold small files.
         Returns {files_in, files_out, bytes_in, groups}."""
-        import dataclasses
         import math
 
         snap = self.snapshot()
@@ -1641,39 +1500,21 @@ class LakeTable:
         rewritten: set[str],
         new_entries: list[FileEntry],
         base: Snapshot,
-        max_attempts: int = 20,
     ) -> None:
-        """Commit a REWRITE (inputs replaced by outputs), rebasing on
-        CommitConflict like _append_files_with_retry: a rewrite rebases
-        safely onto any snapshot that still references every input file
-        (concurrent APPENDS compose -- their files are kept). If an input
-        vanished (a concurrent rewrite/expiry won), abandon: the outputs
-        become unreferenced orphans for remove_orphaned_files, and the
-        table is untouched."""
-        for _ in range(max_attempts):
-            cur = self.snapshot()
-            have = {e.path for e in cur.files}
-            if not rewritten <= have:
+        """Commit a REWRITE (inputs replaced by outputs) through the rebase
+        loop: a rewrite rebases safely onto any snapshot that still
+        references every input file (concurrent APPENDS compose -- their
+        files are kept). If an input vanished (a concurrent rewrite/expiry
+        won), abandon: the outputs become unreferenced orphans for
+        remove_orphaned_files, and the table is untouched."""
+
+        def derive(cur: Snapshot) -> Snapshot:
+            if not rewritten <= {e.path for e in cur.files}:
                 raise CommitConflict(
                     "bin-pack inputs were removed by a concurrent rewrite; "
                     "abandoning (outputs left as orphans for gc)"
                 )
-            new = Snapshot(
-                version=cur.version + 1,
-                schema_id=cur.schema_id,
-                schemas=cur.schemas,
-                key=cur.key,
-                key_field_id=cur.key_field_id,
-                n_buckets=cur.n_buckets,
-                files=[e for e in cur.files if e.path not in rewritten] + new_entries,
-                committed=cur.committed,
-                properties=cur.properties,
-            )
-            try:
-                self._write_snapshot(new)
-                return
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"rewrite of {self.root} lost the commit race {max_attempts} times"
-        )
+            kept = [e for e in cur.files if e.path not in rewritten]
+            return _successor(cur, files=kept + new_entries)
+
+        self._commit_rebased(derive, "rewrite")

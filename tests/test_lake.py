@@ -227,23 +227,6 @@ def test_expire_snapshots_and_compact_maintenance(spark, tmp_path):
     assert {r["k"]: r["v"] for r in t.read().collect()} == before
 
 
-def test_executor_side_footer_reads_match_driver_path(spark, tmp_path, monkeypatch):
-    """Past STRATUM_FOOTER_DRIVER_MAX files per commit, manifest row counts
-    come from an executor-side footer job instead of driver opens; the
-    entries must be identical either way."""
-    from stratum_spark.lake import LakeTable
-
-    df = spark.createDataFrame([(i, f"v{i}") for i in range(200)], "k bigint, v string")
-    t1 = LakeTable.create(spark, str(tmp_path / "fd"), "k bigint, v string", key="k", n_buckets=8)
-    t1.append(df)
-    monkeypatch.setenv("STRATUM_FOOTER_DRIVER_MAX", "0")  # force executor path
-    t2 = LakeTable.create(spark, str(tmp_path / "fe"), "k bigint, v string", key="k", n_buckets=8)
-    t2.append(df)
-    e1 = sorted((e.buckets, e.rows) for e in t1.snapshot().files)
-    e2 = sorted((e.buckets, e.rows) for e in t2.snapshot().files)
-    assert e1 == e2 and sum(r for _, r in e2) == 200
-
-
 def test_latest_version_recovers_without_hint_after_expiry(spark, tmp_path):
     """_latest is only an unfsynced HINT: if it is lost/corrupt after
     expire_snapshots removed the early version files, the forward scan
@@ -284,3 +267,70 @@ def test_write_epoch_files_of_empty_frame_leaves_no_files(spark, tmp_path):
     empty = spark.createDataFrame([], DDL)
     assert t.write_epoch_files(empty, clustered=False) == []
     assert glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True) == []
+
+
+def test_every_writer_commits_one_successor_snapshot(spark, tmp_path):
+    """Each writer commits exactly one new version, and every snapshot
+    field the op does not mean to change (schemas, key, key_field_id,
+    n_buckets, committed bookmarks, properties) equals its parent's."""
+    ddl = "k string, v bigint, lsn bigint"
+    t = LakeTable.create(spark, str(tmp_path / "inv"), ddl, key="k", n_buckets=4,
+                         properties={"stats.columns": "lsn"})
+
+    def batch(lo, hi):
+        return spark.createDataFrame([(f"k{i}", i, i) for i in range(lo, hi)], ddl)
+
+    t.append(batch(0, 40))
+    t.merge(batch(0, 10), op_col=None, job_id="m", epoch=0, lsn_max=9)
+    rollback_to = t.snapshot().version
+
+    def fields(s):
+        return {
+            "schema_id": s.schema_id,
+            "schemas": {k: v.to_json() for k, v in s.schemas.items()},
+            "key": s.key,
+            "key_field_id": s.key_field_id,
+            "n_buckets": s.n_buckets,
+            "files": [e.to_json() for e in s.files],
+            "committed": s.committed,
+            "properties": s.properties,
+        }
+
+    def commit_files():
+        entries = t.write_epoch_files(batch(200, 210))
+        t.commit_epoch_files(entries, "j", 1, lsn_max=209, epoch_mode="batch")
+
+    ops = [
+        ("append", lambda: t.append(batch(40, 60)), {"files"}),
+        ("compact_binpack", lambda: t.compact_binpack(), {"files"}),
+        ("append_local", lambda: t.append_local(
+            [{"k": "z1", "v": 1, "lsn": 1}, {"k": "z2", "v": 2, "lsn": 2}]), {"files"}),
+        ("compact", lambda: t.compact(), {"files"}),
+        ("append_epoch", lambda: t.append_epoch(
+            batch(100, 110), "j", 0, lsn_max=109, epoch_mode="batch"),
+         {"files", "committed"}),
+        ("commit_epoch_files", commit_files, {"files", "committed"}),
+        ("merge", lambda: t.merge(batch(5, 15), op_col=None, job_id="m", epoch=1,
+                                  lsn_max=14), {"files", "committed"}),
+        ("overwrite", lambda: t.overwrite(batch(0, 30)), {"files"}),
+        ("set_properties", lambda: t.set_properties({"owner": "x"}), {"properties"}),
+        ("add_column", lambda: t.add_column("note", "string"), {"schema_id", "schemas"}),
+        ("rename_column", lambda: t.rename_column("note", "memo"),
+         {"schema_id", "schemas"}),
+        ("rebucket", lambda: t.rebucket(8), {"n_buckets", "files"}),
+    ]
+    for name, op, changes in ops:
+        before = t.snapshot()
+        op()
+        after = t.snapshot()
+        assert after.version == before.version + 1, name
+        fb, fa = fields(before), fields(after)
+        for f in fb.keys() - changes:
+            assert fa[f] == fb[f], (name, f)
+        for f in changes:
+            assert fa[f] != fb[f], (name, f)
+
+    # rollback commits one new version whose content is the target's
+    before = t.snapshot()
+    assert t.rollback(rollback_to) == before.version + 1
+    assert fields(t.snapshot()) == fields(t.snapshot(rollback_to))

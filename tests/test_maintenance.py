@@ -372,12 +372,14 @@ def test_commit_rewrite_rebases_onto_concurrent_append(spark, tmp_path):
 
 def test_auto_binpack_caps_lineage_file_count(spark, tmp_path, monkeypatch):
     """One tiny lineage file lands per epoch (and one DLQ file per bad-row
-    epoch); with STRATUM_BINPACK_EPOCHS each table's own single worker
+    epoch); every _BINPACK_EPOCHS epochs each table's own single worker
     folds them (driver-side, zero Spark jobs) with CONTENT unchanged and
     exactly-once bookmarks intact."""
+    import stratum_spark.cdc.applier as applier_mod
+
     feed = _mk_feed(spark, tmp_path)
-    monkeypatch.setenv("STRATUM_BINPACK_EPOCHS", "2")
-    monkeypatch.setenv("STRATUM_META_KEEP", "2")  # make expiry bite at 9 epochs
+    monkeypatch.setattr(applier_mod, "_BINPACK_EPOCHS", 2)
+    monkeypatch.setattr(applier_mod, "_META_KEEP", 2)  # make expiry bite at 9 epochs
     ap = CdcApplier(spark, str(tmp_path / "whab"), job_id="m", n_buckets=8,
                     evolution=[], write_mode="mor")
     ap.run_backfill(feed, epoch_size=100)  # 9 epochs

@@ -146,11 +146,13 @@ def test_mor_pipelined_matches_serial(spark, tmp_path):
     binlog = _mk_feed(spark, tmp_path, with_evolution=False)
     a = CdcApplier(spark, str(tmp_path / "ws"), job_id="p", n_buckets=8,
                    evolution=[], write_mode="mor")
-    a.run_backfill(binlog, epoch_size=150)
+    a.run_backfill(binlog, epoch_size=150, compact_every=3)
     b = CdcApplier(spark, str(tmp_path / "wq"), job_id="p", n_buckets=8,
                    evolution=[], write_mode="mor")
-    b.run_backfill(binlog, epoch_size=150, pipelined=True)
+    b.run_backfill(binlog, epoch_size=150, pipelined=True, compact_every=3)
     assert _rows(a.state()) == _rows(b.state())
+    # the compaction cadence holds on both loops
+    assert a.compactions_run == b.compactions_run > 0
 
 
 def test_verify_epoch_receipts_batch_boundary(spark, tmp_path):
@@ -308,41 +310,6 @@ def test_verify_epoch_receipts_expiry_without_compaction(spark, tmp_path):
     assert res[n_epochs - 1] == "ok", res
     # everything at/below the truncated baseline is honestly unattributable
     assert all(s == "no_files_recorded" for e, s in res.items() if e < n_epochs - 1), res
-
-
-def test_mor_defer_dedup_matches_and_is_narrow(spark, tmp_path):
-    """epoch_dedup=False appends the epoch's valid rows as-is (narrow
-    plan, zero exchanges); the read path and compactor resolve LWW over
-    the multi-row-per-key deltas to the identical state."""
-    import pytest
-
-    binlog = _mk_feed(spark, tmp_path, with_evolution=False)
-    a = CdcApplier(spark, str(tmp_path / "wdd_a"), job_id="dd", n_buckets=8,
-                   evolution=[], write_mode="mor")
-    a.run_backfill(binlog, epoch_size=150)
-    b = CdcApplier(spark, str(tmp_path / "wdd_b"), job_id="dd", n_buckets=8,
-                   evolution=[], write_mode="mor", epoch_dedup=False)
-    b.run_backfill(binlog, epoch_size=150)
-    want = _rows(a.state())
-    assert _rows(b.state()) == want
-    # duplicates were actually kept in the deltas (that's the trade)
-    assert b.deltas.row_count() > a.deltas.row_count()
-    # the append input plan is exchange-free (narrow scan -> map -> write)
-    from pyspark.sql import functions as F
-
-    feed = spark.read.parquet(binlog).where(F.col("lsn") <= 150)
-    c = CdcApplier(spark, str(tmp_path / "wdd_c"), job_id="dd", n_buckets=8,
-                   evolution=[], write_mode="mor", epoch_dedup=False)
-    prep = c._prepare_epoch(feed, 0)
-    plan = prep["deduped"]._jdf.queryExecution().executedPlan().toString()
-    c._abandon_prep(prep)  # prepare-only: release the DLQ worker slot too
-    assert "Exchange" not in plan
-    # compaction folds the duplicate-laden delta set to the same state
-    b.compact_deltas()
-    assert _rows(b.state()) == want
-    with pytest.raises(ValueError, match="mor"):
-        CdcApplier(spark, str(tmp_path / "wdd_x"), job_id="dd", n_buckets=8,
-                   evolution=[], write_mode="cow", epoch_dedup=False)
 
 
 def test_mor_auto_compaction_ratio_policy(spark, tmp_path):

@@ -3,16 +3,15 @@
 The graded criterion compares the engine's steady throughput to a bare
 feed-slice->parquet write at the same level. The engine's extra work per
 mor epoch is (a) the validation/DLQ split, (b) the LWW shuffle aggregate,
-(c) commit/bookkeeping. (a) and (b) are the prime suspects for the 4-core
-ratio dropping below 0.9 on a memory-bandwidth-bound host.
+(c) commit/bookkeeping. (a) is the prime suspect for the 4-core ratio
+dropping below 0.9 on a memory-bandwidth-bound host.
 
-This tool measures steady ev/s at one core count for four configs,
+This tool measures steady ev/s at one core count for three configs,
 interleaved round-robin across fresh JVMs (the box's window variance
 swamps back-to-back comparisons):
 
-  engine      validate=True  epoch_dedup=True   (the graded config)
-  novalidate  validate=False epoch_dedup=True   (drops DLQ scan + validity)
-  nodedup     validate=True  epoch_dedup=False  (drops the LWW aggregate)
+  engine      validate=True   (the graded config)
+  novalidate  validate=False  (drops DLQ scan + validity)
   bare        feed slice -> parquet, no engine   (the exhibit baseline)
 
 Usage: python tools/decompose_floor.py [cores=4] [n_events=2000000] [trials=3]
@@ -69,11 +68,9 @@ def _worker(config: str, cores: int, binlog_dir: str, n_events: int) -> None:
 
         from stratum_spark.cdc import CdcApplier
 
-        validate = config != "novalidate"
-        dedup = config != "nodedup"
         ap = CdcApplier(
             spark, os.path.join(base, "wh"), job_id="decomp", n_buckets=64,
-            evolution=[], validate=validate, write_mode="mor", epoch_dedup=dedup,
+            evolution=[], validate=config != "novalidate", write_mode="mor",
         )
         t0 = time.time()
         ap.run_backfill(binlog_dir, epoch_size=epoch_size, stop_after=1)
@@ -101,7 +98,7 @@ def main() -> int:
     trials = int(sys.argv[3]) if len(sys.argv) > 3 else 3
     configs = (
         sys.argv[4].split(",") if len(sys.argv) > 4
-        else ["engine", "novalidate", "nodedup", "bare"]
+        else ["engine", "novalidate", "bare"]
     )
 
     base = tempfile.mkdtemp(prefix="decomp_feed_", dir="/dev/shm")
