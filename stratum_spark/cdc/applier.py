@@ -1,4 +1,4 @@
-"""The CDC apply loop: change feed -> validate -> LWW dedup -> MERGE.
+"""The CDC apply loop: change feed -> validate -> LWW dedup -> delta append.
 
 Per-epoch sequence (one micro-batch == one epoch == one atomic lake commit),
 the distributed analog of stratum's per-batch consumer protocol
@@ -18,17 +18,18 @@ the distributed analog of stratum's per-batch consumer protocol
                            columns per event schema_ver
   5. LWW dedup          -- skew-proof max_by shuffle aggregate
                            (cdc/dedup.py), the one LWW rule on every path
-  6. MERGE / append     -- cow: bucket-pruned copy-on-write upsert with the
-                           lsn precedence guard; mor: a two-phase delta
-                           append. Either way the (job_id, epoch) bookmark
-                           commits atomically with the data
-  7. lineage + metrics  -- per-partition offset ranges + merge counts
+  6. delta append      -- a two-phase append of the deduped change rows
+                           to the delta table, whose (job_id, epoch)
+                           bookmark commits atomically with the files;
+                           the compaction policy later folds the deltas
+                           into the base with the lsn-guarded MERGE
+  7. lineage + metrics  -- per-file or per-partition offset ranges + counts
                            appended to the lineage table (FIXTURES.md §4;
                            stratum Batch{cursor,next} + MetricsSnapshot,
                            crates/engine-infra/src/metrics.rs:22-31)
 
 All steps are DataFrame expressions; the only driver-side data are the
-epoch's distinct schema versions, touched-bucket ids, and aggregate counts.
+epoch's distinct schema versions and aggregate counts.
 """
 
 from __future__ import annotations
@@ -44,6 +45,7 @@ from pyspark.sql import functions as F
 from stratum_spark.cdc.binlog import SCHEMA_EVOLUTION
 from stratum_spark.cdc.dedup import lww_dedup
 from stratum_spark.lake import LakeTable, MergeStats
+from stratum_spark.lake.table import _successor
 
 # feed-split sizing's epoch byte estimate: fixed per-event bytes (doc_id,
 # lsn, ts, op, source, lang, schema_ver + row overhead) plus 4 B per token
@@ -102,13 +104,29 @@ class CdcApplier:
         # (the zero-extra-job path) vs recomputed from files -- counted so
         # tests can pin that the observation path actually engages
         self._receipts_from_obs = 0
-        # merge-on-read compaction POLICY: when set, deltas are folded into
-        # the base as soon as delta rows exceed ratio x base rows (metadata
+        # Every epoch appends LWW-deduped change rows as DELTA files in one
+        # exactly-once commit; readers merge base+deltas with the same LWW
+        # rule, and compact_deltas() folds the deltas into the base via the
+        # ordinary MERGE. The hot path writes O(batch), not O(table).
+        # Compaction POLICY: when auto_compact_ratio is set, deltas are
+        # folded as soon as delta rows exceed ratio x base rows (metadata
         # row counts -- no Spark job), so read-merge cost is bounded by
         # policy rather than caller discipline (the reference's automatic
         # write fast-path selection, consumer/components/writer.rs:54-111,
         # makes the same kind of decision per batch). None = manual
-        # compact_deltas()/compact_every only.
+        # compact_deltas()/compact_every only. write_mode 'cow'
+        # (copy-on-write) is a policy preset, not a second engine: it means
+        # auto_compact_ratio=0.0, so the deltas fold after every backfill
+        # epoch and every stream drain and the base alone holds the state.
+        if write_mode not in ("cow", "mor"):
+            raise ValueError(f"unknown write_mode {write_mode}")
+        if write_mode == "cow":
+            if auto_compact_ratio is not None:
+                raise ValueError(
+                    "write_mode='cow' is auto_compact_ratio=0.0; pass "
+                    "write_mode='mor' to choose another ratio"
+                )
+            auto_compact_ratio = 0.0
         self.auto_compact_ratio = auto_compact_ratio
         self.compactions_run = 0
         self.lineage_detail = lineage_detail
@@ -116,26 +134,13 @@ class CdcApplier:
         # digest over the applied change rows) alongside the table metadata,
         # mirroring the reference's in-run receipt persistence
         # (crates/engine-processing/src/producer/components/integrity.rs:75-89).
-        # The digest aggregates piggyback on the MERGE's scan of the deduped
-        # batch via Observation -- zero extra Spark jobs.
+        # The digest aggregates piggyback on the delta write's scan of the
+        # deduped batch via Observation -- zero extra Spark jobs.
         self.integrity = integrity
         # epoch namespace: 'batch' (lsn-range epochs) or 'stream' (Spark
         # batch-id epochs) -- recorded in the bookmark so a cross-mode
         # resume fails loudly (streaming/driver.py guard)
         self.epoch_mode = "batch"
-        # write_mode 'cow': each epoch is a copy-on-write MERGE (every
-        # touched bucket rewritten -- simple, read-optimal, but with
-        # uniformly distributed keys the write amplification is
-        # table_size/epoch per epoch). 'mor' (merge-on-read): epochs append
-        # LWW-deduped change rows as DELTA files in one exactly-once
-        # commit; readers merge base+deltas with the same LWW rule, and
-        # compact_deltas() periodically folds deltas into the base via the
-        # ordinary MERGE. This is the Hudi/Iceberg-v2-delete-file shape a
-        # 10^10-event ingest needs: the hot path writes O(batch), not
-        # O(table).
-        if write_mode not in ("cow", "mor"):
-            raise ValueError(f"unknown write_mode {write_mode}")
-        self.write_mode = write_mode
         self.spark = spark
         self.warehouse = os.path.abspath(warehouse)
         self.job_id = job_id
@@ -181,19 +186,28 @@ class CdcApplier:
             if LakeTable.exists(dlq_root)
             else LakeTable.create(spark, dlq_root, DLQ_DDL, n_buckets=1)
         )
-        self.deltas: LakeTable | None = None
-        if write_mode == "mor":
-            # delta table: target schema + the change op, bucketed on the
-            # same key expression as the base so compaction's merge and the
-            # read-path union stay co-partitioned
-            del_root = os.path.join(self.warehouse, "tokens_deltas")
-            if LakeTable.exists(del_root):
-                self.deltas = LakeTable.load(spark, del_root)
-            else:
-                self.deltas = LakeTable.create(
-                    spark, del_root, TOKENS_DDL + ", op string",
-                    key="doc_id", n_buckets=n_buckets,
-                )
+        # delta table: the base's schema + the change op, bucketed on the
+        # same key expression so compaction's merge and the read-path union
+        # stay co-partitioned. It holds the exactly-once epoch bookmarks.
+        del_root = os.path.join(self.warehouse, "tokens_deltas")
+        if LakeTable.exists(del_root):
+            self.deltas = LakeTable.load(spark, del_root)
+        else:
+            base = self.tokens.snapshot()
+            self.deltas = LakeTable.create(
+                spark, del_root, base.schema.ddl() + ", op string",
+                key="doc_id", n_buckets=base.n_buckets,
+            )
+            # a warehouse written by the earlier copy-on-write engine keeps
+            # its job bookmarks on the base: carry them over (not the
+            # compactor's own) so a resume continues instead of replaying
+            marks = {
+                j: m for j, m in base.committed.items()
+                if not j.endswith("::compact")
+            }
+            if marks:
+                snap = self.deltas.snapshot()
+                self.deltas._write_snapshot(_successor(snap, committed=marks))
         # lineage appends run on a dedicated single worker thread: they are
         # off the epoch critical path (nothing in the loop reads lineage)
         # and the single thread serializes snapshot commits on the lineage
@@ -305,19 +319,11 @@ class CdcApplier:
         for step in sorted(self.evolution, key=lambda s: s["ver"]):
             if cur < step["ver"] <= target_ver:
                 getattr(self.tokens, step["action"])(*step["args"])
-                if self.deltas is not None:
-                    # delta schema evolves in lockstep (same field ids by
-                    # name), so base ∪ deltas unions cleanly at read time
-                    getattr(self.deltas, step["action"])(*step["args"])
+                # delta schema evolves in lockstep (same column names), so
+                # base ∪ deltas unions cleanly at read time
+                getattr(self.deltas, step["action"])(*step["args"])
                 self.tokens.set_properties({"schema_ver": str(step["ver"])})
                 cur = step["ver"]
-
-    @property
-    def _bookmark_table(self) -> LakeTable:
-        """Exactly-once state lives with the table the epoch commit writes:
-        the base for copy-on-write merges, the delta table for merge-on-read
-        appends."""
-        return self.deltas if self.write_mode == "mor" else self.tokens
 
     def _source_col_name(self) -> str:
         """Current name of the original 'source' column (rename-aware)."""
@@ -388,13 +394,10 @@ class CdcApplier:
         return self._append_dlq_frame(frame, epoch)
 
     def _abandon_prep(self, prep: dict) -> None:
-        """Release a prepared epoch's resources once it is committed, has
-        failed, or will never be committed (pause mid-pipeline; direct
-        _prepare_epoch callers in tests): shut the epoch pool, unpersist
-        the feed slice, and unblock an unfed DLQ worker slot so the 1-wide
+        """Release a prepared epoch once it is committed, has failed, or
+        will never be committed (pause mid-pipeline; direct _prepare_epoch
+        callers in tests): unblock an unfed DLQ worker slot so the 1-wide
         pool never deadlocks on it."""
-        prep["pool"].shutdown(wait=True)
-        prep["events"].unpersist()
         if prep.get("dlq_q") is not None and not prep.get("dlq_fed"):
             prep["dlq_q"].put(None)
             prep["dlq_fed"] = True
@@ -412,7 +415,7 @@ class CdcApplier:
         """Exactly-once DLQ append: the failed rows commit with a
         (job_id, epoch) bookmark on the DLQ table itself, so a replayed
         epoch's DLQ write is a no-op (no duplicates after a crash between
-        the DLQ commit and the merge commit). The opposite window -- merge
+        the DLQ commit and the epoch commit). The opposite window -- epoch
         committed, DLQ lost -- is closed by catch-up: run_backfill replays
         lagging DLQ epochs at startup, and a streaming restart's replayed
         micro-batch hits the epoch-skip path in _prepare_epoch, which runs
@@ -432,7 +435,7 @@ class CdcApplier:
 
     def _dlq_catchup(self, slice_of, upto_epoch: int) -> None:
         """Replay the DLQ side-channel for epochs the main table committed
-        but the DLQ bookmark missed (crash after merge commit, before the
+        but the DLQ bookmark missed (crash after the epoch commit, before the
         DLQ flush). slice_of(epoch) -> that epoch's feed slice."""
         if not self.validate:
             return
@@ -450,9 +453,9 @@ class CdcApplier:
     # ------------------------------------------------------------------
     def apply_epoch(self, events: DataFrame, epoch: int) -> EpochStats:
         """One epoch end-to-end: prepare (validate/dedup/stats, concurrent
-        DLQ + lineage jobs) then commit (MERGE + lineage rows). Split so the
-        backfill loop can PIPELINE: prepare epoch N+1 while committing epoch
-        N -- merges stay strictly ordered, preparation depends only on the
+        DLQ + lineage jobs) then commit (delta commit + lineage rows). Split
+        so the backfill loop can PIPELINE: prepare epoch N+1 while committing
+        epoch N -- commits stay strictly ordered, preparation depends only on the
         feed. While scripted DDL is pending the path stays serial (column
         mapping depends on the evolving table schema; the reference applies
         schema ops strictly before data, crates/engine-schema/src/plan.rs:259-288).
@@ -466,7 +469,7 @@ class CdcApplier:
         """Reject a resume whose bookmark was written by the OTHER epoch
         namespace (batch lsn-range epochs vs streaming batch-id epochs) --
         continuing would silently skip or replay data."""
-        committed = self._bookmark_table.snapshot().committed.get(self.job_id)
+        committed = self.deltas.snapshot().committed.get(self.job_id)
         if committed is not None and committed.get("mode", "batch") != self.epoch_mode:
             raise ValueError(
                 f"job_id {self.job_id!r} bookmark was written in "
@@ -486,20 +489,19 @@ class CdcApplier:
         state for _commit_epoch, or None if the epoch is empty or already
         committed.
 
-        A merge-on-read epoch with no pending DDL runs no separate stats
-        job: an Observation on the raw feed slice rides the delta write's
-        own scan, and per-file offset ranges come from the parquet footers
-        the manifest pass already reads. The stats job survives only where
-        its output gates the plan itself: cow (touched-bucket discovery
-        prunes the MERGE) and epochs with pending scripted DDL (the column
-        mapping depends on the batch's max schema_ver). The deduped batch
-        is consumed only by the merge/write, so it stays lazy."""
-        from concurrent.futures import ThreadPoolExecutor
-
+        An epoch with no pending DDL runs no separate stats job: an
+        Observation on the raw feed slice rides the delta write's own
+        scan, and per-file offset ranges come from the parquet footers the
+        manifest pass already reads. The stats job survives only for
+        epochs with pending scripted DDL, where the column mapping depends
+        on the batch's max schema_ver. The feed slice is re-decoded per
+        consumer (measured faster than caching it, BASELINE.md round 3),
+        and the deduped batch is consumed only by the write, so it stays
+        lazy."""
         t0 = time.time()
-        if epoch <= self._bookmark_table.committed_epoch(self.job_id):
+        if epoch <= self.deltas.committed_epoch(self.job_id):
             # replayed epoch (streaming restart redelivers the last batch):
-            # the main commit is skipped, but a crash between the merge
+            # the main commit is skipped, but a crash between the delta
             # commit and the DLQ flush may have lost this epoch's DLQ rows
             # -- the bookmarked append below restores them (no-op if the
             # DLQ commit survived)
@@ -511,29 +513,37 @@ class CdcApplier:
             return None
 
         bad_pred = self._bad_pred()
-        mor = self.write_mode == "mor"
-        # a cow epoch is scanned three times (stats + buckets, DLQ, merge),
-        # so caching the decoded batch wins; a mor epoch re-decodes the
-        # feed per consumer, which measured faster than building the cache
-        # (BASELINE.md round 3)
-        if not mor:
-            events = events.persist()
-        pool = ThreadPoolExecutor(max_workers=2)
         dlq_q = None
         ok = False
         try:
-            pending_evo = self.evolution_pending()
-            fold_stats = mor and not pending_evo
-            # the epoch's (rare, bad_frac-bounded) invalid rows ride the
-            # same observation: the write already decodes the token column
-            # and evaluates bad_pred, so the DLQ append runs over a tiny
-            # driver-built relation instead of re-scanning the feed
-            dlq_obs = fold_stats and self.validate and self._dlq_obs_gate()
+            parts = None  # folded: stats ride the write job's Observation
             obs_stats = None
+            dlq_obs = False
             events_w = events
-            if fold_stats:
+            if self.evolution_pending():
+                # ONE serial collect of per-partition lineage stats (one row
+                # per input partition); its max schema_ver gates evolution
+                # before the column mapping
+                parts = events.groupBy(F.spark_partition_id().alias("partition_id")).agg(
+                    F.min("lsn").alias("lsn_min"),
+                    F.max("lsn").alias("lsn_max"),
+                    F.count("*").alias("rows_in"),
+                    F.max("schema_ver").alias("v"),
+                    F.sum("n_tok").alias("tok"),
+                ).collect()
+                if not parts:
+                    return None
+                vs = [int(p["v"]) for p in parts if p["v"] is not None]
+                if vs:
+                    self._evolve_to(max(vs))
+            else:
                 from pyspark.sql import Observation
 
+                # the epoch's (rare, bad_frac-bounded) invalid rows ride the
+                # same observation: the write already decodes the token
+                # column and evaluates bad_pred, so the DLQ append runs over
+                # a tiny driver-built relation instead of re-scanning the feed
+                dlq_obs = self.validate and self._dlq_obs_gate()
                 # upstream of the validation filter, so it counts every raw row
                 aggs = [
                     F.count(F.lit(1)).alias("rows_in"),
@@ -556,60 +566,11 @@ class CdcApplier:
                 obs_stats = Observation(f"stats_{epoch}_{time.monotonic_ns()}")
                 events_w = events.observe(obs_stats, *aggs)
 
-            def parts_job():
-                # ONE collect, two row kinds: per-partition lineage stats
-                # (one row per input partition) and, for cow, the epoch's
-                # touched-bucket set reduced to DISTINCT ids executor-side
-                # (tagged partition_id NULL) -- the driver receives
-                # O(partitions + n_buckets) rows. With validation ON, bad
-                # rows go to the DLQ and must NOT pin buckets; with it OFF
-                # they merge like any other row.
-                stats_src = events if not mor else events.select("lsn", "schema_ver", "n_tok")
-                stats = stats_src.groupBy(F.spark_partition_id().alias("partition_id")).agg(
-                    F.min("lsn").alias("lsn_min"),
-                    F.max("lsn").alias("lsn_max"),
-                    F.count("*").alias("rows_in"),
-                    F.max("schema_ver").alias("v"),
-                    F.sum("n_tok").alias("tok"),
-                ).withColumn("b", F.lit(None).cast("int"))
-                if mor:
-                    return stats.collect()
-                bexpr = self.tokens._bucket_expr("doc_id")
-                touched_expr = F.when(~bad_pred, bexpr) if self.validate else bexpr
-                bucks = (
-                    events.select(touched_expr.cast("int").alias("b"))
-                    .where(F.col("b").isNotNull())
-                    .distinct()
-                    .select(
-                        F.lit(None).cast("int").alias("partition_id"),
-                        F.lit(None).cast("bigint").alias("lsn_min"),
-                        F.lit(None).cast("bigint").alias("lsn_max"),
-                        F.lit(None).cast("bigint").alias("rows_in"),
-                        F.lit(None).cast("int").alias("v"),
-                        F.lit(None).cast("bigint").alias("tok"),
-                        "b",
-                    )
-                )
-                return stats.unionByName(bucks).collect()
-
-            parts_future = None
-            parts = None  # folded: stats ride the write job's Observation
-            if pending_evo:
-                parts = parts_job()  # serial: gates evolution before mapping
-                if not parts:
-                    return None
-                vs = [int(p["v"]) for p in parts if p["v"] is not None]
-                if vs:
-                    self._evolve_to(max(vs))
-            elif not fold_stats:
-                parts_future = pool.submit(parts_job)
-
             # DLQ write overlaps everything (its own bookmarked exactly-once
             # commit -- see _append_dlq_frame for the crash-window analysis).
-            # Submitted to the applier-wide single DLQ worker, NOT this
-            # epoch's pool: overlapped epochs' DLQ commits must land in
-            # epoch order or the monotonic bookmark silently drops the
-            # older epoch's rows (see _dlq_pool).
+            # Submitted to the applier-wide single DLQ worker: overlapped
+            # epochs' DLQ commits must land in epoch order or the monotonic
+            # bookmark silently drops the older epoch's rows (see _dlq_pool).
             dlq_future = None
             if self.validate:
                 if dlq_obs:
@@ -646,10 +607,10 @@ class CdcApplier:
                 cols.append(F.when(F.col("schema_ver") >= 1, F.col("lang")).alias("lang"))
             mapped = good.select(*cols)
 
-            # LWW dedup: consumed once (by the MERGE or the delta write), so
-            # it stays lazy and the integrity digest observation fires on
-            # that same scan. The shuffle aggregate keeps one row per key,
-            # so delta files are (doc_id, lsn)-unique.
+            # LWW dedup: consumed once (by the delta write), so it stays
+            # lazy and the integrity digest observation fires on that same
+            # scan. The shuffle aggregate keeps one row per key, so delta
+            # files are (doc_id, lsn)-unique.
             deduped = lww_dedup(mapped, key="doc_id", order_col="lsn")
             receipt_obs = None
             # Observation.get resolves via a QueryExecutionListener event;
@@ -677,13 +638,11 @@ class CdcApplier:
                 "obs_stats": obs_stats,
                 "dlq_future": dlq_future,
                 "dlq_q": dlq_q,
-                "parts_future": parts_future,
                 "parts": parts,
-                "pool": pool,
             }
         finally:
             if not ok:
-                self._abandon_prep({"pool": pool, "events": events, "dlq_q": dlq_q})
+                self._abandon_prep({"dlq_q": dlq_q})
 
     def _write_deltas(self, deduped: DataFrame) -> list:
         """Phase 1 of the two-phase delta append: write the epoch's files,
@@ -693,17 +652,15 @@ class CdcApplier:
         return self.deltas.write_epoch_files(deduped, clustered=False, stats_cols=("lsn",))
 
     def _commit_epoch(self, prep: dict) -> EpochStats:
-        """Second half of the epoch: the MERGE or delta commit (atomic lake
-        commit with the epoch bookmark) plus lineage rows. Must run in
-        epoch order."""
+        """Second half of the epoch: the delta commit (atomic lake commit
+        with the epoch bookmark) plus lineage rows. Must run in epoch
+        order."""
         epoch = prep["epoch"]
         fold = prep["obs_stats"] is not None
-        entries = None
         try:
-            if self.write_mode == "mor":
-                entries = prep.get("entries")
-                if entries is None:
-                    entries = self._write_deltas(prep["deduped"])
+            entries = prep.get("entries")
+            if entries is None:
+                entries = self._write_deltas(prep["deduped"])
             if fold:
                 stats = self._observed(prep["obs_stats"])
                 if stats is None:
@@ -721,18 +678,12 @@ class CdcApplier:
                         else self._dlq_frame(prep["events"])
                     )
                     prep["dlq_fed"] = True
-                parts, touched = [], []
+                parts = []
                 rows_in = int(stats["rows_in"] or 0)
                 lsn_max = stats["lsn_max"]
                 sum_tok = stats["sum_tok"]
             else:
-                parts = prep["parts"]
-                if prep["parts_future"] is not None:
-                    parts = prep["parts_future"].result()
-                # per-partition stats rows (partition_id set) and distinct
-                # touched-bucket rows (partition_id NULL, b set)
-                touched = sorted(int(p["b"]) for p in parts if p["b"] is not None)
-                parts = [p for p in parts if p["partition_id"] is not None and p["rows_in"]]
+                parts = [p for p in prep["parts"] if p["rows_in"]]
                 rows_in = sum(int(p["rows_in"]) for p in parts)
                 lsn_max = max((int(p["lsn_max"]) for p in parts), default=None)
                 sum_tok = sum(int(p["tok"]) for p in parts if p["tok"] is not None)
@@ -741,40 +692,22 @@ class CdcApplier:
                     prep["dlq_future"].result()
                 return EpochStats(epoch=epoch, skipped=True)
             lsn_max, sum_tok = int(lsn_max), int(sum_tok or 0)
-            t_merge = time.time()
-            if self.write_mode == "mor":
-                n_appended = self.deltas.commit_epoch_files(
-                    entries,
-                    job_id=self.job_id,
-                    epoch=epoch,
-                    lsn_max=lsn_max,
-                    epoch_mode=self.epoch_mode,
-                )
-                mstats = MergeStats(
-                    epoch_skipped=False,
-                    rows_inserted=n_appended,
-                    buckets_touched=0,
-                    wall_ms=int((time.time() - t_merge) * 1000),
-                )
-            else:
-                mstats = self.tokens.merge(
-                    prep["deduped"],
-                    op_col="op",
-                    job_id=self.job_id,
-                    epoch=epoch,
-                    lsn_max=lsn_max,
-                    precedence_col="lsn",
-                    touched=touched,
-                    epoch_mode=self.epoch_mode,
-                )
+            t_commit = time.time()
+            n_appended = self.deltas.commit_epoch_files(
+                entries,
+                job_id=self.job_id,
+                epoch=epoch,
+                lsn_max=lsn_max,
+                epoch_mode=self.epoch_mode,
+            )
+            mstats = MergeStats(
+                rows_inserted=n_appended,
+                wall_ms=int((time.time() - t_commit) * 1000),
+            )
             n_dlq = prep["dlq_future"].result() if prep["dlq_future"] is not None else 0
             if prep["dlq_future"] is not None:
                 # gates the NEXT epoch's dlq-via-observation attachment
                 self._last_bad_count = n_dlq
-            if mstats.epoch_skipped:
-                # replayed epoch: the merge never scanned the batch, so the
-                # receipt observation never fired -- do NOT block on it
-                return EpochStats(epoch=epoch, skipped=True)
         finally:
             # never leave the single DLQ worker parked on an unfed queue
             # (it would deadlock every later epoch's DLQ)
@@ -864,9 +797,9 @@ class CdcApplier:
                 self._dlq_pool.submit(self._binpack_and_expire, self.dlq)
             )
         if prep["receipt_obs"] is not None and self.epoch_mode != "stream":
-            # batch mode: the observation fired during the merge/write scan
-            # of the deduped batch -- folding it to a root + writing the
-            # tiny JSON is driver-side microwork, queued off-path
+            # batch mode: the observation fired during the write's scan of
+            # the deduped batch -- folding it to a root + writing the tiny
+            # JSON is driver-side microwork, queued off-path
             row = prep["receipt_obs"].get
             self._lineage_futures.append(
                 self._lineage_pool.submit(self._write_epoch_receipt, epoch, row)
@@ -875,38 +808,17 @@ class CdcApplier:
             # streaming: the observation is attached here too (measured on
             # Spark 4.1: the listener event DOES deliver for batch writes
             # executed inside foreachBatch), but read with a NON-BLOCKING
-            # poll -- a blocking .get could park the stream thread if the
-            # event were ever lost. When it resolves the receipt costs ZERO
-            # extra jobs (round-5 verdict item 6). Fallbacks keep the
-            # previous behavior: mor recomputes from the epoch's immutable
-            # committed delta files on the lineage worker (off the
-            # micro-batch critical path); cow (bucket-rewrite files !=
-            # batch) runs the inline aggregation on the batch df, which is
-            # only valid while foreachBatch is still executing.
-            if self.write_mode == "mor":
-                paths = [
-                    os.path.join(self.deltas.root, e.path)
-                    for e in (entries or [])
-                ]
-                self._lineage_futures.append(
-                    self._lineage_pool.submit(
-                        self._receipt_stream_mor, epoch, prep["receipt_obs"], paths
-                    )
+            # poll on the lineage worker -- a blocking .get could park the
+            # stream thread if the event were ever lost. When it resolves
+            # the receipt costs ZERO extra jobs; otherwise it is recomputed
+            # from the epoch's immutable committed delta files, still off
+            # the micro-batch critical path.
+            paths = [os.path.join(self.deltas.root, e.path) for e in entries]
+            self._lineage_futures.append(
+                self._lineage_pool.submit(
+                    self._receipt_stream_mor, epoch, prep["receipt_obs"], paths
                 )
-            else:
-                row = self._observed(prep["receipt_obs"], timeout_s=2.0)
-                if row is None:
-                    from stratum_spark.verify.hashing import (
-                        canonical_hash_col,
-                        commutative_digest_aggs,
-                    )
-
-                    row = prep["deduped"].agg(
-                        *commutative_digest_aggs(canonical_hash_col(prep["deduped"]))
-                    ).first()
-                self._lineage_futures.append(
-                    self._lineage_pool.submit(self._write_epoch_receipt, epoch, row)
-                )
+            )
 
         return EpochStats(
             epoch=epoch,
@@ -949,7 +861,7 @@ class CdcApplier:
         ).first().asDict()
 
     def _receipt_stream_mor(self, epoch: int, obs, paths: list[str]) -> None:
-        """Streaming mor receipt, on the lineage worker: prefer the write
+        """Streaming receipt, on the lineage worker: prefer the write
         job's own observation (zero extra jobs); if its event hasn't landed
         within the grace window, recompute from the epoch's immutable
         committed delta files (one off-path job -- the pre-round-6
@@ -1017,12 +929,9 @@ class CdcApplier:
         carrying its epoch bookmark), the commutative digest is recomputed
         over exactly those rows under the schema AT THAT VERSION, and the
         root is compared to the receipt persisted during apply. Tampering
-        with any applied batch flips its epoch to 'mismatch'. mor only
-        (cow merges rewrite whole buckets, so batch != files). Epochs
-        whose physical files were removed by snapshot expiry report
+        with any applied batch flips its epoch to 'mismatch'. Epochs whose
+        physical files were removed by snapshot expiry report
         'missing_files' -- the receipt remains the durable record."""
-        if self.write_mode != "mor":
-            return []
         from stratum_spark.verify.hashing import (
             canonical_hash_col,
             commutative_digest_aggs,
@@ -1109,8 +1018,8 @@ class CdcApplier:
         committed epoch; `stop_after` epochs simulates a crash/pause for
         kill-and-resume tests (crates/engine-tests/src/resume.rs:50-127).
 
-        pipelined=True overlaps epoch N+1's preparation and, on the mor
-        path, its delta-file write with epoch N's commit -- commits stay
+        pipelined=True overlaps epoch N+1's preparation and its delta-file
+        write with epoch N's commit -- commits stay
         strictly ordered, so exactly-once and replay semantics are
         unchanged. The prefetch pauses while scripted schema evolution is
         still pending (column mapping must see the table schema its own
@@ -1129,7 +1038,7 @@ class CdcApplier:
         feed = self.spark.read.parquet(binlog_path)
         if max_lsn is None:
             max_lsn = feed.agg(F.max("lsn")).collect()[0][0] or 0
-        start_epoch = self._bookmark_table.committed_epoch(self.job_id) + 1
+        start_epoch = self.deltas.committed_epoch(self.job_id) + 1
         n_epochs = (max_lsn + epoch_size - 1) // epoch_size
         epochs = list(range(start_epoch, n_epochs))[:stop_after]
 
@@ -1137,18 +1046,18 @@ class CdcApplier:
             lo, hi = ep * epoch_size + 1, (ep + 1) * epoch_size
             return feed.where((F.col("lsn") >= lo) & (F.col("lsn") <= hi))
 
-        # crash recovery: epochs the merge committed but whose DLQ flush was
+        # crash recovery: epochs whose commit landed but whose DLQ flush was
         # lost replay their (bookmarked, idempotent) DLQ append first
         self._dlq_catchup(slice_of, start_epoch - 1)
 
         def prep_and_write(ep: int):
-            """Prefetch body: prepare the epoch AND, on the mor path, run
-            its delta-file WRITE (phase 1 of the two-phase append), so only
-            the ordered bookmark commit remains on the main thread. Files
-            written here are invisible until committed, so a crash orphans
-            them harmlessly and exactly-once is untouched."""
+            """Prefetch body: prepare the epoch AND run its delta-file
+            WRITE (phase 1 of the two-phase append), so only the ordered
+            bookmark commit remains on the main thread. Files written here
+            are invisible until committed, so a crash orphans them
+            harmlessly and exactly-once is untouched."""
             prep = self._prepare_epoch(slice_of(ep), ep)
-            if prep is not None and self.write_mode == "mor":
+            if prep is not None:
                 prep["entries"] = self._write_deltas(prep["deduped"])
             return prep
 
@@ -1187,19 +1096,29 @@ class CdcApplier:
     def state(self) -> DataFrame:
         """Current user-facing table state (system lsn column dropped).
 
-        cow: the base table IS the state. mor: merge-on-read -- the base
-        (implicit op='U') unions the delta files and the SAME LWW rule the
-        writer uses resolves each key to its highest-lsn row; 'D' winners
-        drop out. One hash aggregate over base+deltas, co-bucketed on the
-        key. compact_deltas() bounds the delta fraction, exactly like
-        Iceberg v2 read-merge + rewrite_data_files."""
+        Merge-on-read: the base (implicit op='U') unions the delta files
+        and the SAME LWW rule the writer uses resolves each key to its
+        highest-lsn row; 'D' winners drop out. One hash aggregate over
+        base+deltas, co-bucketed on the key. The compaction policy bounds
+        the delta fraction, exactly like Iceberg v2 read-merge +
+        rewrite_data_files; on a folded table the base is read as is."""
         return self.state_with_lsn().drop("lsn")
 
-    def _merge_on_read(self, deltas: DataFrame, base: DataFrame) -> DataFrame:
-        """LWW-resolve pinned delta and base reads. Callers pin the deltas
-        FIRST: compact_deltas() commits the base before it truncates the
-        deltas, so a reader racing it sees at worst the folded rows twice
-        (base and deltas) -- harmless under LWW -- and never neither."""
+    def _merge_on_read(self, base_of, doc_id=None) -> DataFrame:
+        """LWW-resolve the pinned deltas (only doc_id's rows, if given)
+        over base_of(), the base read. The deltas are pinned FIRST:
+        compact_deltas() commits the base before it truncates the deltas,
+        so a reader racing it sees at worst the folded rows twice (base
+        and deltas) -- harmless under LWW -- and never neither. With no
+        pinned delta files the base read is the state as is: same columns
+        in the same order as the LWW path, without its shuffle."""
+        snap = self.deltas.snapshot()
+        base = base_of()
+        if not snap.files:
+            return base
+        deltas = self.deltas._read_entries(snap.files, snap)
+        if doc_id is not None:
+            deltas = deltas.where(F.col("doc_id") == doc_id)
         merged = lww_dedup(
             base.withColumn("op", F.lit("U")).unionByName(deltas),
             key="doc_id", order_col="lsn",
@@ -1207,36 +1126,31 @@ class CdcApplier:
         return merged.where(F.col("op") != "D").drop("op")
 
     def state_with_lsn(self) -> DataFrame:
-        if self.write_mode != "mor":
-            return self.tokens.read()
-        deltas = self.deltas.read()
-        return self._merge_on_read(deltas, self.tokens.read())
+        return self._merge_on_read(self.tokens.read)
 
     def lookup(self, doc_id) -> DataFrame:
         """Point lookup of one document's CURRENT row -- same user-facing
         semantics as state() restricted to the key, priced for 100 TB:
-        cow reads only the one hash bucket's files (LakeTable.lookup:
-        driver-side XXH64 bucket prune + key stats prune, zero jobs
-        before the read); mor additionally scans the (compaction-bounded)
-        delta set with the key predicate pushed to the parquet reader and
-        resolves by the writer's own LWW rule, so an uncompacted delete
-        or update is visible immediately."""
-        if self.write_mode != "mor":
-            return self.tokens.lookup(doc_id).drop("lsn")
-        deltas = self.deltas.read().where(F.col("doc_id") == doc_id)
-        return self._merge_on_read(deltas, self.tokens.lookup(doc_id)).drop("lsn")
+        the base read touches only the one hash bucket's files
+        (LakeTable.lookup: driver-side XXH64 bucket prune + key stats
+        prune, zero jobs before the read); the (compaction-bounded) delta
+        set is scanned with the key predicate pushed to the parquet reader
+        and resolved by the writer's own LWW rule, so an uncompacted
+        delete or update is visible immediately."""
+        return self._merge_on_read(
+            lambda: self.tokens.lookup(doc_id), doc_id
+        ).drop("lsn")
 
     def sync_out(self, url: str, target_table: str, **kw) -> dict:
         """Propagate the engine's current state to a JDBC database
         (cdc/sync_out.py) -- the reference's migrate-into-database
-        direction, incremental. mor folds deltas first: compaction is
+        direction, incremental. It folds the deltas first: compaction is
         the state-materialization point, and the base table's
         read_changes then carries exactly the net diff a downstream
         database needs."""
         from stratum_spark.cdc.sync_out import sync_to_jdbc
 
-        if self.write_mode == "mor":
-            self.compact_deltas()
+        self.compact_deltas()
         return sync_to_jdbc(
             self.spark, self.tokens, url, target_table,
             job_id=kw.pop("job_id", f"{self.job_id}::sync"), **kw,
@@ -1260,13 +1174,12 @@ class CdcApplier:
         run while a backfill is live: files younger than grace_sec and dirs
         holding in-progress Spark staging are never touched (see
         LakeTable.remove_orphaned_files). Returns per-table counts."""
-        out: dict[str, dict] = {}
-        tables = {"tokens": self.tokens, "lineage": self.lineage, "dlq": self.dlq}
-        if self.deltas is not None:
-            tables["tokens_deltas"] = self.deltas
-        for name, t in tables.items():
-            out[name] = t.remove_orphaned_files(grace_sec=grace_sec)
-        return out
+        tables = {"tokens": self.tokens, "lineage": self.lineage, "dlq": self.dlq,
+                  "tokens_deltas": self.deltas}
+        return {
+            name: t.remove_orphaned_files(grace_sec=grace_sec)
+            for name, t in tables.items()
+        }
 
     def maybe_compact(self) -> MergeStats | None:
         """Ratio-policy compaction: fold deltas into the base when delta
@@ -1277,11 +1190,7 @@ class CdcApplier:
         streaming compaction must run OUTSIDE foreachBatch (the merge's
         Observation never resolves there); run_stream_until_idle applies
         the policy after the drain, the Hudi-style async-compactor shape."""
-        if (
-            self.write_mode != "mor"
-            or self.auto_compact_ratio is None
-            or self.deltas is None
-        ):
+        if self.auto_compact_ratio is None:
             return None
         d = self.deltas.row_count()
         if d > 0 and d >= self.auto_compact_ratio * self.tokens.row_count():
@@ -1299,8 +1208,6 @@ class CdcApplier:
         by row (LWW dedup picks each key's max-lsn event; the merge's lsn
         precedence guard drops stale matches; deletes of missing keys do
         nothing). Runs from the apply loop -- not concurrent with appends."""
-        if self.write_mode != "mor":
-            return None
         # barrier: async receipt jobs (streaming mode) read the epoch's
         # delta files by direct path -- drain them before the fold/truncate
         # makes those files eligible for expiry
@@ -1308,8 +1215,10 @@ class CdcApplier:
         target_epoch = self.deltas.committed_epoch(self.job_id)
         if target_epoch < 0:
             return None
-        deltas = self.deltas.read()
-        deduped = lww_dedup(deltas, key="doc_id", order_col="lsn")
+        snap = self.deltas.snapshot()
+        deduped = lww_dedup(
+            self.deltas._read_entries(snap.files, snap), key="doc_id", order_col="lsn"
+        )
         mstats = self.tokens.merge(
             deduped,
             op_col="op",
@@ -1317,10 +1226,11 @@ class CdcApplier:
             epoch=target_epoch,
             precedence_col="lsn",
         )
-        # truncate: a metadata-only snapshot referencing zero files
-        self.deltas.overwrite(
-            self.spark.createDataFrame([], self.deltas.snapshot().schema.spark_schema())
-        )
+        # truncate: one metadata-only commit of the folded snapshot's
+        # successor with zero files (bookmarks carried over), through the
+        # CAS every commit takes -- an append that slipped in since the
+        # read fails it instead of being dropped
+        self.deltas._write_snapshot(_successor(snap, files=[]))
         self.compactions_run += 1
         return mstats
 
@@ -1354,7 +1264,7 @@ class CdcApplier:
 
     def epoch_state(self) -> dict:
         return {
-            "epoch": self._bookmark_table.committed_epoch(self.job_id),
-            "lsn": self._bookmark_table.committed_lsn(self.job_id),
+            "epoch": self.deltas.committed_epoch(self.job_id),
+            "lsn": self.deltas.committed_lsn(self.job_id),
             "schema_ver": self._table_schema_ver(),
         }

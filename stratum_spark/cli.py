@@ -173,26 +173,14 @@ def cmd_apply(args) -> int:
 
 def _applier(args):
     from stratum_spark.cdc import CdcApplier
-    from stratum_spark.lake import LakeTable
 
-    spark = _spark(args)
-    mode = args.write_mode
-    if mode == "auto":
-        # inspect-only commands must not mutate the warehouse: opening a
-        # cow warehouse in mor mode would CREATE its delta table, so the
-        # mode is detected from what exists on disk
-        mode = (
-            "mor"
-            if LakeTable.exists(os.path.join(args.warehouse, "tokens_deltas"))
-            else "cow"
-        )
     return CdcApplier(
-        spark,
+        _spark(args),
         args.warehouse,
         job_id=args.job_id,
         n_buckets=args.n_buckets,
         n_events_hint=args.events_hint,
-        write_mode=mode,
+        write_mode="mor",
         auto_compact_ratio=args.compact_ratio,
     )
 
@@ -235,7 +223,7 @@ def cmd_status(args) -> int:
         "job_id": args.job_id,
         **ap.epoch_state(),
         "table_rows": ap.tokens.row_count(),
-        "delta_rows": ap.deltas.row_count() if ap.deltas is not None else None,
+        "delta_rows": ap.deltas.row_count(),
         "dlq_rows": ap.dlq.row_count(),
         "receipts": len(ap.epoch_receipts()),
         "snapshot_version": ap.tokens.snapshot().version,
@@ -288,7 +276,7 @@ def cmd_compact(args) -> int:
     ap = _applier(args)
     m = ap.compact_deltas()
     if m is None:
-        print("nothing to compact (cow mode or no committed deltas)")
+        print("nothing to compact (no committed deltas)")
         return 0
     print(
         f"compacted: inserted={m.rows_inserted} updated={m.rows_updated} "
@@ -321,7 +309,7 @@ def cmd_binpack(args) -> int:
         ("tokens", ap.tokens),
         ("lineage", ap.lineage),
         ("dlq", ap.dlq),
-        *((("tokens_deltas", ap.deltas),) if ap.deltas is not None else ()),
+        ("tokens_deltas", ap.deltas),
     ):
         r = t.compact_binpack(small_file_bytes=small, target_file_bytes=target)
         print(
@@ -399,7 +387,7 @@ def cmd_gc(args) -> int:
             ("tokens", ap.tokens),
             ("lineage", ap.lineage),
             ("dlq", ap.dlq),
-            *((("tokens_deltas", ap.deltas),) if ap.deltas is not None else ()),
+            ("tokens_deltas", ap.deltas),
         ):
             e = t.expire_snapshots(keep_last=args.expire_keep)
             print(
@@ -411,17 +399,16 @@ def cmd_gc(args) -> int:
 
 
 def cmd_rollback(args) -> int:
-    """Roll the target (bookmark-carrying) table back to an earlier
+    """Roll the delta (bookmark-carrying) table back to an earlier
     snapshot version. Exactly-once bookmarks roll back with the data, so a
     subsequent backfill replays from the rolled-back epoch and converges."""
     ap = _applier(args)
-    table = ap.deltas if ap.write_mode == "mor" else ap.tokens
     try:
-        new_v = table.rollback(args.version)
+        new_v = ap.deltas.rollback(args.version)
     except FileNotFoundError:
         print(f"version {args.version} not found (expired or never existed)")
         return 1
-    snap = table.snapshot()
+    snap = ap.deltas.snapshot()
     bk = snap.committed.get(args.job_id, {})
     print(
         f"rolled back to v{args.version} as new v{new_v}; "
@@ -446,12 +433,11 @@ def cmd_lookup(args) -> int:
 
 
 def cmd_changes(args) -> int:
-    """Incremental changes between two snapshot versions of the bookmark
+    """Incremental changes between two snapshot versions of the base
     table (Iceberg incremental read / Delta CDF analog) -- what a
     downstream consumer re-processes instead of rescanning."""
     ap = _applier(args)
-    table = ap.deltas if ap.write_mode == "mor" else ap.tokens
-    ch = table.read_changes(args.from_version, args.to_version)
+    ch = ap.tokens.read_changes(args.from_version, args.to_version)
     n = ch.count()
     rows = [r.asDict() for r in ch.limit(args.limit).collect()]
     if args.json:
@@ -489,12 +475,9 @@ def cmd_version(args) -> int:
     return 0
 
 
-def _add_applier_args(p: argparse.ArgumentParser, default_mode: str = "mor") -> None:
+def _add_applier_args(p: argparse.ArgumentParser) -> None:
     p.add_argument("--warehouse", required=True)
     p.add_argument("--job-id", default="cdc")
-    # writers default to mor (the headline ingest path); inspect-only
-    # commands default to auto-detecting what the warehouse already is
-    p.add_argument("--write-mode", choices=("cow", "mor", "auto"), default=default_mode)
     p.add_argument("--n-buckets", type=int, default=64)
     p.add_argument("--events-hint", type=int, default=None)
     p.add_argument("--compact-ratio", type=float, default=None)
@@ -558,7 +541,7 @@ def main(argv: list[str] | None = None) -> int:
 
     p = sub.add_parser("status", help="engine state for a warehouse")
     p.add_argument("--json", action="store_true")
-    _add_applier_args(p, "auto")
+    _add_applier_args(p)
     p.set_defaults(fn=cmd_status)
 
     p = sub.add_parser("verify", help="verify destination vs stored receipt")
@@ -568,20 +551,20 @@ def main(argv: list[str] | None = None) -> int:
                    help="batch-boundary mode: verify per-epoch receipts "
                         "against each epoch's own delta files")
     p.add_argument("--json", action="store_true")
-    _add_applier_args(p, "auto")
+    _add_applier_args(p)
     p.set_defaults(fn=cmd_verify)
 
     p = sub.add_parser("compact", help="fold merge-on-read deltas into the base")
-    _add_applier_args(p, "auto")
+    _add_applier_args(p)
     p.set_defaults(fn=cmd_compact)
 
     p = sub.add_parser("rebucket", help="bucket-count evolution on the base table")
-    _add_applier_args(p, default_mode="auto")
+    _add_applier_args(p)
     p.add_argument("--to", type=int, required=True, help="new bucket count")
     p.set_defaults(fn=cmd_rebucket)
 
     p = sub.add_parser("binpack", help="coalesce small files only (size-aware compaction)")
-    _add_applier_args(p, default_mode="auto")
+    _add_applier_args(p)
     p.add_argument("--small-mb", type=float, default=32.0,
                    help="files under this size are coalesced")
     p.add_argument("--target-mb", type=float, default=128.0,
@@ -589,7 +572,7 @@ def main(argv: list[str] | None = None) -> int:
     p.set_defaults(fn=cmd_binpack)
 
     p = sub.add_parser("gc", help="sweep orphaned data files (+ optional snapshot expiry)")
-    _add_applier_args(p, default_mode="auto")
+    _add_applier_args(p)
     p.add_argument("--grace-sec", type=float, default=3600.0,
                    help="only files older than this are swept (protects in-flight writes)")
     p.add_argument("--expire-keep", type=int, default=None,
@@ -597,18 +580,18 @@ def main(argv: list[str] | None = None) -> int:
     p.set_defaults(fn=cmd_gc)
 
     p = sub.add_parser("rollback", help="roll the bookmark table back to a snapshot version")
-    _add_applier_args(p, default_mode="auto")
+    _add_applier_args(p)
     p.add_argument("--version", type=int, required=True)
     p.set_defaults(fn=cmd_rollback)
 
     p = sub.add_parser("lookup", help="point lookup of one document's current row")
-    _add_applier_args(p, default_mode="auto")
+    _add_applier_args(p)
     p.add_argument("--doc", required=True)
     p.add_argument("--json", action="store_true")
     p.set_defaults(fn=cmd_lookup)
 
     p = sub.add_parser("changes", help="incremental changes between snapshot versions")
-    _add_applier_args(p, default_mode="auto")
+    _add_applier_args(p)
     p.add_argument("--from-version", dest="from_version", type=int, required=True)
     p.add_argument("--to-version", dest="to_version", type=int, default=None)
     p.add_argument("--limit", type=int, default=20)
@@ -616,7 +599,7 @@ def main(argv: list[str] | None = None) -> int:
     p.set_defaults(fn=cmd_changes)
 
     p = sub.add_parser("sync", help="incremental sync-out to a JDBC database")
-    _add_applier_args(p, default_mode="auto")
+    _add_applier_args(p)
     p.add_argument("--url", required=True)
     p.add_argument("--target", required=True)
     p.add_argument("--dialect", choices=("ansi", "postgres", "mysql"), default=None)

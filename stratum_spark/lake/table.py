@@ -982,8 +982,6 @@ class LakeTable:
         lsn_max: int | None = None,
         mode: str = "upsert",
         precedence_col: str | None = None,
-        assume_all_buckets: bool = False,
-        touched: list[int] | None = None,
         epoch_mode: str | None = None,
     ) -> MergeStats:
         """MERGE batch INTO table ON table.key = batch.key.
@@ -1031,13 +1029,7 @@ class LakeTable:
 
         # bucket pruning: read only buckets the batch touches. The distinct
         # bucket list is tiny (<= n_buckets ints) -- driver collect is safe.
-        # Callers with batches that evidently touch every bucket (rows >>
-        # n_buckets) skip the discovery job entirely.
-        if touched is None:
-            if assume_all_buckets:
-                touched = list(range(snap.n_buckets))
-            else:
-                touched = [r[0] for r in src_aligned.select(_BUCKET).distinct().collect()]
+        touched = [r[0] for r in src_aligned.select(_BUCKET).distinct().collect()]
         target = _with_bucket(self.read_buckets(touched, version=snap.version), snap)
 
         s_cols = [F.col(f"s.{c}").alias(f"s_{c}") for c in data_cols]

@@ -6,8 +6,8 @@ Exactly-once composition (SURVEY.md §3.4):
     files form micro-batch N and replays the same batch after a crash --
     stratum's cursor resume rules
     (crates/engine-processing/src/state_manager.rs:96-160).
-  * The lake table's (job_id, epoch) bookmark commits atomically with the
-    MERGE, so a replayed micro-batch is a no-op -- stratum's WAL
+  * The delta table's (job_id, epoch) bookmark commits atomically with the
+    epoch's delta files, so a replayed micro-batch is a no-op -- stratum's WAL
     BatchCommit check. Together: replay from any checkpoint converges to
     the identical final table state.
 
@@ -41,10 +41,10 @@ def start_stream(
     # BACKFILL would silently skip micro-batches 0..committed_epoch (data
     # loss), so a cross-mode bookmark is rejected; resuming a stream's own
     # bookmark is the normal restart path. The check goes through
-    # _check_epoch_mode, which reads the table that actually OWNS the epoch
-    # bookmark (base table for cow, the delta table for merge-on-read) --
-    # checking `tokens` directly would pass vacuously in mor mode and let
-    # the stream silently skip micro-batches 0..committed_epoch.
+    # _check_epoch_mode, which reads the table that OWNS the epoch
+    # bookmarks, the delta table -- checking `tokens` would pass
+    # vacuously and let the stream silently skip micro-batches
+    # 0..committed_epoch.
     applier.epoch_mode = "stream"
     applier._check_epoch_mode()
     feed = (

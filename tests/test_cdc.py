@@ -11,6 +11,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+import stratum_spark.cdc.applier as applier_mod
 from stratum_spark.cdc import CdcApplier, generate_binlog, write_binlog
 from stratum_spark.cdc.binlog import ddl_events
 from stratum_spark.cdc.dedup import lww_dedup, lww_dedup_window
@@ -129,20 +130,24 @@ def _oracle_dlq_lsns(binlog_dir, epochs: range) -> list[int]:
     return sorted(l for l in st.dlq_lsns if lo <= l <= hi)
 
 
-def test_dlq_exactly_once_crash_after_dlq_before_merge(spark, binlog_dir, tmp_path):
-    """Crash window A: the DLQ append committed but the merge did not. The
-    replayed epoch's (bookmarked) DLQ append must be a no-op -- the DLQ lsn
-    set stays exact, no duplicates."""
+def test_dlq_exactly_once_crash_after_dlq_before_merge(spark, binlog_dir, tmp_path,
+                                                      monkeypatch):
+    """Crash window A: the DLQ append committed but the epoch commit did
+    not. The replayed epoch's (bookmarked) DLQ append must be a no-op --
+    the DLQ lsn set stays exact, no duplicates. Pinned to the feed-scan
+    DLQ route (the one pending-DDL and over-cap epochs take); the
+    observation-fed route's window is test_round6's."""
+    monkeypatch.setattr(applier_mod, "_DLQ_OBS_CAP", -1)
     wh = str(tmp_path / "whA")
     ap1 = CdcApplier(spark, wh, job_id="t", n_buckets=8, evolution=[])
     feed = spark.read.parquet(binlog_dir)
     sl0 = feed.where(F.col("lsn") <= EPOCH)
-    # run prepare only: the DLQ future commits, then "crash" before the merge
+    # run prepare only: the DLQ future commits, then "crash" before the
+    # delta commit
     prep = ap1._prepare_epoch(sl0, 0)
     prep["dlq_future"].result()
-    prep["pool"].shutdown(wait=True)
-    prep["events"].unpersist()
-    assert ap1.tokens.committed_epoch("t") == -1  # main commit never happened
+    ap1._abandon_prep(prep)
+    assert ap1.deltas.committed_epoch("t") == -1  # main commit never happened
     assert ap1.dlq.committed_epoch("t") == 0  # DLQ commit survived the crash
 
     # restart: the full backfill replays epoch 0 end-to-end
@@ -152,15 +157,18 @@ def test_dlq_exactly_once_crash_after_dlq_before_merge(spark, binlog_dir, tmp_pa
     assert got and got == _oracle_dlq_lsns(binlog_dir, range(0, N_EVENTS // EPOCH))
 
 
-def test_dlq_exactly_once_crash_after_merge_before_dlq(spark, binlog_dir, tmp_path):
-    """Crash window B: the merge committed but the DLQ flush was lost. The
-    resumed backfill's catch-up must restore exactly that epoch's DLQ rows."""
+def test_dlq_exactly_once_crash_after_merge_before_dlq(spark, binlog_dir, tmp_path,
+                                                      monkeypatch):
+    """Crash window B: the epoch commit landed but the DLQ flush was lost.
+    The resumed backfill's catch-up must restore exactly that epoch's DLQ
+    rows. Pinned to the feed-scan DLQ route, as window A is."""
+    monkeypatch.setattr(applier_mod, "_DLQ_OBS_CAP", -1)
     wh = str(tmp_path / "whB")
     ap1 = CdcApplier(spark, wh, job_id="t", n_buckets=8, evolution=[])
     # simulate the lost DLQ flush: epoch 0 runs with the DLQ append stubbed out
     ap1._append_dlq_epoch = lambda events, epoch: 0
     ap1.run_backfill(binlog_dir, epoch_size=EPOCH, stop_after=1)
-    assert ap1.tokens.committed_epoch("t") == 0
+    assert ap1.deltas.committed_epoch("t") == 0
     assert ap1.dlq.committed_epoch("t") == -1 and ap1.dlq.row_count() == 0
 
     ap2 = CdcApplier(spark, wh, job_id="t", n_buckets=8, evolution=[])

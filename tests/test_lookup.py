@@ -67,7 +67,7 @@ def test_cli_lookup_and_changes_verbs(spark, tmp_path, capsys):
     args = ["--warehouse", wh, "--events-hint", str(N_EVENTS),
             "--n-buckets", "8", "--job-id", "lk"]
     assert main(["backfill", "--binlog", binlog, "--epoch-size", "250",
-                 "--write-mode", "cow", *args]) == 0
+                 "--compact-ratio", "0", *args]) == 0
     capsys.readouterr()
     ap = CdcApplier(spark, wh, job_id="lk", n_buckets=8, write_mode="cow",
                     n_events_hint=N_EVENTS)
@@ -75,18 +75,18 @@ def test_cli_lookup_and_changes_verbs(spark, tmp_path, capsys):
     doc = sorted(want)[0]
     v_first = 2  # create=v1, first epoch merge commits v2
 
-    assert main(["lookup", "--doc", doc, "--json", "--write-mode", "cow",
+    assert main(["lookup", "--doc", doc, "--json", "--compact-ratio", "0",
                  *args]) == 0
     rows = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert len(rows) == 1 and rows[0]["doc_id"] == doc
     assert rows[0]["n_tok"] == want[doc]["n_tok"]
 
-    assert main(["lookup", "--doc", "never-a-doc", "--write-mode", "cow",
+    assert main(["lookup", "--doc", "never-a-doc", "--compact-ratio", "0",
                  *args]) == 1
     capsys.readouterr()
 
     assert main(["changes", "--from-version", str(v_first), "--json",
-                 "--write-mode", "cow", *args]) == 0
+                 "--compact-ratio", "0", *args]) == 0
     payload = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert payload["total"] > 0 and len(payload["rows"]) <= 20
     assert all("_change_type" in r for r in payload["rows"])

@@ -299,8 +299,7 @@ def test_cli_binpack_verb(spark, tmp_path, capsys):
     feed = _mk_feed(spark, tmp_path)
     wh = str(tmp_path / "whbp")
     assert main(["backfill", "--warehouse", wh, "--binlog", feed,
-                 "--job-id", "m", "--epoch-size", "300",
-                 "--write-mode", "mor"]) == 0
+                 "--job-id", "m", "--epoch-size", "300"]) == 0
     assert main(["binpack", "--warehouse", wh, "--job-id", "m",
                  "--small-mb", "1", "--target-mb", "64"]) == 0
     out = capsys.readouterr().out
@@ -499,7 +498,7 @@ def test_rebucket_midway_through_cdc_converges(spark, tmp_path, capsys):
     ap.run_backfill(feed, epoch_size=300, stop_after=2)  # epochs 0-1 of 3
 
     assert main(["rebucket", "--warehouse", wh, "--job-id", "r",
-                 "--write-mode", "cow", "--to", "32"]) == 0
+                 "--compact-ratio", "0", "--to", "32"]) == 0
     out = capsys.readouterr().out
     assert "8 -> 32" in out and "metadata-only" in out
 

@@ -37,6 +37,10 @@ def test_mor_matches_cow_and_oracle(spark, tmp_path):
     cow = CdcApplier(spark, str(tmp_path / "wc"), job_id="j", n_buckets=8,
                      n_events_hint=N_EVENTS, write_mode="cow")
     cow.run_backfill(binlog, epoch_size=200)
+    # the cow preset folds every epoch: no delta rows remain and the base
+    # alone holds the state
+    assert cow.deltas.row_count() == 0
+    got_base = _rows(cow.tokens.read().drop("lsn"))
     mor = CdcApplier(spark, str(tmp_path / "wm"), job_id="j", n_buckets=8,
                      n_events_hint=N_EVENTS, write_mode="mor")
     mor.run_backfill(binlog, epoch_size=200, compact_every=3)
@@ -47,9 +51,10 @@ def test_mor_matches_cow_and_oracle(spark, tmp_path):
 
     st = replay_binlog(binlog)
     want = state_as_records(st, table_schema_ver=mor.epoch_state()["schema_ver"])
-    assert set(got_mor) == set(want)
+    assert set(got_mor) == set(want) == set(got_base)
     for k, w in want.items():
         assert got_mor[k]["tokens"] == list(w["tokens"]), k
+        assert got_base[k]["tokens"] == list(w["tokens"]), k
 
 
 def test_mor_kill_resume_and_replay(spark, tmp_path):
@@ -477,3 +482,50 @@ def test_binary_tokens_warehouse_is_rejected(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="packed binary"):
         CdcApplier(spark, str(wh), write_mode="mor")
+
+
+def test_legacy_base_bookmarks_seed_the_delta_table(spark, tmp_path):
+    """A warehouse written by the earlier copy-on-write engine keeps its
+    job bookmarks on the base and has no delta table. Opening it creates
+    the delta table with those bookmarks (not the compactor's own), so a
+    resumed backfill continues where the base stopped instead of
+    replaying the feed, and a stream-mode bookmark still trips the
+    cross-mode guard."""
+    import pytest
+
+    from stratum_spark.cdc import TOKENS_DDL, lww_dedup
+    from stratum_spark.lake import LakeTable
+
+    binlog = _mk_feed(spark, tmp_path, with_evolution=False)
+    wh = tmp_path / "wl"
+    base = LakeTable.create(
+        spark, str(wh / "tokens"), TOKENS_DDL, key="doc_id", n_buckets=8,
+        properties={"schema_ver": "0"},
+    )
+    # epochs 0-1 (epoch_size 200) applied the legacy way: validated,
+    # LWW-deduped events in one lsn-guarded MERGE carrying the bookmark
+    head = spark.read.parquet(binlog).where(F.col("lsn") <= 400).where(
+        (F.col("op") == "D") | F.col("n_tok").eqNullSafe(F.size("tokens"))
+    )
+    batch = lww_dedup(head.select("doc_id", "op", "lsn", "tokens", "n_tok", "source"))
+    base.merge(batch, op_col="op", job_id="lg", epoch=1, lsn_max=400,
+               precedence_col="lsn")
+    base.merge(batch.limit(0), op_col="op", job_id="lg::compact", epoch=1)
+    base.merge(batch.limit(0), op_col="op", job_id="lg_s", epoch=3,
+               epoch_mode="stream")
+    assert not LakeTable.exists(str(wh / "tokens_deltas"))
+
+    ap = CdcApplier(spark, str(wh), job_id="lg", n_buckets=8, evolution=[])
+    assert ap.epoch_state() == {"epoch": 1, "lsn": 400, "schema_ver": 0}
+    assert set(ap.deltas.snapshot().committed) == {"lg", "lg_s"}
+    stats = ap.run_backfill(binlog, epoch_size=200)
+    assert stats and min(s.epoch for s in stats) == 2  # epochs 0-1 skipped
+    want = state_as_records(replay_binlog(binlog), table_schema_ver=0)
+    got = _rows(ap.state())
+    assert set(got) == set(want)
+    for k, w in want.items():
+        assert got[k]["tokens"] == list(w["tokens"]), k
+
+    ap_s = CdcApplier(spark, str(wh), job_id="lg_s", n_buckets=8, evolution=[])
+    with pytest.raises(ValueError, match="mode"):
+        ap_s._check_epoch_mode()

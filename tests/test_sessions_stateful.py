@@ -1,14 +1,11 @@
-"""Sessionization (batch window form) + stateful streaming operator tests."""
+"""Sessionization (batch window form) + IVF top-k tests."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from stratum_spark.cdc import generate_binlog, write_binlog
 from stratum_spark.operators.sessions import sessionize
 from stratum_spark.operators.similarity import brute_force_topk, ivf_topk
-from stratum_spark.streaming.stateful import running_source_stats
-from stratum_spark.cdc.binlog import BINLOG_DDL
 
 
 def test_sessionize_gap_semantics(spark):
@@ -33,53 +30,6 @@ def test_sessionize_on_events_table(spark, sf_dir):
     out = sessionize(ev, gap_minutes=30)
     total = out.agg(F.sum("n_events")).collect()[0][0]
     assert total == ev.count()  # partition of all events into sessions
-
-
-def test_stateful_running_stats_stream(spark, tmp_path):
-    feed = generate_binlog(spark, n_docs=100, n_events=600, seed=9, max_tokens=8,
-                           with_evolution=False)
-    write_binlog(feed, str(tmp_path / "binlog"), n_chunks=3)
-
-    stream = (
-        spark.readStream.schema(BINLOG_DDL)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "binlog"))
-    )
-    q = (
-        running_source_stats(stream)
-        .writeStream.format("memory")
-        .queryName("src_stats")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    # latest state per source = the last update emitted
-    got = {
-        r["source"]: r
-        for r in spark.sql(
-            "SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY source "
-            "ORDER BY n_events DESC) rn FROM src_stats) WHERE rn = 1"
-        ).collect()
-    }
-    want = {
-        r["source"]: r
-        for r in feed.groupBy("source")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.coalesce(F.col("n_tok").cast("long"), F.lit(0))).alias("total_tokens"),
-            F.countDistinct("doc_id").alias("n_docs"),
-        )
-        .collect()
-    }
-    assert set(got) == set(want)
-    for s, w in want.items():
-        assert got[s]["n_events"] == w["n_events"], s
-        assert got[s]["total_tokens"] == w["total_tokens"], s
-        # docs re-seen across micro-batches must not double-count: the KMV
-        # sketch is exact below its K=256 capacity (100 docs here)
-        assert got[s]["n_docs_seen"] == w["n_docs"], s
 
 
 def test_ivf_topk_recall(spark, sf_dir):

@@ -39,28 +39,6 @@ def test_ngram_df_cap_skew_proof(spark):
     assert got == want
 
 
-def test_touched_bucket_discovery_driver_volume(spark, tmp_path):
-    """Worst case (every input partition touches every bucket): the epoch
-    stats job must hand the driver O(partitions + n_buckets) rows, never
-    partitions x n_buckets (the B=65536, 10^4-partition 100 TB sizing
-    would otherwise return ~10^8 ints to the driver)."""
-    n_buckets = 16
-    ap = CdcApplier(spark, str(tmp_path / "whv"), job_id="vol",
-                    n_buckets=n_buckets, evolution=[])
-    feed = generate_binlog(spark, n_docs=64, n_events=2000, seed=5,
-                           with_evolution=False)
-    events = feed.repartition(24)
-    prep = ap._prepare_epoch(events, 0)
-    parts = prep["parts_future"].result()
-    assert len(parts) <= 24 + n_buckets
-    buck_rows = [p for p in parts if p["partition_id"] is None]
-    assert 1 <= len(buck_rows) <= n_buckets
-    assert all(0 <= int(p["b"]) < n_buckets for p in buck_rows)
-    stats = ap._commit_epoch(prep)
-    assert not stats.skipped and stats.rows_in == events.count()
-    ap.flush_lineage()
-
-
 def test_extreme_hot_key_dedup_and_apply(spark, tmp_path):
     # 60% of events on ~3 hot ids (generator: hot set = n_docs//1000 >= 1)
     feed = generate_binlog(

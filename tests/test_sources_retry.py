@@ -1,11 +1,10 @@
-"""Sources (CSV typed read, type mapping) + retry/circuit-breaker tests."""
+"""Sources (CSV typed read, type mapping, JDBC) tests."""
 
 from __future__ import annotations
 
 import pytest
 
 from stratum_spark.cdc.dedup import lww_dedup, lww_dedup_salted
-from stratum_spark.cdc.retry import CircuitBreaker, CircuitOpen, with_retry
 from stratum_spark.sources import mysql_type_to_spark, pg_type_to_spark, read_csv_typed
 
 
@@ -46,37 +45,6 @@ def test_pg_type_mapping():
     assert pg_type_to_spark("timestamptz")[0] == "timestamp"
     assert pg_type_to_spark("uuid")[0] == "string"
     assert pg_type_to_spark("bigserial")[0] == "bigint"
-
-
-def test_retry_succeeds_after_failures():
-    calls = {"n": 0}
-
-    def flaky():
-        calls["n"] += 1
-        if calls["n"] < 3:
-            raise RuntimeError("transient")
-        return "ok"
-
-    assert with_retry(flaky, attempts=4, base_backoff_s=0.0) == "ok"
-    assert calls["n"] == 3
-
-
-def test_circuit_breaker_opens_and_recovers():
-    sleeps: list[float] = []
-    cb = CircuitBreaker(failure_threshold=2, base_backoff_s=0.01, sleep=sleeps.append)
-
-    def always_fail():
-        raise RuntimeError("down")
-
-    with pytest.raises(RuntimeError):
-        with_retry(always_fail, attempts=2, base_backoff_s=0.0, breaker=cb)
-    # threshold reached -> circuit open
-    with pytest.raises(CircuitOpen):
-        with_retry(always_fail, attempts=1, breaker=cb)
-    # after the window passes, the breaker admits traffic again
-    cb.open_until = 0.0
-    assert with_retry(lambda: "up", attempts=1, breaker=cb) == "up"
-    assert cb.consecutive_failures == 0
 
 
 def test_salted_dedup_equivalent(spark):
