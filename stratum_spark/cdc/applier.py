@@ -45,7 +45,6 @@ from pyspark.sql import functions as F
 from stratum_spark.cdc.binlog import SCHEMA_EVOLUTION
 from stratum_spark.cdc.dedup import lww_dedup
 from stratum_spark.lake import LakeTable, MergeStats
-from stratum_spark.lake.table import _successor
 
 # feed-split sizing's epoch byte estimate: fixed per-event bytes (doc_id,
 # lsn, ts, op, source, lang, schema_ver + row overhead) plus 4 B per token
@@ -193,21 +192,19 @@ class CdcApplier:
         if LakeTable.exists(del_root):
             self.deltas = LakeTable.load(spark, del_root)
         else:
+            # a warehouse written by the earlier copy-on-write engine keeps
+            # its job bookmarks on the base: the delta table's first commit
+            # carries them (not the compactor's own), so a resume continues
+            # instead of replaying
             base = self.tokens.snapshot()
             self.deltas = LakeTable.create(
                 spark, del_root, base.schema.ddl() + ", op string",
                 key="doc_id", n_buckets=base.n_buckets,
+                committed={
+                    j: m for j, m in base.committed.items()
+                    if not j.endswith("::compact")
+                },
             )
-            # a warehouse written by the earlier copy-on-write engine keeps
-            # its job bookmarks on the base: carry them over (not the
-            # compactor's own) so a resume continues instead of replaying
-            marks = {
-                j: m for j, m in base.committed.items()
-                if not j.endswith("::compact")
-            }
-            if marks:
-                snap = self.deltas.snapshot()
-                self.deltas._write_snapshot(_successor(snap, committed=marks))
         # lineage appends run on a dedicated single worker thread: they are
         # off the epoch critical path (nothing in the loop reads lineage)
         # and the single thread serializes snapshot commits on the lineage
@@ -718,40 +715,36 @@ class CdcApplier:
         from datetime import datetime, timezone
 
         now = datetime.now(timezone.utc).replace(tzinfo=None)
-        lineage_rows: list[dict] = []
-        if self.lineage_detail and fold:
+        if not self.lineage_detail:
+            spans = []
+        elif fold:
             # stats-folded epochs record per-FILE offset ranges: the lsn
             # bounds come from the parquet footer statistics the manifest
             # pass already read (FileEntry.stats), so the detail rows are
             # physical provenance -- delta file -> (lsn_min, lsn_max, rows)
             # -- at zero extra jobs. partition_id numbers the epoch's files.
-            for i, e in enumerate(entries):
-                b = (e.stats or {}).get("lsn")
-                lineage_rows.append(
-                    {
-                        "batch_id": batch_id,
-                        "epoch": epoch,
-                        "partition_id": i,
-                        "lsn_min": int(b[0]) if b else None,
-                        "lsn_max": int(b[1]) if b else None,
-                        "rows_in": int(e.rows),
-                        "committed_at": now,
-                    }
-                )
-        elif self.lineage_detail and parts:
-            for p in parts:
-                lineage_rows.append(
-                    {
-                        "batch_id": batch_id,
-                        "epoch": epoch,
-                        "partition_id": int(p["partition_id"]),
-                        "lsn_min": int(p["lsn_min"]),
-                        "lsn_max": int(p["lsn_max"]),
-                        "rows_in": int(p["rows_in"]),
-                        "committed_at": now,
-                    }
-                )
-        n_applied = mstats.rows_inserted + mstats.rows_updated + mstats.rows_deleted
+            spans = [
+                (i, *((e.stats or {}).get("lsn") or (None, None)), e.rows)
+                for i, e in enumerate(entries)
+            ]
+        else:
+            spans = [
+                (p["partition_id"], p["lsn_min"], p["lsn_max"], p["rows_in"])
+                for p in parts
+            ]
+        lineage_rows = [
+            {
+                "batch_id": batch_id,
+                "epoch": epoch,
+                "partition_id": int(pid),
+                "lsn_min": None if lo is None else int(lo),
+                "lsn_max": None if hi is None else int(hi),
+                "rows_in": int(n),
+                "committed_at": now,
+            }
+            for pid, lo, hi, n in spans
+        ]
+        n_applied = mstats.rows_inserted
         self._tune_feed_split(rows_in * EVENT_FIXED_BYTES + sum_tok * 4)
         lineage_rows.append(
             {
@@ -1116,7 +1109,7 @@ class CdcApplier:
         base = base_of()
         if not snap.files:
             return base
-        deltas = self.deltas._read_entries(snap.files, snap)
+        deltas = self.deltas.read(version=snap.version)
         if doc_id is not None:
             deltas = deltas.where(F.col("doc_id") == doc_id)
         merged = lww_dedup(
@@ -1207,7 +1200,10 @@ class CdcApplier:
         over a delta set that was already partially applied is a no-op row
         by row (LWW dedup picks each key's max-lsn event; the merge's lsn
         precedence guard drops stale matches; deletes of missing keys do
-        nothing). Runs from the apply loop -- not concurrent with appends."""
+        nothing). Runs from the apply loop -- not concurrent with appends.
+        Raises ValueError if the base already folded a later epoch of the
+        job than the deltas hold (a delta table rolled back without its
+        base): folding would skip the replayed rows and truncate them."""
         # barrier: async receipt jobs (streaming mode) read the epoch's
         # delta files by direct path -- drain them before the fold/truncate
         # makes those files eligible for expiry
@@ -1215,9 +1211,16 @@ class CdcApplier:
         target_epoch = self.deltas.committed_epoch(self.job_id)
         if target_epoch < 0:
             return None
+        folded = self.tokens.committed_epoch(f"{self.job_id}::compact")
+        if folded > target_epoch:
+            raise ValueError(
+                f"base already folded epoch {folded} of job {self.job_id!r}, "
+                f"the deltas only epoch {target_epoch}: roll both back with "
+                "CdcApplier.rollback()"
+            )
         snap = self.deltas.snapshot()
         deduped = lww_dedup(
-            self.deltas._read_entries(snap.files, snap), key="doc_id", order_col="lsn"
+            self.deltas.read(version=snap.version), key="doc_id", order_col="lsn"
         )
         mstats = self.tokens.merge(
             deduped,
@@ -1226,40 +1229,57 @@ class CdcApplier:
             epoch=target_epoch,
             precedence_col="lsn",
         )
-        # truncate: one metadata-only commit of the folded snapshot's
-        # successor with zero files (bookmarks carried over), through the
-        # CAS every commit takes -- an append that slipped in since the
-        # read fails it instead of being dropped
-        self.deltas._write_snapshot(_successor(snap, files=[]))
+        # truncate the snapshot the fold read: an append that slipped in
+        # since fails the CAS instead of being dropped
+        self.deltas.truncate(snap)
         self.compactions_run += 1
         return mstats
+
+    def rollback(self, version: int) -> int:
+        """Roll the job back to the delta table's snapshot `version`, and
+        the base to its newest version with the same columns that folded
+        no later epoch of the job: base + deltas is then the state as of
+        that epoch, and a resumed backfill replays from it. The deltas
+        commit first; a crash before the base's commit leaves the base
+        ahead, which compact_deltas() refuses until this is re-run.
+        Returns the delta table's new version."""
+        target = self.deltas.snapshot(version)
+        epoch = target.committed.get(self.job_id, {}).get("epoch", -1)
+        cols = {f.name: f.type for f in target.schema.fields if f.name != "op"}
+        for v in range(self.tokens.snapshot().version, 0, -1):
+            base = self.tokens.snapshot(v)  # FileNotFoundError once expired
+            folded = base.committed.get(f"{self.job_id}::compact", {}).get("epoch", -1)
+            if folded <= epoch and {f.name: f.type for f in base.schema.fields} == cols:
+                break
+        else:
+            raise ValueError(f"no base version matches delta version {version}")
+        new_v = self.deltas.rollback(version)
+        if v != self.tokens.snapshot().version:
+            self.tokens.rollback(v)
+        return new_v
 
     def receipt(self, n_buckets: int = 64):
         """Merkle receipt over the user-facing state (stratum `apply
         --integrity`, crates/engine-processing/src/producer/components/
         integrity.rs); persists alongside the table metadata."""
-        import json as _json
-
         from stratum_spark.verify import merkle_receipt
 
         r = merkle_receipt(self.state(), key="doc_id", n_buckets=n_buckets)
         path = os.path.join(self.warehouse, "tokens", "_meta", "receipt.json")
         tmp = path + ".tmp"
         with open(tmp, "w") as fh:
-            _json.dump(r.to_json(), fh)
+            json.dump(r.to_json(), fh)
         os.replace(tmp, path)
         return r
 
     def verify(self):
         """Re-read the destination and compare against the stored receipt
         (stratum `verify`, crates/engine-verify/src/verifier.rs:40-53)."""
-        import json as _json
-
         from stratum_spark.verify import Receipt, verify_receipt
 
         path = os.path.join(self.warehouse, "tokens", "_meta", "receipt.json")
         with open(path) as fh:
-            r = Receipt.from_json(_json.load(fh))
+            r = Receipt.from_json(json.load(fh))
         return verify_receipt(self.state(), "doc_id", r)
 
     def epoch_state(self) -> dict:

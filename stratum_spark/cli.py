@@ -399,14 +399,16 @@ def cmd_gc(args) -> int:
 
 
 def cmd_rollback(args) -> int:
-    """Roll the delta (bookmark-carrying) table back to an earlier
-    snapshot version. Exactly-once bookmarks roll back with the data, so a
-    subsequent backfill replays from the rolled-back epoch and converges."""
+    """Roll the job back to an earlier snapshot version of its delta
+    (bookmark-carrying) table; the base rolls back to the matching version
+    (CdcApplier.rollback). Exactly-once bookmarks roll back with the data,
+    so a subsequent backfill replays from the rolled-back epoch and
+    converges."""
     ap = _applier(args)
     try:
-        new_v = ap.deltas.rollback(args.version)
-    except FileNotFoundError:
-        print(f"version {args.version} not found (expired or never existed)")
+        new_v = ap.rollback(args.version)
+    except (FileNotFoundError, ValueError) as e:
+        print(f"cannot roll back to v{args.version}: {e}")
         return 1
     snap = ap.deltas.snapshot()
     bk = snap.committed.get(args.job_id, {})
@@ -579,7 +581,7 @@ def main(argv: list[str] | None = None) -> int:
                    help="also expire snapshots, keeping the newest N per table")
     p.set_defaults(fn=cmd_gc)
 
-    p = sub.add_parser("rollback", help="roll the bookmark table back to a snapshot version")
+    p = sub.add_parser("rollback", help="roll the job back to a snapshot version of its delta table")
     _add_applier_args(p)
     p.add_argument("--version", type=int, required=True)
     p.set_defaults(fn=cmd_rollback)

@@ -328,7 +328,10 @@ class LakeTable:
         key: str | None = None,
         n_buckets: int = 16,
         properties: dict[str, str] | None = None,
+        committed: dict[str, dict] | None = None,
     ) -> "LakeTable":
+        """New table at `root` whose first snapshot holds no files; its
+        `committed` bookmarks, if given, land in that same O_EXCL commit."""
         if isinstance(schema, str):
             schema = TableSchema.from_ddl(schema)
         root = os.path.abspath(root)
@@ -342,6 +345,7 @@ class LakeTable:
             key=key,
             key_field_id=key_fid,
             n_buckets=n_buckets,
+            committed=committed or {},
             properties=properties or {},
             timestamp_ms=int(time.time() * 1000),
         )
@@ -961,6 +965,13 @@ class LakeTable:
         return self.commit_epoch_files(
             entries, job_id, epoch, lsn_max=lsn_max, epoch_mode=epoch_mode
         )
+
+    def truncate(self, expected: Snapshot) -> None:
+        """Metadata-only commit of `expected`'s successor with no files
+        (bookmarks, schema and properties carried over). The CAS raises
+        CommitConflict if any commit landed after `expected`, so rows
+        appended since the caller read it are never dropped."""
+        self._write_snapshot(_successor(expected, files=[]))
 
     def overwrite(self, df: DataFrame) -> int:
         """Replace write-mode: new snapshot referencing only the new files."""

@@ -318,6 +318,7 @@ def test_every_writer_commits_one_successor_snapshot(spark, tmp_path):
         ("rename_column", lambda: t.rename_column("note", "memo"),
          {"schema_id", "schemas"}),
         ("rebucket", lambda: t.rebucket(8), {"n_buckets", "files"}),
+        ("truncate", lambda: t.truncate(t.snapshot()), {"files"}),
     ]
     for name, op, changes in ops:
         before = t.snapshot()
@@ -334,3 +335,13 @@ def test_every_writer_commits_one_successor_snapshot(spark, tmp_path):
     before = t.snapshot()
     assert t.rollback(rollback_to) == before.version + 1
     assert fields(t.snapshot()) == fields(t.snapshot(rollback_to))
+
+    # truncate is a CAS on the snapshot it was given: a commit that landed
+    # after it fails the truncate instead of losing its files
+    from stratum_spark.lake.table import CommitConflict
+
+    stale = t.snapshot()
+    t.append(batch(300, 310))
+    with pytest.raises(CommitConflict):
+        t.truncate(stale)
+    assert t.row_count() > 0

@@ -145,6 +145,68 @@ def test_rollback_then_replay_converges(spark, tmp_path):
     assert _rows(ap2.state()) == got
 
 
+def test_cow_rollback_moves_base_with_deltas(spark, tmp_path):
+    """Under the copy-on-write preset every epoch is folded into the base,
+    so a rollback must move the base with the deltas: the base alone would
+    otherwise still hold the later epochs (deleted documents would come
+    back through the restored delta rows), and a replay would find its
+    epochs already folded and lose them at the truncate."""
+    import pytest
+
+    binlog = _mk_feed(spark, tmp_path)
+    wh = str(tmp_path / "wh")
+    ap = CdcApplier(spark, wh, job_id="j", n_buckets=8, evolution=[])
+    ap.run_backfill(binlog, epoch_size=300)  # 3 epochs, each folded
+    assert ap.deltas.row_count() == 0
+    assert ap.tokens.committed_epoch("j::compact") == 2
+    v_epoch0 = next(
+        s.version for s in ap.deltas.history()
+        if s.committed.get("j", {}).get("epoch") == 0
+    )
+    at_epoch0 = state_as_records(replay_binlog(binlog, max_lsn=300), table_schema_ver=0)
+
+    def check(got, want):
+        assert set(got) == set(want)
+        for k, w in want.items():
+            assert got[k]["tokens"] == list(w["tokens"]), k
+
+    # the deltas alone rolled back (a crash between the rollback's two
+    # commits): the fold refuses instead of truncating the replay
+    ap.deltas.rollback(v_epoch0)
+    with pytest.raises(ValueError, match="folded epoch 2"):
+        ap.compact_deltas()
+    # re-running the rollback completes it: no later epoch shows through
+    ap.rollback(v_epoch0)
+    assert ap.deltas.committed_epoch("j") == 0
+    assert ap.tokens.committed_epoch("j::compact") == 0
+    check(_rows(ap.state()), at_epoch0)
+
+    # the same feed replays to the full state
+    ap2 = CdcApplier(spark, wh, job_id="j", n_buckets=8, evolution=[])
+    assert [s.epoch for s in ap2.run_backfill(binlog, epoch_size=300)] == [1, 2]
+    check(_rows(ap2.state()), state_as_records(replay_binlog(binlog), table_schema_ver=0))
+
+    # a corrected feed (later epochs' tokens reversed, some events
+    # dropped) replays over the same rollback to ITS state, in the base
+    feed = spark.read.parquet(binlog)
+    late = F.col("lsn") > 300
+    fixed = str(tmp_path / "binlog_fixed")
+    write_binlog(
+        feed.where(~(late & (F.col("lsn") % 5 == 0))).withColumn(
+            "tokens", F.when(late, F.reverse("tokens")).otherwise(F.col("tokens"))
+        ),
+        fixed, n_chunks=3,
+    )
+    want = state_as_records(replay_binlog(fixed), table_schema_ver=0)
+    assert want != state_as_records(replay_binlog(binlog), table_schema_ver=0)
+    ap2.rollback(v_epoch0)
+    check(_rows(ap2.state()), at_epoch0)
+    ap3 = CdcApplier(spark, wh, job_id="j", n_buckets=8, evolution=[])
+    assert [s.epoch for s in ap3.run_backfill(fixed, epoch_size=300)] == [1, 2]
+    check(_rows(ap3.state()), want)
+    check(_rows(ap3.tokens.read()), want)
+
+
 def test_cli_gc_and_rollback_verbs(spark, tmp_path, capsys):
     binlog = _mk_feed(spark, tmp_path)
     wh = str(tmp_path / "wh")

@@ -518,6 +518,7 @@ def test_legacy_base_bookmarks_seed_the_delta_table(spark, tmp_path):
     ap = CdcApplier(spark, str(wh), job_id="lg", n_buckets=8, evolution=[])
     assert ap.epoch_state() == {"epoch": 1, "lsn": 400, "schema_ver": 0}
     assert set(ap.deltas.snapshot().committed) == {"lg", "lg_s"}
+    assert ap.deltas.snapshot().version == 1  # carried in the create commit
     stats = ap.run_backfill(binlog, epoch_size=200)
     assert stats and min(s.epoch for s in stats) == 2  # epochs 0-1 skipped
     want = state_as_records(replay_binlog(binlog), table_schema_ver=0)
