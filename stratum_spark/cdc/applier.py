@@ -10,7 +10,8 @@ the distributed analog of stratum's per-batch consumer protocol
                            (metadata-only; stratum's 3-phase ordering,
                            crates/engine-schema/src/plan.rs:259-288)
   3. validation split   -- rows violating n_tok == size(tokens) go to the
-                           DLQ table, never to the target (stratum
+                           DLQ table, never to the target; the DLQ
+                           commits just before the epoch does (stratum
                            validation action 'skip' + failed-row writer,
                            crates/engine-processing/src/transform/
                            failed_row_writer.rs:16-120)
@@ -23,13 +24,15 @@ the distributed analog of stratum's per-batch consumer protocol
                            bookmark commits atomically with the files;
                            the compaction policy later folds the deltas
                            into the base with the lsn-guarded MERGE
-  7. lineage + metrics  -- per-file or per-partition offset ranges + counts
+  7. lineage + metrics  -- per-delta-file offset ranges + epoch counts
                            appended to the lineage table (FIXTURES.md §4;
                            stratum Batch{cursor,next} + MetricsSnapshot,
                            crates/engine-infra/src/metrics.rs:22-31)
 
-All steps are DataFrame expressions; the only driver-side data are the
-epoch's distinct schema versions and aggregate counts.
+All steps are DataFrame expressions. Every epoch's stats and (capped)
+invalid rows ride one Observation on the delta write's own scan, and the
+invalid rows reach the DLQ through a driver-side write; the only other
+driver-side datum is the max schema_ver of an epoch with pending DDL.
 """
 
 from __future__ import annotations
@@ -39,7 +42,7 @@ import os
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from stratum_spark.cdc.binlog import SCHEMA_EVOLUTION
@@ -90,8 +93,6 @@ class CdcApplier:
         evolution: list[dict] | None = None,
         n_events_hint: int | None = None,
         validate: bool = True,
-        lineage_detail: bool = True,
-        integrity: bool = True,
         write_mode: str = "cow",
         auto_compact_ratio: float | None = None,
     ):
@@ -99,7 +100,7 @@ class CdcApplier:
         # per epoch from OBSERVED epoch bytes, never a host-tuned constant
         self._feed_split: int | None = None
         self._feed_bytes_ref: int = 0  # decaying max of observed epoch bytes
-        # streaming receipts resolved from the write job's own observation
+        # epoch receipts resolved from the write job's own observation
         # (the zero-extra-job path) vs recomputed from files -- counted so
         # tests can pin that the observation path actually engages
         self._receipts_from_obs = 0
@@ -128,14 +129,6 @@ class CdcApplier:
             auto_compact_ratio = 0.0
         self.auto_compact_ratio = auto_compact_ratio
         self.compactions_run = 0
-        self.lineage_detail = lineage_detail
-        # integrity=True persists a per-epoch batch receipt (commutative
-        # digest over the applied change rows) alongside the table metadata,
-        # mirroring the reference's in-run receipt persistence
-        # (crates/engine-processing/src/producer/components/integrity.rs:75-89).
-        # The digest aggregates piggyback on the delta write's scan of the
-        # deduped batch via Observation -- zero extra Spark jobs.
-        self.integrity = integrity
         # epoch namespace: 'batch' (lsn-range epochs) or 'stream' (Spark
         # batch-id epochs) -- recorded in the bookmark so a cross-mode
         # resume fails loudly (streaming/driver.py guard)
@@ -213,20 +206,6 @@ class CdcApplier:
 
         self._lineage_pool = ThreadPoolExecutor(max_workers=1)
         self._lineage_futures: list = []
-        # DLQ appends get their OWN single worker for a sharper reason than
-        # lineage: the DLQ table's exactly-once bookmark is monotonic, so
-        # two overlapped epochs racing commit_epoch_files is not merely a
-        # CommitConflict retry problem -- if epoch N+1's commit lands first,
-        # epoch N's commit sees `epoch <= last` and silently drops N's rows
-        # with no way for _dlq_catchup to repair them (the bookmark already
-        # passed N). The deep-pipelined backfill submits epoch N+1's DLQ
-        # append (from the prefetcher's _prepare_epoch) while epoch N's is
-        # still in flight, so the race is on the default path. Because
-        # _prepare_epoch calls are strictly epoch-ordered (the prefetcher is
-        # itself single-worker and the loop joins it before submitting the
-        # next epoch), funneling every DLQ append through this one worker
-        # guarantees commits land in submission == epoch order.
-        self._dlq_pool = ThreadPoolExecutor(max_workers=1)
         # last epoch's DLQ row count: gates whether the next epoch's DLQ
         # rides the write observation (see _dlq_obs_gate)
         self._last_bad_count: int | None = None
@@ -239,8 +218,8 @@ class CdcApplier:
             f.result()
 
     def _binpack_and_expire(self, table) -> dict:
-        """Periodic metadata-table maintenance, run ON the table's own
-        single writer worker (serialized with its appends): bin-pack the
+        """Periodic metadata-table maintenance, run on the thread that
+        appends to the table (serialized with its appends): bin-pack the
         per-epoch small files (driver-side pyarrow path -- zero Spark
         jobs), then expire history down to _META_KEEP versions so the
         superseded pre-pack files and the per-epoch
@@ -335,25 +314,25 @@ class CdcApplier:
         return (F.col("op") != "D") & ~F.col("n_tok").eqNullSafe(F.size("tokens"))
 
     @staticmethod
-    def _dlq_project(bad: DataFrame, size_col) -> DataFrame:
-        """The DLQ row shape, shared by the feed-scan path (size_col =
-        size(tokens)) and the observation path (size_col = the collected
-        size), so both paths write identical DLQ bytes."""
-        return bad.select(
+    def _dlq_cols() -> list:
+        """The DLQ row shape over raw feed rows, shared by the feed-scan
+        frame and the write observation's collected rows, so both routes
+        write identical DLQ rows."""
+        return [
             F.col("lsn"),
             F.col("doc_id"),
             F.lit("n_tok_mismatch").alias("rule"),
             F.format_string(
-                "n_tok=%s != size(tokens)=%s", F.col("n_tok"), size_col
+                "n_tok=%s != size(tokens)=%s", F.col("n_tok"), F.size("tokens")
             ).alias("message"),
             F.to_json(F.struct("lsn", "op", "doc_id", "n_tok", "schema_ver")).alias(
                 "payload"
             ),
             F.current_timestamp().alias("failed_at"),
-        )
+        ]
 
     def _dlq_frame(self, events: DataFrame) -> DataFrame:
-        return self._dlq_project(events.where(self._bad_pred()), F.size("tokens"))
+        return events.where(self._bad_pred()).select(*self._dlq_cols())
 
     def _dlq_obs_gate(self) -> bool:
         """Should the NEXT epoch's DLQ ride the write job's observation?
@@ -364,81 +343,51 @@ class CdcApplier:
         cutoff). Per-task partials are bounded by per-task bad rows."""
         return (self._last_bad_count or 0) <= _DLQ_OBS_CAP
 
-    def _dlq_obs_worker(self, q, epoch: int) -> int:
-        """Single-worker DLQ slot for observation-fed epochs. Submitted at
-        PREPARE time so the 1-wide pool keeps DLQ appends in epoch order
-        even when a later epoch's scan-path DLQ is submitted while this
-        epoch's write is still in flight; blocks until _commit_epoch feeds
-        the frame built from the write job's own metrics. None = nothing
-        to append (abandoned epoch or a commit failure -- crash repair
-        stays _dlq_catchup's job). The wait polls the executor-framework
-        shutdown flag so a prep abandoned WITHOUT _abandon_prep (private-
-        API misuse) degrades to a bounded exit-time wait instead of
-        hanging interpreter shutdown on a parked non-daemon thread."""
-        import queue as _queue
-
-        while True:
-            try:
-                frame = q.get(timeout=60.0)
-                break
-            except _queue.Empty:
-                from concurrent.futures import thread as _cft
-
-                if getattr(_cft, "_shutdown", False):
-                    return 0
-        if frame is None:
-            return 0
-        return self._append_dlq_frame(frame, epoch)
-
-    def _abandon_prep(self, prep: dict) -> None:
-        """Release a prepared epoch once it is committed, has failed, or
-        will never be committed (pause mid-pipeline; direct _prepare_epoch
-        callers in tests): unblock an unfed DLQ worker slot so the 1-wide
-        pool never deadlocks on it."""
-        if prep.get("dlq_q") is not None and not prep.get("dlq_fed"):
-            prep["dlq_q"].put(None)
-            prep["dlq_fed"] = True
-
-    def _dlq_frame_from_rows(self, rows) -> DataFrame:
-        """Tiny DLQ frame from the write observation's collected bad rows
-        (a driver-side local relation -- no feed scan at all)."""
-        src = self.spark.createDataFrame(
-            [tuple(r) for r in rows],
-            "lsn bigint, op string, doc_id string, n_tok int, __sz int, schema_ver int",
+    def _append_dlq_rows(self, rows, epoch: int) -> int:
+        """Exactly-once DLQ append of the DLQ rows the write observation
+        collected: written driver-side with pyarrow (no Spark job, no feed
+        scan) and committed with the same (job_id, epoch) bookmark as
+        _append_dlq_epoch."""
+        if epoch <= self.dlq.committed_epoch(self.job_id):
+            return 0  # replayed: write no file the commit would orphan
+        return self.dlq.commit_epoch_files(
+            self.dlq.write_local_files([r.asDict() for r in rows]),
+            job_id=self.job_id,
+            epoch=epoch,
+            epoch_mode=self.epoch_mode,
         )
-        return self._dlq_project(src, F.col("__sz"))
 
-    def _append_dlq_frame(self, frame: DataFrame, epoch: int) -> int:
-        """Exactly-once DLQ append: the failed rows commit with a
+    def _append_dlq_epoch(self, events: DataFrame, epoch: int) -> int:
+        """Exactly-once DLQ append of the feed slice's invalid rows (the
+        feed-scan route): the failed rows commit with a
         (job_id, epoch) bookmark on the DLQ table itself, so a replayed
         epoch's DLQ write is a no-op (no duplicates after a crash between
-        the DLQ commit and the epoch commit). The opposite window -- epoch
-        committed, DLQ lost -- is closed by catch-up: run_backfill replays
+        the DLQ commit and the epoch commit, which follows it on the same
+        thread). The opposite window -- epoch committed, DLQ lost -- is
+        closed by catch-up: run_backfill replays
         lagging DLQ epochs at startup, and a streaming restart's replayed
         micro-batch hits the epoch-skip path in _prepare_epoch, which runs
         exactly this append for the skipped epoch. The bookmark advances
         even for epochs with zero failed rows so catch-up never rescans
         clean epochs."""
         return self.dlq.append_epoch(
-            frame,
+            self._dlq_frame(events),
             job_id=self.job_id,
             epoch=epoch,
             epoch_mode=self.epoch_mode,
             clustered=False,
         )
 
-    def _append_dlq_epoch(self, events: DataFrame, epoch: int) -> int:
-        return self._append_dlq_frame(self._dlq_frame(events), epoch)
-
     def _dlq_catchup(self, slice_of, upto_epoch: int) -> None:
         """Replay the DLQ side-channel for epochs the main table committed
-        but the DLQ bookmark missed (crash after the epoch commit, before the
-        DLQ flush). slice_of(epoch) -> that epoch's feed slice."""
+        but the DLQ bookmark missed (a lost DLQ append, or a warehouse
+        whose DLQ committed after the epoch). slice_of(epoch) -> that
+        epoch's feed slice."""
         if not self.validate:
             return
         start = self.dlq.committed_epoch(self.job_id) + 1
         for ep in range(start, upto_epoch + 1):
-            self._dlq_pool.submit(self._append_dlq_epoch, slice_of(ep), ep).result()
+            self._append_dlq_epoch(slice_of(ep), ep)
 
     def pause_requested(self) -> bool:
         """The CLI's `pause` verb drops a marker file in the warehouse;
@@ -449,10 +398,11 @@ class CdcApplier:
 
     # ------------------------------------------------------------------
     def apply_epoch(self, events: DataFrame, epoch: int) -> EpochStats:
-        """One epoch end-to-end: prepare (validate/dedup/stats, concurrent
-        DLQ + lineage jobs) then commit (delta commit + lineage rows). Split
-        so the backfill loop can PIPELINE: prepare epoch N+1 while committing
-        epoch N -- commits stay strictly ordered, preparation depends only on the
+        """One epoch end-to-end: prepare (DDL, validate, dedup, the write's
+        Observations) then commit (delta write, DLQ append, delta commit,
+        queued lineage rows and receipt). Split so the backfill loop can
+        PIPELINE: prepare and write epoch N+1 while committing epoch N --
+        commits stay strictly ordered, preparation depends only on the
         feed. While scripted DDL is pending the path stays serial (column
         mapping depends on the evolving table schema; the reference applies
         schema ops strictly before data, crates/engine-schema/src/plan.rs:259-288).
@@ -480,166 +430,99 @@ class CdcApplier:
         )
 
     def _prepare_epoch(self, events: DataFrame, epoch: int) -> dict | None:
-        """First half of the epoch: apply pending scripted DDL, split
-        validation failures to the DLQ (on its own worker), map columns,
-        LWW dedup, and arrange the epoch's stats. Returns the prepared
-        state for _commit_epoch, or None if the epoch is empty or already
-        committed.
+        """First half of the epoch: apply pending scripted DDL, map columns,
+        LWW dedup, and attach the epoch's Observations to the delta write.
+        Returns the prepared state for _commit_epoch, or None if the epoch
+        is empty or already committed.
 
-        An epoch with no pending DDL runs no separate stats job: an
-        Observation on the raw feed slice rides the delta write's own
-        scan, and per-file offset ranges come from the parquet footers the
-        manifest pass already reads. The stats job survives only for
-        epochs with pending scripted DDL, where the column mapping depends
-        on the batch's max schema_ver. The feed slice is re-decoded per
+        Every epoch runs the same path. One Observation on the raw feed
+        slice rides the delta write's own scan and yields the epoch's
+        stats and, under _DLQ_OBS_CAP, its invalid rows; a second one on
+        the deduped batch yields the receipt digest. The one extra job is
+        a max(schema_ver) probe, run only while scripted DDL is pending:
+        the column mapping depends on it. The feed slice is re-decoded per
         consumer (measured faster than caching it, BASELINE.md round 3),
         and the deduped batch is consumed only by the write, so it stays
         lazy."""
+        from stratum_spark.verify.hashing import (
+            canonical_hash_col,
+            commutative_digest_aggs,
+        )
+
         t0 = time.time()
         if epoch <= self.deltas.committed_epoch(self.job_id):
             # replayed epoch (streaming restart redelivers the last batch):
-            # the main commit is skipped, but a crash between the delta
-            # commit and the DLQ flush may have lost this epoch's DLQ rows
-            # -- the bookmarked append below restores them (no-op if the
-            # DLQ commit survived)
+            # the main commit is skipped, but a lost DLQ append may have
+            # left this epoch's DLQ rows behind -- the bookmarked append
+            # below restores them (no-op if the DLQ commit survived)
             if self.validate and epoch > self.dlq.committed_epoch(self.job_id):
-                # through the single DLQ worker (ordering vs in-flight
-                # appends from overlapped epochs), but waited here -- the
-                # replay path is synchronous
-                self._dlq_pool.submit(self._append_dlq_epoch, events, epoch).result()
+                self._append_dlq_epoch(events, epoch)
             return None
+        if self.evolution_pending():
+            ver = events.agg(F.max("schema_ver")).first()[0]
+            if ver is None:
+                return None  # empty slice
+            self._evolve_to(int(ver))
 
         bad_pred = self._bad_pred()
-        dlq_q = None
-        ok = False
-        try:
-            parts = None  # folded: stats ride the write job's Observation
-            obs_stats = None
-            dlq_obs = False
-            events_w = events
-            if self.evolution_pending():
-                # ONE serial collect of per-partition lineage stats (one row
-                # per input partition); its max schema_ver gates evolution
-                # before the column mapping
-                parts = events.groupBy(F.spark_partition_id().alias("partition_id")).agg(
-                    F.min("lsn").alias("lsn_min"),
-                    F.max("lsn").alias("lsn_max"),
-                    F.count("*").alias("rows_in"),
-                    F.max("schema_ver").alias("v"),
-                    F.sum("n_tok").alias("tok"),
-                ).collect()
-                if not parts:
-                    return None
-                vs = [int(p["v"]) for p in parts if p["v"] is not None]
-                if vs:
-                    self._evolve_to(max(vs))
-            else:
-                from pyspark.sql import Observation
+        # upstream of the validation filter, so it counts every raw row
+        aggs = [
+            F.count(F.lit(1)).alias("rows_in"),
+            F.min("lsn").alias("lsn_min"),
+            F.max("lsn").alias("lsn_max"),
+            F.sum("n_tok").alias("sum_tok"),
+        ]
+        if self.validate and self._dlq_obs_gate():
+            # the epoch's (rare, bad_frac-bounded) invalid rows ride the
+            # same observation as finished DLQ rows: the write already
+            # decodes the token column and evaluates bad_pred, so the DLQ
+            # append writes them driver-side instead of re-scanning the feed
+            aggs.append(
+                F.collect_list(F.when(bad_pred, F.struct(*self._dlq_cols())))
+                .alias("bad_rows")
+            )
+        # only the write plan carries the observation; the fallbacks in
+        # _commit_epoch re-read the raw slice -- an Observation may appear
+        # in only one executed query
+        obs_stats = Observation(f"stats_{epoch}_{time.monotonic_ns()}")
+        good = events.observe(obs_stats, *aggs)
+        if self.validate:
+            good = good.where(~bad_pred)
 
-                # the epoch's (rare, bad_frac-bounded) invalid rows ride the
-                # same observation: the write already decodes the token
-                # column and evaluates bad_pred, so the DLQ append runs over
-                # a tiny driver-built relation instead of re-scanning the feed
-                dlq_obs = self.validate and self._dlq_obs_gate()
-                # upstream of the validation filter, so it counts every raw row
-                aggs = [
-                    F.count(F.lit(1)).alias("rows_in"),
-                    F.min("lsn").alias("lsn_min"),
-                    F.max("lsn").alias("lsn_max"),
-                    F.sum("n_tok").alias("sum_tok"),
-                ]
-                if dlq_obs:
-                    aggs.append(
-                        F.collect_list(
-                            F.when(
-                                bad_pred,
-                                F.struct(
-                                    "lsn", "op", "doc_id", "n_tok",
-                                    F.size("tokens").alias("__sz"), "schema_ver",
-                                ),
-                            )
-                        ).alias("bad_rows")
-                    )
-                obs_stats = Observation(f"stats_{epoch}_{time.monotonic_ns()}")
-                events_w = events.observe(obs_stats, *aggs)
+        # schema_ver -> current-columns mapping
+        src_name = self._source_col_name()
+        cols = [
+            F.col("doc_id"),
+            F.col("op"),
+            F.col("lsn"),
+            F.col("tokens"),
+            F.col("n_tok"),
+            F.col("source").alias(src_name),
+        ]
+        if self._table_schema_ver() >= 1:
+            cols.append(F.when(F.col("schema_ver") >= 1, F.col("lang")).alias("lang"))
+        mapped = good.select(*cols)
 
-            # DLQ write overlaps everything (its own bookmarked exactly-once
-            # commit -- see _append_dlq_frame for the crash-window analysis).
-            # Submitted to the applier-wide single DLQ worker: overlapped
-            # epochs' DLQ commits must land in epoch order or the monotonic
-            # bookmark silently drops the older epoch's rows (see _dlq_pool).
-            dlq_future = None
-            if self.validate:
-                if dlq_obs:
-                    # the frame arrives from _commit_epoch once the write
-                    # job's observation resolves; the worker slot is
-                    # claimed NOW so the 1-wide pool keeps epoch order
-                    import queue as _queue
-
-                    dlq_q = _queue.Queue(1)
-                    dlq_future = self._dlq_pool.submit(
-                        self._dlq_obs_worker, dlq_q, epoch
-                    )
-                else:
-                    dlq_future = self._dlq_pool.submit(
-                        self._append_dlq_epoch, events, epoch
-                    )
-
-            # events_w carries the stats observation, so the metrics node
-            # sits in the WRITE plan; the DLQ scan stays on the raw feed --
-            # an Observation may appear in only one executed query
-            good = events_w.where(~bad_pred) if self.validate else events_w
-
-            # schema_ver -> current-columns mapping
-            src_name = self._source_col_name()
-            cols = [
-                F.col("doc_id"),
-                F.col("op"),
-                F.col("lsn"),
-                F.col("tokens"),
-                F.col("n_tok"),
-                F.col("source").alias(src_name),
-            ]
-            if self._table_schema_ver() >= 1:
-                cols.append(F.when(F.col("schema_ver") >= 1, F.col("lang")).alias("lang"))
-            mapped = good.select(*cols)
-
-            # LWW dedup: consumed once (by the delta write), so it stays
-            # lazy and the integrity digest observation fires on that same
-            # scan. The shuffle aggregate keeps one row per key, so delta
-            # files are (doc_id, lsn)-unique.
-            deduped = lww_dedup(mapped, key="doc_id", order_col="lsn")
-            receipt_obs = None
-            # Observation.get resolves via a QueryExecutionListener event;
-            # streaming reads it with a NON-BLOCKING poll (_observed) so a
-            # lost event inside foreachBatch never parks the stream thread
-            if self.integrity:
-                from pyspark.sql import Observation
-
-                from stratum_spark.verify.hashing import (
-                    canonical_hash_col,
-                    commutative_digest_aggs,
-                )
-
-                receipt_obs = Observation(f"receipt_{epoch}_{time.monotonic_ns()}")
-                deduped = deduped.observe(
-                    receipt_obs, *commutative_digest_aggs(canonical_hash_col(deduped))
-                )
-            ok = True
-            return {
-                "epoch": epoch,
-                "t0": t0,
-                "events": events,
-                "deduped": deduped,
-                "receipt_obs": receipt_obs,
-                "obs_stats": obs_stats,
-                "dlq_future": dlq_future,
-                "dlq_q": dlq_q,
-                "parts": parts,
-            }
-        finally:
-            if not ok:
-                self._abandon_prep({"dlq_q": dlq_q})
+        # LWW dedup: consumed once (by the delta write), so it stays lazy
+        # and the receipt digest observation fires on that same scan. The
+        # shuffle aggregate keeps one row per key, so delta files are
+        # (doc_id, lsn)-unique.
+        deduped = lww_dedup(mapped, key="doc_id", order_col="lsn")
+        # the per-epoch batch receipt (commutative digest over the applied
+        # change rows), mirroring the reference's in-run receipt persistence
+        # (crates/engine-processing/src/producer/components/integrity.rs:75-89)
+        receipt_obs = Observation(f"receipt_{epoch}_{time.monotonic_ns()}")
+        deduped = deduped.observe(
+            receipt_obs, *commutative_digest_aggs(canonical_hash_col(deduped))
+        )
+        return {
+            "epoch": epoch,
+            "t0": t0,
+            "events": events,
+            "deduped": deduped,
+            "obs_stats": obs_stats,
+            "receipt_obs": receipt_obs,
+        }
 
     def _write_deltas(self, deduped: DataFrame) -> list:
         """Phase 1 of the two-phase delta append: write the epoch's files,
@@ -649,94 +532,67 @@ class CdcApplier:
         return self.deltas.write_epoch_files(deduped, clustered=False, stats_cols=("lsn",))
 
     def _commit_epoch(self, prep: dict) -> EpochStats:
-        """Second half of the epoch: the delta commit (atomic lake commit
-        with the epoch bookmark) plus lineage rows. Must run in epoch
-        order."""
-        epoch = prep["epoch"]
-        fold = prep["obs_stats"] is not None
-        try:
-            entries = prep.get("entries")
-            if entries is None:
-                entries = self._write_deltas(prep["deduped"])
-            if fold:
-                stats = self._observed(prep["obs_stats"])
-                if stats is None:
-                    # listener event lost (never observed in practice) --
-                    # recompute with one explicit aggregation job
-                    stats = self._epoch_stats_job(prep["events"])
-                if prep["dlq_q"] is not None:
-                    # observation-fed DLQ: release the (epoch-ordered)
-                    # worker slot with the tiny driver-built frame; the
-                    # lost-event fallback rebuilds from the feed instead
-                    bad = stats.get("bad_rows")
-                    prep["dlq_q"].put(
-                        self._dlq_frame_from_rows(bad)
-                        if bad is not None
-                        else self._dlq_frame(prep["events"])
-                    )
-                    prep["dlq_fed"] = True
-                parts = []
-                rows_in = int(stats["rows_in"] or 0)
-                lsn_max = stats["lsn_max"]
-                sum_tok = stats["sum_tok"]
-            else:
-                parts = [p for p in prep["parts"] if p["rows_in"]]
-                rows_in = sum(int(p["rows_in"]) for p in parts)
-                lsn_max = max((int(p["lsn_max"]) for p in parts), default=None)
-                sum_tok = sum(int(p["tok"]) for p in parts if p["tok"] is not None)
-            if rows_in == 0:
-                if prep["dlq_future"] is not None:
-                    prep["dlq_future"].result()
-                return EpochStats(epoch=epoch, skipped=True)
-            lsn_max, sum_tok = int(lsn_max), int(sum_tok or 0)
-            t_commit = time.time()
-            n_appended = self.deltas.commit_epoch_files(
-                entries,
-                job_id=self.job_id,
-                epoch=epoch,
-                lsn_max=lsn_max,
-                epoch_mode=self.epoch_mode,
+        """Second half of the epoch: the DLQ append, then the delta commit
+        (atomic lake commit with the epoch bookmark), then the queued
+        lineage rows and receipt. Must run in epoch order: the DLQ's
+        exactly-once bookmark is monotonic, so an epoch whose DLQ commit
+        landed after a later epoch's would lose its rows for good."""
+        epoch, events = prep["epoch"], prep["events"]
+        entries = prep.get("entries")
+        if entries is None:
+            entries = self._write_deltas(prep["deduped"])
+        stats = self._observed(prep["obs_stats"])
+        if stats is None:
+            # listener event lost (never observed in practice) --
+            # recompute with one explicit aggregation job
+            stats = self._epoch_stats_job(events)
+        rows_in = int(stats["rows_in"] or 0)
+        if rows_in == 0:
+            return EpochStats(epoch=epoch, skipped=True)
+        n_dlq = 0
+        if self.validate:
+            # the observed DLQ rows are written driver-side; an over-cap
+            # epoch or a lost event rebuilds them from the feed
+            bad = stats.get("bad_rows")
+            n_dlq = (
+                self._append_dlq_epoch(events, epoch) if bad is None
+                else self._append_dlq_rows(bad, epoch)
             )
-            mstats = MergeStats(
-                rows_inserted=n_appended,
-                wall_ms=int((time.time() - t_commit) * 1000),
-            )
-            n_dlq = prep["dlq_future"].result() if prep["dlq_future"] is not None else 0
-            if prep["dlq_future"] is not None:
-                # gates the NEXT epoch's dlq-via-observation attachment
-                self._last_bad_count = n_dlq
-        finally:
-            # never leave the single DLQ worker parked on an unfed queue
-            # (it would deadlock every later epoch's DLQ)
-            self._abandon_prep(prep)
+            # gates the NEXT epoch's dlq-via-observation attachment
+            self._last_bad_count = n_dlq
+        lsn_max, sum_tok = int(stats["lsn_max"]), int(stats["sum_tok"] or 0)
+        t_commit = time.time()
+        n_appended = self.deltas.commit_epoch_files(
+            entries,
+            job_id=self.job_id,
+            epoch=epoch,
+            lsn_max=lsn_max,
+            epoch_mode=self.epoch_mode,
+        )
+        mstats = MergeStats(
+            rows_inserted=n_appended,
+            wall_ms=int((time.time() - t_commit) * 1000),
+        )
 
         wall_ms = int((time.time() - prep["t0"]) * 1000)
         batch_id = f"{self.job_id}-{epoch:08d}"
         from datetime import datetime, timezone
 
         now = datetime.now(timezone.utc).replace(tzinfo=None)
-        if not self.lineage_detail:
-            spans = []
-        elif fold:
-            # stats-folded epochs record per-FILE offset ranges: the lsn
-            # bounds come from the parquet footer statistics the manifest
-            # pass already read (FileEntry.stats), so the detail rows are
-            # physical provenance -- delta file -> (lsn_min, lsn_max, rows)
-            # -- at zero extra jobs. partition_id numbers the epoch's files.
-            spans = [
-                (i, *((e.stats or {}).get("lsn") or (None, None)), e.rows)
-                for i, e in enumerate(entries)
-            ]
-        else:
-            spans = [
-                (p["partition_id"], p["lsn_min"], p["lsn_max"], p["rows_in"])
-                for p in parts
-            ]
+        # per-FILE offset ranges: the lsn bounds come from the parquet
+        # footer statistics the manifest pass already read
+        # (FileEntry.stats), so the detail rows are physical provenance --
+        # delta file -> (lsn_min, lsn_max, rows) -- at zero extra jobs.
+        # partition_id numbers the epoch's files.
+        spans = [
+            (i, *((e.stats or {}).get("lsn") or (None, None)), e.rows)
+            for i, e in enumerate(entries)
+        ]
         lineage_rows = [
             {
                 "batch_id": batch_id,
                 "epoch": epoch,
-                "partition_id": int(pid),
+                "partition_id": pid,
                 "lsn_min": None if lo is None else int(lo),
                 "lsn_max": None if hi is None else int(hi),
                 "rows_in": int(n),
@@ -744,7 +600,6 @@ class CdcApplier:
             }
             for pid, lo, hi, n in spans
         ]
-        n_applied = mstats.rows_inserted
         self._tune_feed_split(rows_in * EVENT_FIXED_BYTES + sum_tok * 4)
         lineage_rows.append(
             {
@@ -754,7 +609,7 @@ class CdcApplier:
                 "lsn_min": None,
                 "lsn_max": lsn_max,
                 "rows_in": rows_in,
-                "rows_deduped": n_applied,
+                "rows_deduped": n_appended,
                 "rows_inserted": mstats.rows_inserted,
                 "rows_updated": mstats.rows_updated,
                 "rows_deleted": mstats.rows_deleted,
@@ -769,56 +624,36 @@ class CdcApplier:
         self._lineage_futures.append(
             self._lineage_pool.submit(self.lineage.append_local, lineage_rows)
         )
-        # auto small-file maintenance: lineage accretes ONE tiny file per
-        # epoch (append_local), so a 10^5-epoch job would leave 10^5 files
-        # and O(files) snapshot JSON. Every _BINPACK_EPOCHS epochs the same
-        # single lineage worker bin-packs them -- the driver-side pyarrow
-        # fast path applies (same schema, KB-sized files), so this costs
-        # zero Spark jobs and cannot conflict with the appends it is
-        # serialized behind.
+        # auto small-file maintenance: lineage and the DLQ accrete one tiny
+        # file per epoch, so a 10^5-epoch job would leave 10^5 files and
+        # O(files) snapshot JSON. Every _BINPACK_EPOCHS epochs each table
+        # is bin-packed by its own writer -- the lineage worker, and this
+        # thread for the DLQ -- on the driver-side pyarrow fast path (same
+        # schema, KB-sized files): zero Spark jobs, no race with the
+        # appends. Bookmarks live in snapshot.committed, which rewrites
+        # carry over, so exactly-once replay suppression is unaffected.
         if epoch > 0 and epoch % _BINPACK_EPOCHS == 0:
             self._lineage_futures.append(
                 self._lineage_pool.submit(self._binpack_and_expire, self.lineage)
             )
-            # the DLQ accretes one small file per bad-row epoch the same
-            # way; its binpack rides the DLQ's OWN single worker so it
-            # serializes with the epoch-ordered appends (and the rewrite
-            # commit rebases should a stray append race it anyway).
-            # Bookmarks live in snapshot.committed, which rewrites carry
-            # over -- exactly-once replay suppression is unaffected.
-            self._lineage_futures.append(
-                self._dlq_pool.submit(self._binpack_and_expire, self.dlq)
+            self._binpack_and_expire(self.dlq)
+        # the receipt's observation is read with a NON-BLOCKING poll on the
+        # lineage worker (measured on Spark 4.1: the listener event does
+        # deliver, inside foreachBatch too); a lost event falls back to a
+        # recompute from the epoch's immutable committed delta files
+        paths = [os.path.join(self.deltas.root, e.path) for e in entries]
+        self._lineage_futures.append(
+            self._lineage_pool.submit(
+                self._epoch_receipt, epoch, prep["receipt_obs"], paths
             )
-        if prep["receipt_obs"] is not None and self.epoch_mode != "stream":
-            # batch mode: the observation fired during the write's scan of
-            # the deduped batch -- folding it to a root + writing the tiny
-            # JSON is driver-side microwork, queued off-path
-            row = prep["receipt_obs"].get
-            self._lineage_futures.append(
-                self._lineage_pool.submit(self._write_epoch_receipt, epoch, row)
-            )
-        elif self.integrity and self.epoch_mode == "stream":
-            # streaming: the observation is attached here too (measured on
-            # Spark 4.1: the listener event DOES deliver for batch writes
-            # executed inside foreachBatch), but read with a NON-BLOCKING
-            # poll on the lineage worker -- a blocking .get could park the
-            # stream thread if the event were ever lost. When it resolves
-            # the receipt costs ZERO extra jobs; otherwise it is recomputed
-            # from the epoch's immutable committed delta files, still off
-            # the micro-batch critical path.
-            paths = [os.path.join(self.deltas.root, e.path) for e in entries]
-            self._lineage_futures.append(
-                self._lineage_pool.submit(
-                    self._receipt_stream_mor, epoch, prep["receipt_obs"], paths
-                )
-            )
+        )
 
         return EpochStats(
             epoch=epoch,
             skipped=False,
             rows_in=rows_in,
             rows_dlq=n_dlq,
-            rows_deduped=n_applied,
+            rows_deduped=n_appended,
             merge=mstats,
             wall_ms=wall_ms,
         )
@@ -853,13 +688,13 @@ class CdcApplier:
             F.sum("n_tok").alias("sum_tok"),
         ).first().asDict()
 
-    def _receipt_stream_mor(self, epoch: int, obs, paths: list[str]) -> None:
-        """Streaming receipt, on the lineage worker: prefer the write
-        job's own observation (zero extra jobs); if its event hasn't landed
-        within the grace window, recompute from the epoch's immutable
-        committed delta files (one off-path job -- the pre-round-6
-        behavior, and the same recompute verify_epoch_receipts performs)."""
-        row = self._observed(obs, timeout_s=10.0) if obs is not None else None
+    def _epoch_receipt(self, epoch: int, obs, paths: list[str]) -> None:
+        """Epoch receipt, on the lineage worker: prefer the write job's own
+        observation (zero extra jobs); if its event hasn't landed within
+        the grace window, recompute from the epoch's immutable committed
+        delta files (one off-path job, the same recompute
+        verify_epoch_receipts performs)."""
+        row = self._observed(obs, timeout_s=10.0)
         if row is not None:
             self._receipts_from_obs += 1  # zero-extra-job path (observability)
             self._write_epoch_receipt(epoch, row)
@@ -867,10 +702,10 @@ class CdcApplier:
             self._receipt_from_files(epoch, paths)
 
     def _receipt_from_files(self, epoch: int, paths: list[str]) -> None:
-        """Streaming-mode receipt: recompute the commutative digest from
-        the epoch's just-committed delta files (immutable; exactly the
-        deduped rows the write materialized) and persist it. Runs on the
-        lineage worker -- off the micro-batch critical path. An epoch whose
+        """Fallback receipt: recompute the commutative digest from the
+        epoch's just-committed delta files (immutable; exactly the deduped
+        rows the write materialized) and persist it. Runs on the lineage
+        worker -- off the epoch's critical path. An epoch whose
         valid rows all filtered out has no files and a canonical zero
         digest."""
         from stratum_spark.verify.hashing import (
@@ -1001,7 +836,6 @@ class CdcApplier:
         binlog_path: str,
         epoch_size: int = 10_000,
         stop_after: int | None = None,
-        max_lsn: int | None = None,
         pipelined: bool = False,
         compact_every: int | None = None,
     ) -> list[EpochStats]:
@@ -1029,8 +863,7 @@ class CdcApplier:
 
         self._check_epoch_mode()
         feed = self.spark.read.parquet(binlog_path)
-        if max_lsn is None:
-            max_lsn = feed.agg(F.max("lsn")).collect()[0][0] or 0
+        max_lsn = feed.agg(F.max("lsn")).collect()[0][0] or 0
         start_epoch = self.deltas.committed_epoch(self.job_id) + 1
         n_epochs = (max_lsn + epoch_size - 1) // epoch_size
         epochs = list(range(start_epoch, n_epochs))[:stop_after]
@@ -1059,9 +892,6 @@ class CdcApplier:
         with ThreadPoolExecutor(max_workers=1) as prefetcher:
             for i, ep in enumerate(epochs):
                 if self.pause_requested():
-                    prep = next_prep.result() if next_prep is not None else None
-                    if prep is not None:  # abandon the prefetched epoch
-                        self._abandon_prep(prep)
                     break
                 if not pipelined:
                     out.append(self.apply_epoch(slice_of(ep), ep))

@@ -836,8 +836,18 @@ class LakeTable:
     def append_local(self, rows: list[dict]) -> int:
         """Driver-side append of a SMALL row batch (lineage/metrics rows)
         via pyarrow -- no Spark job. Same snapshot semantics as append()."""
+        entries = self.write_local_files(rows)
+        if entries:
+            self._append_files_with_retry(entries)
+        return len(rows)
+
+    def write_local_files(self, rows: list[dict]) -> list[FileEntry]:
+        """Phase 1 of a driver-side append of a SMALL row batch: write it
+        as one parquet file via pyarrow (no Spark job), invisible until a
+        commit references it -- append_local's, or commit_epoch_files'
+        for an exactly-once epoch."""
         if not rows:
-            return 0
+            return []
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -880,8 +890,7 @@ class LakeTable:
             rows=len(rows),
             size_bytes=os.path.getsize(path),
         )
-        self._append_files_with_retry([entry])
-        return len(rows)
+        return [entry]
 
     def append(self, df: DataFrame) -> int:
         """Insert write-mode (stratum WriteMode::Insert,

@@ -58,9 +58,20 @@ def test_lww_dedup_variants_agree(spark):
     assert ja == jb
 
 
-def test_backfill_matches_oracle(spark, binlog_dir, tmp_path):
+def test_backfill_matches_oracle(spark, binlog_dir, tmp_path, monkeypatch):
+    # every epoch, pending DDL or not, takes the one path: its DLQ rows
+    # are the ones the delta write's observation collected
+    from_rows = []
+    real = CdcApplier._append_dlq_rows
+
+    def spy(self, rows, epoch):
+        from_rows.append(len(rows))
+        return real(self, rows, epoch)
+
+    monkeypatch.setattr(CdcApplier, "_append_dlq_rows", spy)
     ap, stats = run_full(spark, binlog_dir, str(tmp_path / "wh"))
     assert all(not s.skipped for s in stats)
+    assert len(from_rows) == len(stats) and sum(from_rows) > 0
 
     # schema evolved through the scripted DDL
     assert ap.epoch_state()["schema_ver"] == 3
@@ -87,6 +98,17 @@ def test_backfill_matches_oracle(spark, binlog_dir, tmp_path):
     lin = ap.lineage.read().where(F.col("partition_id") == -1).orderBy("epoch").collect()
     assert len(lin) == len(stats)
     assert sum(r["rows_dlq"] for r in lin) == len(dlq_lsns)
+
+    # every epoch has per-FILE detail rows inside its lsn slice, whose
+    # row counts sum to the delta rows the epoch committed
+    det = ap.lineage.read().where(F.col("partition_id") >= 0).collect()
+    for r in lin:
+        ep = int(r["epoch"])
+        rows = [d for d in det if d["epoch"] == ep]
+        assert rows, ep
+        lo, hi = ep * EPOCH + 1, (ep + 1) * EPOCH
+        assert all(lo <= d["lsn_min"] <= d["lsn_max"] <= hi for d in rows), ep
+        assert sum(d["rows_in"] for d in rows) == r["rows_deduped"], ep
 
 
 def test_kill_and_resume_converges(spark, binlog_dir, tmp_path):
@@ -130,55 +152,85 @@ def _oracle_dlq_lsns(binlog_dir, epochs: range) -> list[int]:
     return sorted(l for l in st.dlq_lsns if lo <= l <= hi)
 
 
+# the two DLQ routes: -1 forces the feed-scan frame on every epoch, the
+# default cap writes the DLQ rows the write observation collected
+_DLQ_CAPS = (-1, applier_mod._DLQ_OBS_CAP)
+
+
+def _oracle_state_tokens(binlog_dir):
+    return {k: list(w["tokens"]) for k, w in
+            state_as_records(replay_binlog(binlog_dir), table_schema_ver=0).items()}
+
+
 def test_dlq_exactly_once_crash_after_dlq_before_merge(spark, binlog_dir, tmp_path,
                                                       monkeypatch):
     """Crash window A: the DLQ append committed but the epoch commit did
     not. The replayed epoch's (bookmarked) DLQ append must be a no-op --
-    the DLQ lsn set stays exact, no duplicates. Pinned to the feed-scan
-    DLQ route (the one pending-DDL and over-cap epochs take); the
-    observation-fed route's window is test_round6's."""
-    monkeypatch.setattr(applier_mod, "_DLQ_OBS_CAP", -1)
-    wh = str(tmp_path / "whA")
-    ap1 = CdcApplier(spark, wh, job_id="t", n_buckets=8, evolution=[])
-    feed = spark.read.parquet(binlog_dir)
-    sl0 = feed.where(F.col("lsn") <= EPOCH)
-    # run prepare only: the DLQ future commits, then "crash" before the
-    # delta commit
-    prep = ap1._prepare_epoch(sl0, 0)
-    prep["dlq_future"].result()
-    ap1._abandon_prep(prep)
-    assert ap1.deltas.committed_epoch("t") == -1  # main commit never happened
-    assert ap1.dlq.committed_epoch("t") == 0  # DLQ commit survived the crash
+    the DLQ lsn set stays exact, no duplicates -- and the state converges
+    to the oracle. Run over both DLQ routes."""
+    want_dlq = _oracle_dlq_lsns(binlog_dir, range(0, N_EVENTS // EPOCH))
+    want_state = _oracle_state_tokens(binlog_dir)
+    sl0 = spark.read.parquet(binlog_dir).where(F.col("lsn") <= EPOCH)
+    obs_epochs = []
+    real = CdcApplier._append_dlq_rows
 
-    # restart: the full backfill replays epoch 0 end-to-end
-    ap2 = CdcApplier(spark, wh, job_id="t", n_buckets=8, evolution=[])
-    ap2.run_backfill(binlog_dir, epoch_size=EPOCH)
-    got = sorted(r["lsn"] for r in ap2.dlq.read().collect())
-    assert got and got == _oracle_dlq_lsns(binlog_dir, range(0, N_EVENTS // EPOCH))
+    def spy(self, rows, epoch):
+        obs_epochs.append(epoch)
+        return real(self, rows, epoch)
+
+    monkeypatch.setattr(CdcApplier, "_append_dlq_rows", spy)
+    for cap in _DLQ_CAPS:
+        monkeypatch.setattr(applier_mod, "_DLQ_OBS_CAP", cap)
+        wh = str(tmp_path / f"whA{cap}")
+        ap1 = CdcApplier(spark, wh, job_id="t", n_buckets=8, evolution=[])
+
+        def crash_commit(entries, **kw):
+            raise RuntimeError("injected crash before the epoch commit")
+
+        ap1.deltas.commit_epoch_files = crash_commit
+        obs_epochs.clear()
+        with pytest.raises(RuntimeError, match="injected crash"):
+            ap1.apply_epoch(sl0, 0)
+        # the route under test engaged: observation rows unless cap is -1
+        assert obs_epochs == ([] if cap < 0 else [0]), cap
+        assert ap1.deltas.committed_epoch("t") == -1  # main commit never happened
+        assert ap1.dlq.committed_epoch("t") == 0  # DLQ commit survived the crash
+
+        # restart: the full backfill replays epoch 0 end-to-end
+        ap2 = CdcApplier(spark, wh, job_id="t", n_buckets=8, evolution=[])
+        ap2.run_backfill(binlog_dir, epoch_size=EPOCH)
+        got = sorted(r["lsn"] for r in ap2.dlq.read().collect())
+        assert got and got == want_dlq, cap
+        state = {r["doc_id"]: list(r["tokens"] or []) for r in ap2.state().collect()}
+        assert state == want_state, cap
 
 
 def test_dlq_exactly_once_crash_after_merge_before_dlq(spark, binlog_dir, tmp_path,
                                                       monkeypatch):
     """Crash window B: the epoch commit landed but the DLQ flush was lost.
-    The resumed backfill's catch-up must restore exactly that epoch's DLQ
-    rows. Pinned to the feed-scan DLQ route, as window A is."""
-    monkeypatch.setattr(applier_mod, "_DLQ_OBS_CAP", -1)
-    wh = str(tmp_path / "whB")
-    ap1 = CdcApplier(spark, wh, job_id="t", n_buckets=8, evolution=[])
-    # simulate the lost DLQ flush: epoch 0 runs with the DLQ append stubbed out
-    ap1._append_dlq_epoch = lambda events, epoch: 0
-    ap1.run_backfill(binlog_dir, epoch_size=EPOCH, stop_after=1)
-    assert ap1.deltas.committed_epoch("t") == 0
-    assert ap1.dlq.committed_epoch("t") == -1 and ap1.dlq.row_count() == 0
+    The resumed backfill's catch-up (a feed-scan rebuild) must restore
+    exactly that epoch's DLQ rows, and a second resume must change
+    nothing. Run over both DLQ routes."""
+    want = _oracle_dlq_lsns(binlog_dir, range(0, N_EVENTS // EPOCH))
+    for cap in _DLQ_CAPS:
+        monkeypatch.setattr(applier_mod, "_DLQ_OBS_CAP", cap)
+        wh = str(tmp_path / f"whB{cap}")
+        ap1 = CdcApplier(spark, wh, job_id="t", n_buckets=8, evolution=[])
+        # simulate the lost DLQ flush: epoch 0 runs with the DLQ commit
+        # (either route's) stubbed out
+        ap1.dlq.commit_epoch_files = lambda *a, **kw: 0
+        ap1.run_backfill(binlog_dir, epoch_size=EPOCH, stop_after=1)
+        assert ap1.deltas.committed_epoch("t") == 0
+        assert ap1.dlq.committed_epoch("t") == -1 and ap1.dlq.row_count() == 0
 
-    ap2 = CdcApplier(spark, wh, job_id="t", n_buckets=8, evolution=[])
-    ap2.run_backfill(binlog_dir, epoch_size=EPOCH)
-    got = sorted(r["lsn"] for r in ap2.dlq.read().collect())
-    assert got == _oracle_dlq_lsns(binlog_dir, range(0, N_EVENTS // EPOCH))
-    # and a second resume changes nothing (idempotent catch-up)
-    ap3 = CdcApplier(spark, wh, job_id="t", n_buckets=8, evolution=[])
-    ap3.run_backfill(binlog_dir, epoch_size=EPOCH)
-    assert sorted(r["lsn"] for r in ap3.dlq.read().collect()) == got
+        ap2 = CdcApplier(spark, wh, job_id="t", n_buckets=8, evolution=[])
+        ap2.run_backfill(binlog_dir, epoch_size=EPOCH)
+        got = sorted(r["lsn"] for r in ap2.dlq.read().collect())
+        assert got == want, cap
+        # and a second resume changes nothing (idempotent catch-up)
+        ap3 = CdcApplier(spark, wh, job_id="t", n_buckets=8, evolution=[])
+        ap3.run_backfill(binlog_dir, epoch_size=EPOCH)
+        assert sorted(r["lsn"] for r in ap3.dlq.read().collect()) == got, cap
 
 
 def test_broadcast_lww_tie_copies_identical_payload(spark):
@@ -210,23 +262,23 @@ def test_dlq_pipelined_commits_in_epoch_order(spark, binlog_dir, tmp_path):
     """Overlapped epochs' DLQ appends race the DLQ table's MONOTONIC
     exactly-once bookmark: if epoch N+1's commit lands before epoch N's,
     N's rows are silently dropped (the `epoch <= last` replay guard eats
-    them) and _dlq_catchup can never repair it. All DLQ appends therefore
-    funnel through one single-worker pool in epoch order. This test makes
-    epoch 0's append SLOW while the pipelined loop prefetches epoch 1 --
-    under per-epoch pools epoch 1's commit won the race and epoch 0's DLQ
-    rows vanished; with the serialized pool the full set survives."""
+    them) and _dlq_catchup can never repair it. Every DLQ append therefore
+    runs on the committing thread, in epoch order. This test makes epoch
+    0's append SLOW while the pipelined loop prefetches epoch 1 -- an
+    append issued from the prefetch would overtake it and epoch 0's DLQ
+    rows would vanish; appended at commit, the full set survives."""
     import time as _t
 
     wh = str(tmp_path / "whO")
     ap = CdcApplier(spark, wh, job_id="t", n_buckets=8, evolution=[])
-    orig = ap._append_dlq_epoch
+    orig = ap.dlq.commit_epoch_files
 
-    def slow_epoch0(events, epoch):
+    def slow_epoch0(entries, job_id, epoch, **kw):
         if epoch == 0:
-            _t.sleep(2.0)  # epoch 1's append would overtake without the pool
-        return orig(events, epoch)
+            _t.sleep(2.0)  # an out-of-order epoch 1 append would overtake
+        return orig(entries, job_id, epoch, **kw)
 
-    ap._append_dlq_epoch = slow_epoch0
+    ap.dlq.commit_epoch_files = slow_epoch0
     ap.run_backfill(binlog_dir, epoch_size=EPOCH, pipelined=True)
     got = sorted(r["lsn"] for r in ap.dlq.read().collect())
     assert got == _oracle_dlq_lsns(binlog_dir, range(0, N_EVENTS // EPOCH))

@@ -43,24 +43,33 @@ def _jobs_for_epoch(spark, ap, events, epoch):
     return len(after - before)
 
 
+# a scripted DDL step the feed (all schema_ver 0) never reaches: the
+# epoch stays "DDL pending" without the table schema ever changing
+_NEVER_APPLIED = [{"lsn": 0, "ver": 1, "action": "add_column", "args": ["lang", "string"]}]
+
+
 def test_stats_fold_removes_one_job_per_epoch(spark, binlog6, tmp_path):
-    """A stats-folded mor epoch (no pending DDL) runs no separate stats
-    action: its stats ride the delta write's Observation. Pinned as the
-    absolute count of submitted Spark jobs for a warm epoch at local[4]:
-    3 (AQE surfaces the LWW shuffle's map stage as its own job); a
-    separate stats action would add 2 more."""
+    """An epoch runs no separate stats or DLQ action: its stats and DLQ
+    rows ride the delta write's Observation and the DLQ rows are written
+    driver-side. Pinned as the absolute count of submitted Spark jobs for
+    a warm epoch at local[4]: 2 with no DDL pending (AQE surfaces the LWW
+    shuffle's map stage as its own job); a separate stats action would
+    add 2 more. With DDL pending the epoch adds only the max(schema_ver)
+    probe (AQE: 2 jobs)."""
     feed = spark.read.parquet(binlog6)
     sl = [feed.where((F.col("lsn") >= i * 1000 + 1) & (F.col("lsn") <= (i + 1) * 1000))
           for i in range(2)]
-    ap = CdcApplier(spark, str(tmp_path / "wf"), job_id="f", n_buckets=8,
-                    evolution=[], write_mode="mor")
-    # epoch 0 warms the JVM paths; epoch 1 is the measured one
-    _jobs_for_epoch(spark, ap, sl[0], 0)
-    jobs_fold = _jobs_for_epoch(spark, ap, sl[1], 1)
-    assert jobs_fold == 3, jobs_fold
-    # the folded stats count every raw row of the slice
-    lin = ap.lineage.read().where(F.col("partition_id") == -1).orderBy("epoch")
-    assert [r["rows_in"] for r in lin.collect()] == [sl[0].count(), sl[1].count()]
+    for evolution, want_jobs in (([], 2), (_NEVER_APPLIED, 4)):
+        ap = CdcApplier(spark, str(tmp_path / f"wf{len(evolution)}"), job_id="f",
+                        n_buckets=8, evolution=evolution, write_mode="mor")
+        # epoch 0 warms the JVM paths; epoch 1 is the measured one
+        _jobs_for_epoch(spark, ap, sl[0], 0)
+        jobs = _jobs_for_epoch(spark, ap, sl[1], 1)
+        assert jobs == want_jobs, (evolution, jobs)
+        assert ap.evolution_pending() == bool(evolution)
+        # the folded stats count every raw row of the slice
+        lin = ap.lineage.read().where(F.col("partition_id") == -1).orderBy("epoch")
+        assert [r["rows_in"] for r in lin.collect()] == [sl[0].count(), sl[1].count()]
 
 
 def test_fold_lineage_detail_is_per_file_offset_ranges(spark, binlog6, tmp_path):
@@ -117,10 +126,11 @@ def test_stream_receipts_use_write_observation(spark, binlog6, tmp_path):
 # ---------------------------------------------------------------------------
 # DLQ via the write job's observation: the write probe already decodes the
 # token column and evaluates the validity predicate, so the epoch's rare
-# bad rows ride the SAME CollectMetrics node the stats fold uses and the
-# DLQ append becomes a tiny driver-built local relation. The feed-scan
-# path stays as the fallback (over-cap epochs, pending DDL, cow, a lost
-# listener event); both must write identical DLQ rows.
+# bad rows ride the SAME CollectMetrics node the stats fold uses, as
+# finished DLQ rows the append writes driver-side. The feed-scan
+# frame stays as the fallback (over-cap epochs, a lost listener event, the
+# crash catch-up); both must write identical DLQ rows. The crash windows
+# over both routes are test_cdc's test_dlq_exactly_once_crash_*.
 def _oracle_dlq_lsns6(binlog_dir):
     return sorted(replay_binlog(binlog_dir).dlq_lsns)
 
@@ -154,13 +164,13 @@ def test_dlq_via_observation_matches_scan_path(spark, binlog6, tmp_path,
     import stratum_spark.cdc.applier as applier_mod
 
     from_rows = []
-    real = CdcApplier._dlq_frame_from_rows
+    real = CdcApplier._append_dlq_rows
 
-    def spy(self, rows):
+    def spy(self, rows, epoch):
         from_rows.append(len(rows))
-        return real(self, rows)
+        return real(self, rows, epoch)
 
-    monkeypatch.setattr(CdcApplier, "_dlq_frame_from_rows", spy)
+    monkeypatch.setattr(CdcApplier, "_append_dlq_rows", spy)
     ap1, state1, dlq1 = _dlq_run(spark, binlog6, str(tmp_path / "wo1"))
     assert len(from_rows) == 4 and sum(from_rows) > 0  # every epoch via obs
     from_rows.clear()
@@ -182,86 +192,28 @@ def test_dlq_obs_cap_flips_to_scan_path(spark, binlog6, tmp_path, monkeypatch):
     stays on."""
     import stratum_spark.cdc.applier as applier_mod
 
+    routes = []
+    real_rows, real_scan = CdcApplier._append_dlq_rows, CdcApplier._dlq_frame
+
+    def spy_rows(self, rows, epoch):
+        routes.append("rows")
+        return real_rows(self, rows, epoch)
+
+    def spy_scan(self, events):
+        routes.append("scan")
+        return real_scan(self, events)
+
+    monkeypatch.setattr(CdcApplier, "_append_dlq_rows", spy_rows)
+    monkeypatch.setattr(CdcApplier, "_dlq_frame", spy_scan)
     monkeypatch.setattr(applier_mod, "_DLQ_OBS_CAP", 1)
     ap, state, dlq = _dlq_run(spark, binlog6, str(tmp_path / "wcap"))
     assert ap._last_bad_count is not None and ap._last_bad_count > 1
     assert not ap._dlq_obs_gate()
+    # epoch 0 rides the observation; once over the cap, epochs (gated on
+    # an earlier epoch's count -- the pipelined prefetch races the
+    # commit) flip to the feed scan
+    assert len(routes) == 4 and routes[0] == "rows" and "scan" in routes, routes
     assert [d[0] for d in dlq] == _oracle_dlq_lsns6(binlog6)
     _assert_oracle_state(state, binlog6)
-    # a fresh prepare on the over-cap applier takes the scan path (probe
-    # LAST: the scan path commits its DLQ rows at prepare by design)
-    feed = spark.read.parquet(binlog6).where(F.col("lsn") <= 1000)
-    prep = ap._prepare_epoch(feed, 99)
-    try:
-        assert prep["dlq_q"] is None  # scan path (cap exceeded)
-    finally:
-        ap._abandon_prep(prep)
     monkeypatch.setattr(applier_mod, "_DLQ_OBS_CAP", 100_000)
     assert ap._dlq_obs_gate()
-
-
-def test_dlq_obs_exactly_once_crash_after_dlq_before_merge(spark, binlog6,
-                                                           tmp_path):
-    """Crash window A under the observation-fed DLQ (mor): the DLQ worker's
-    append can commit concurrently with the merge, so a crash after the DLQ
-    commit but before commit_epoch_files must leave a resumed backfill with
-    the exact oracle DLQ set (the replayed epoch's bookmarked append is a
-    no-op)."""
-    wh = str(tmp_path / "whOA")
-    ap1 = CdcApplier(spark, wh, job_id="t", n_buckets=8, evolution=[],
-                     write_mode="mor", n_events_hint=4000)
-    real_commit = ap1.deltas.commit_epoch_files
-
-    def crash_commit(entries, **kw):
-        # the prep dict isn't reachable here; the DLQ future is the only
-        # other in-flight epoch work -- drain the 1-wide pool so the DLQ
-        # append has definitely committed, then die before the merge commit
-        ap1._dlq_pool.submit(lambda: None).result()
-        raise RuntimeError("injected crash before merge commit")
-
-    ap1.deltas.commit_epoch_files = crash_commit
-    feed = spark.read.parquet(binlog6).where(F.col("lsn") <= 1000)
-    prep = ap1._prepare_epoch(feed, 0)
-    assert prep["dlq_q"] is not None  # obs path engaged
-    with pytest.raises(RuntimeError, match="injected crash"):
-        ap1._commit_epoch(prep)
-    ap1.deltas.commit_epoch_files = real_commit
-    assert ap1.deltas.committed_epoch("t") == -1  # merge never committed
-    assert ap1.dlq.committed_epoch("t") == 0  # DLQ commit survived
-
-    ap2 = CdcApplier(spark, wh, job_id="t", n_buckets=8, evolution=[],
-                     write_mode="mor", n_events_hint=4000)
-    ap2.run_backfill(binlog6, epoch_size=1000)
-    got = sorted(r["lsn"] for r in ap2.dlq.read().collect())
-    assert got and got == _oracle_dlq_lsns6(binlog6)
-    # state converges to the oracle despite the injected crash
-    state = {r["doc_id"]: list(r["tokens"] or []) for r in ap2.state().collect()}
-    oracle = _oracle(binlog6)
-    assert set(state) == set(oracle)
-    for k, w in oracle.items():
-        assert state[k] == list(w["tokens"]), k
-
-
-def test_dlq_obs_exactly_once_crash_after_merge_before_dlq(spark, binlog6,
-                                                           tmp_path):
-    """Crash window B under the observation-fed DLQ (mor): the merge
-    committed but the observation-built DLQ frame was lost. _dlq_catchup's
-    scan-path rebuild from the feed slice must restore exactly that epoch's
-    DLQ rows on resume, and a second resume must change nothing."""
-    wh = str(tmp_path / "whOB")
-    ap1 = CdcApplier(spark, wh, job_id="t", n_buckets=8, evolution=[],
-                     write_mode="mor", n_events_hint=4000)
-    ap1._append_dlq_frame = lambda frame, epoch: 0  # lost DLQ flush
-    ap1.run_backfill(binlog6, epoch_size=1000, stop_after=1)
-    assert ap1.deltas.committed_epoch("t") == 0
-    assert ap1.dlq.committed_epoch("t") == -1 and ap1.dlq.row_count() == 0
-
-    ap2 = CdcApplier(spark, wh, job_id="t", n_buckets=8, evolution=[],
-                     write_mode="mor", n_events_hint=4000)
-    ap2.run_backfill(binlog6, epoch_size=1000)
-    got = sorted(r["lsn"] for r in ap2.dlq.read().collect())
-    assert got == _oracle_dlq_lsns6(binlog6)
-    ap3 = CdcApplier(spark, wh, job_id="t", n_buckets=8, evolution=[],
-                     write_mode="mor", n_events_hint=4000)
-    ap3.run_backfill(binlog6, epoch_size=1000)
-    assert sorted(r["lsn"] for r in ap3.dlq.read().collect()) == got

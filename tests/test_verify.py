@@ -89,7 +89,7 @@ def test_per_epoch_receipts_persisted_during_apply(spark, tmp_path):
                            with_evolution=False)
     write_binlog(feed, str(tmp_path / "binlog"), n_chunks=2)
     ap = CdcApplier(spark, str(tmp_path / "wh"), job_id="rcpt", n_buckets=4,
-                    evolution=[], integrity=True)
+                    evolution=[])
     stats = ap.run_backfill(str(tmp_path / "binlog"), epoch_size=100)
     applied = [s for s in stats if not s.skipped]
     receipts = ap.epoch_receipts()
@@ -103,7 +103,7 @@ def test_per_epoch_receipts_persisted_during_apply(spark, tmp_path):
     # the digest is a pure function of the applied batch: a fresh warehouse
     # replaying the same feed produces identical per-epoch roots
     ap2 = CdcApplier(spark, str(tmp_path / "wh2"), job_id="rcpt", n_buckets=4,
-                     evolution=[], integrity=True)
+                     evolution=[])
     ap2.run_backfill(str(tmp_path / "binlog"), epoch_size=100)
     assert [r["root"] for r in ap2.epoch_receipts()] == [r["root"] for r in receipts]
     # full-table receipt + verify stay green alongside

@@ -11,7 +11,7 @@ interleaved round-robin across fresh JVMs (the box's window variance
 swamps back-to-back comparisons):
 
   engine      validate=True   (the graded config)
-  novalidate  validate=False  (drops DLQ scan + validity)
+  novalidate  validate=False  (drops the validity split + DLQ append)
   bare        feed slice -> parquet, no engine   (the exhibit baseline)
 
 Usage: python tools/decompose_floor.py [cores=4] [n_events=2000000] [trials=3]
