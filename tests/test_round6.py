@@ -130,7 +130,7 @@ def test_stream_receipts_use_write_observation(spark, binlog6, tmp_path):
 # finished DLQ rows the append writes driver-side. The feed-scan
 # frame stays as the fallback (over-cap epochs, a lost listener event, the
 # crash catch-up); both must write identical DLQ rows. The crash windows
-# over both routes are test_cdc's test_dlq_exactly_once_crash_*.
+# on the feed-scan route are test_cdc's test_dlq_exactly_once_crash_*.
 def _oracle_dlq_lsns6(binlog_dir):
     return sorted(replay_binlog(binlog_dir).dlq_lsns)
 
@@ -217,3 +217,78 @@ def test_dlq_obs_cap_flips_to_scan_path(spark, binlog6, tmp_path, monkeypatch):
     _assert_oracle_state(state, binlog6)
     monkeypatch.setattr(applier_mod, "_DLQ_OBS_CAP", 100_000)
     assert ap._dlq_obs_gate()
+
+
+def test_dlq_obs_exactly_once_crash_after_dlq_before_merge(spark, binlog6,
+                                                           tmp_path, monkeypatch):
+    """Crash window A under the observation-fed DLQ (mor): the observed
+    DLQ rows commit on the committing thread just before the delta commit,
+    so a crash between the two must leave a resumed backfill with the
+    exact oracle DLQ set (the replayed epoch's bookmarked append is a
+    no-op) and the oracle state."""
+    obs_epochs = []
+    real = CdcApplier._append_dlq_rows
+
+    def spy(self, rows, epoch):
+        obs_epochs.append(epoch)
+        return real(self, rows, epoch)
+
+    monkeypatch.setattr(CdcApplier, "_append_dlq_rows", spy)
+    wh = str(tmp_path / "whOA")
+    ap1 = CdcApplier(spark, wh, job_id="t", n_buckets=8, evolution=[],
+                     write_mode="mor", n_events_hint=4000)
+
+    def crash_commit(entries, **kw):
+        raise RuntimeError("injected crash before merge commit")
+
+    ap1.deltas.commit_epoch_files = crash_commit
+    feed = spark.read.parquet(binlog6).where(F.col("lsn") <= 1000)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        ap1.apply_epoch(feed, 0)
+    assert obs_epochs == [0]  # obs path engaged
+    assert ap1.deltas.committed_epoch("t") == -1  # merge never committed
+    assert ap1.dlq.committed_epoch("t") == 0  # DLQ commit survived
+
+    ap2 = CdcApplier(spark, wh, job_id="t", n_buckets=8, evolution=[],
+                     write_mode="mor", n_events_hint=4000)
+    ap2.run_backfill(binlog6, epoch_size=1000)
+    got = sorted(r["lsn"] for r in ap2.dlq.read().collect())
+    assert got and got == _oracle_dlq_lsns6(binlog6)
+    # state converges to the oracle despite the injected crash
+    state = {r["doc_id"]: list(r["tokens"] or []) for r in ap2.state().collect()}
+    oracle = _oracle(binlog6)
+    assert set(state) == set(oracle)
+    for k, w in oracle.items():
+        assert state[k] == list(w["tokens"]), k
+
+
+def test_dlq_obs_exactly_once_crash_after_merge_before_dlq(spark, binlog6,
+                                                           tmp_path):
+    """Crash window B under the observation-fed DLQ (mor): the merge
+    committed but the observed DLQ rows were lost. _dlq_catchup's
+    feed-scan rebuild must restore exactly that epoch's DLQ rows on
+    resume, and a second resume must change nothing."""
+    wh = str(tmp_path / "whOB")
+    ap1 = CdcApplier(spark, wh, job_id="t", n_buckets=8, evolution=[],
+                     write_mode="mor", n_events_hint=4000)
+    lost = []
+
+    def lost_flush(rows, epoch):
+        lost.append(epoch)
+        return 0
+
+    ap1._append_dlq_rows = lost_flush  # lost DLQ flush
+    ap1.run_backfill(binlog6, epoch_size=1000, stop_after=1)
+    assert lost == [0]  # epoch 0 took the obs route
+    assert ap1.deltas.committed_epoch("t") == 0
+    assert ap1.dlq.committed_epoch("t") == -1 and ap1.dlq.row_count() == 0
+
+    ap2 = CdcApplier(spark, wh, job_id="t", n_buckets=8, evolution=[],
+                     write_mode="mor", n_events_hint=4000)
+    ap2.run_backfill(binlog6, epoch_size=1000)
+    got = sorted(r["lsn"] for r in ap2.dlq.read().collect())
+    assert got == _oracle_dlq_lsns6(binlog6)
+    ap3 = CdcApplier(spark, wh, job_id="t", n_buckets=8, evolution=[],
+                     write_mode="mor", n_events_hint=4000)
+    ap3.run_backfill(binlog6, epoch_size=1000)
+    assert sorted(r["lsn"] for r in ap3.dlq.read().collect()) == got
