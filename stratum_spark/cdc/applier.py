@@ -4,7 +4,7 @@ Per-epoch sequence (one micro-batch == one epoch == one atomic lake commit),
 the distributed analog of stratum's per-batch consumer protocol
 (crates/engine-processing/src/consumer/components/coordinator.rs:61-135):
 
-  1. epoch guard        -- already-committed epoch -> skip (exactly-once)
+  1. lsn cursor         -- rows at or below the committed lsn drop out
   2. schema evolution   -- scripted DDL whose position falls inside the
                            epoch is applied to the table first
                            (metadata-only; stratum's 3-phase ordering,
@@ -38,6 +38,7 @@ driver-side datum is the max schema_ver of an epoch with pending DDL.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 from dataclasses import dataclass
@@ -48,6 +49,8 @@ from pyspark.sql import functions as F
 from stratum_spark.cdc.binlog import SCHEMA_EVOLUTION
 from stratum_spark.cdc.dedup import lww_dedup
 from stratum_spark.lake import LakeTable, MergeStats
+
+log = logging.getLogger(__name__)
 
 # feed-split sizing's epoch byte estimate: fixed per-event bytes (doc_id,
 # lsn, ts, op, source, lang, schema_ver + row overhead) plus 4 B per token
@@ -129,10 +132,6 @@ class CdcApplier:
             auto_compact_ratio = 0.0
         self.auto_compact_ratio = auto_compact_ratio
         self.compactions_run = 0
-        # epoch namespace: 'batch' (lsn-range epochs) or 'stream' (Spark
-        # batch-id epochs) -- recorded in the bookmark so a cross-mode
-        # resume fails loudly (streaming/driver.py guard)
-        self.epoch_mode = "batch"
         self.spark = spark
         self.warehouse = os.path.abspath(warehouse)
         self.job_id = job_id
@@ -343,51 +342,49 @@ class CdcApplier:
         cutoff). Per-task partials are bounded by per-task bad rows."""
         return (self._last_bad_count or 0) <= _DLQ_OBS_CAP
 
-    def _append_dlq_rows(self, rows, epoch: int) -> int:
+    def _append_dlq_rows(self, rows, epoch: int, lsn_max: int) -> int:
         """Exactly-once DLQ append of the DLQ rows the write observation
         collected: written driver-side with pyarrow (no Spark job, no feed
-        scan) and committed with the same (job_id, epoch) bookmark as
-        _append_dlq_epoch."""
+        scan) and committed with the same (job_id, epoch, lsn_max)
+        bookmark as _append_dlq_epoch."""
         if epoch <= self.dlq.committed_epoch(self.job_id):
             return 0  # replayed: write no file the commit would orphan
         return self.dlq.commit_epoch_files(
             self.dlq.write_local_files([r.asDict() for r in rows]),
             job_id=self.job_id,
             epoch=epoch,
-            epoch_mode=self.epoch_mode,
+            lsn_max=lsn_max,
         )
 
-    def _append_dlq_epoch(self, events: DataFrame, epoch: int) -> int:
-        """Exactly-once DLQ append of the feed slice's invalid rows (the
+    def _append_dlq_epoch(self, events: DataFrame, epoch: int, lsn_max: int) -> int:
+        """Exactly-once DLQ append of the feed rows' invalid rows (the
         feed-scan route): the failed rows commit with a
-        (job_id, epoch) bookmark on the DLQ table itself, so a replayed
-        epoch's DLQ write is a no-op (no duplicates after a crash between
-        the DLQ commit and the epoch commit, which follows it on the same
-        thread). The opposite window -- epoch committed, DLQ lost -- is
-        closed by catch-up: run_backfill replays
-        lagging DLQ epochs at startup, and a streaming restart's replayed
-        micro-batch hits the epoch-skip path in _prepare_epoch, which runs
-        exactly this append for the skipped epoch. The bookmark advances
-        even for epochs with zero failed rows so catch-up never rescans
-        clean epochs."""
+        (job_id, epoch, lsn_max) bookmark on the DLQ table itself, so a
+        replayed epoch's DLQ write is a no-op (no duplicates after a crash
+        between the DLQ commit and the epoch commit, which follows it on
+        the same thread). The opposite window -- epoch committed, DLQ lost
+        -- is closed by _dlq_catchup. The bookmark advances even for epochs
+        with zero failed rows, so catch-up never rescans clean epochs."""
         return self.dlq.append_epoch(
             self._dlq_frame(events),
             job_id=self.job_id,
             epoch=epoch,
-            epoch_mode=self.epoch_mode,
+            lsn_max=lsn_max,
             clustered=False,
         )
 
-    def _dlq_catchup(self, slice_of, upto_epoch: int) -> None:
-        """Replay the DLQ side-channel for epochs the main table committed
-        but the DLQ bookmark missed (a lost DLQ append, or a warehouse
-        whose DLQ committed after the epoch). slice_of(epoch) -> that
-        epoch's feed slice."""
+    def _dlq_catchup(self, feed: DataFrame) -> None:
+        """Restore a lost DLQ flush: if the DLQ bookmark lags the deltas',
+        one feed-scan append of the invalid rows in (DLQ lsn_max, delta
+        lsn_max] under the delta table's committed epoch."""
         if not self.validate:
             return
-        start = self.dlq.committed_epoch(self.job_id) + 1
-        for ep in range(start, upto_epoch + 1):
-            self._append_dlq_epoch(slice_of(ep), ep)
+        epoch, hi = self._cursor(self.deltas)
+        if self.dlq.committed_epoch(self.job_id) >= epoch:
+            return
+        lo = self._cursor(self.dlq)[1]
+        rows = feed.where(F.col("lsn") <= hi)
+        self._append_dlq_epoch(rows if lo is None else rows.where(F.col("lsn") > lo), epoch, hi)
 
     def pause_requested(self) -> bool:
         """The CLI's `pause` verb drops a marker file in the warehouse;
@@ -407,33 +404,29 @@ class CdcApplier:
         mapping depends on the evolving table schema; the reference applies
         schema ops strictly before data, crates/engine-schema/src/plan.rs:259-288).
         """
-        prep = self._prepare_epoch(events, epoch)
-        if prep is None:
-            return EpochStats(epoch=epoch, skipped=True)
-        return self._commit_epoch(prep)
+        return self._commit_epoch(self._prepare_epoch(events, epoch))
 
-    def _check_epoch_mode(self) -> None:
-        """Reject a resume whose bookmark was written by the OTHER epoch
-        namespace (batch lsn-range epochs vs streaming batch-id epochs) --
-        continuing would silently skip or replay data."""
-        committed = self.deltas.snapshot().committed.get(self.job_id)
-        if committed is not None and committed.get("mode", "batch") != self.epoch_mode:
-            raise ValueError(
-                f"job_id {self.job_id!r} bookmark was written in "
-                f"{committed.get('mode', 'batch')!r} mode; cannot resume it in "
-                f"{self.epoch_mode!r} mode -- use a different job_id"
-            )
+    def _cursor(self, table: LakeTable) -> tuple[int, int | None]:
+        """The job's (committed epoch, committed lsn) on table, from its
+        snapshot metadata; (-1, None) for a new job. The lsn is the one
+        resume cursor; the epoch only numbers the next commit."""
+        mark = table.snapshot().committed.get(self.job_id, {"epoch": -1})
+        if mark["epoch"] >= 0 and mark.get("lsn_max") is None:
+            raise ValueError(f"{table.root}: job_id {self.job_id!r} bookmark at epoch "
+                             f"{mark['epoch']} has no lsn_max; it cannot resume by lsn")
+        return mark["epoch"], mark.get("lsn_max")
 
     def evolution_pending(self) -> bool:
         return bool(self.evolution) and self._table_schema_ver() < max(
             s["ver"] for s in self.evolution
         )
 
-    def _prepare_epoch(self, events: DataFrame, epoch: int) -> dict | None:
+    def _prepare_epoch(self, events: DataFrame, epoch: int) -> dict:
         """First half of the epoch: apply pending scripted DDL, map columns,
         LWW dedup, and attach the epoch's Observations to the delta write.
-        Returns the prepared state for _commit_epoch, or None if the epoch
-        is empty or already committed.
+        Returns the prepared state for _commit_epoch. Only rows above the
+        committed lsn are kept, so a redelivered or regrouped batch is
+        empty and _commit_epoch skips it.
 
         Every epoch runs the same path. One Observation on the raw feed
         slice rides the delta write's own scan and yields the epoch's
@@ -450,19 +443,13 @@ class CdcApplier:
         )
 
         t0 = time.time()
-        if epoch <= self.deltas.committed_epoch(self.job_id):
-            # replayed epoch (streaming restart redelivers the last batch):
-            # the main commit is skipped, but a lost DLQ append may have
-            # left this epoch's DLQ rows behind -- the bookmarked append
-            # below restores them (no-op if the DLQ commit survived)
-            if self.validate and epoch > self.dlq.committed_epoch(self.job_id):
-                self._append_dlq_epoch(events, epoch)
-            return None
+        done_lsn = self._cursor(self.deltas)[1]
+        if done_lsn is not None:
+            events = events.where(F.col("lsn") > done_lsn)
         if self.evolution_pending():
             ver = events.agg(F.max("schema_ver")).first()[0]
-            if ver is None:
-                return None  # empty slice
-            self._evolve_to(int(ver))
+            if ver is not None:  # None: an empty slice
+                self._evolve_to(int(ver))
 
         bad_pred = self._bad_pred()
         # upstream of the validation filter, so it counts every raw row
@@ -549,25 +536,24 @@ class CdcApplier:
         rows_in = int(stats["rows_in"] or 0)
         if rows_in == 0:
             return EpochStats(epoch=epoch, skipped=True)
+        lsn_max, sum_tok = int(stats["lsn_max"]), int(stats["sum_tok"] or 0)
         n_dlq = 0
         if self.validate:
             # the observed DLQ rows are written driver-side; an over-cap
             # epoch or a lost event rebuilds them from the feed
             bad = stats.get("bad_rows")
             n_dlq = (
-                self._append_dlq_epoch(events, epoch) if bad is None
-                else self._append_dlq_rows(bad, epoch)
+                self._append_dlq_epoch(events, epoch, lsn_max) if bad is None
+                else self._append_dlq_rows(bad, epoch, lsn_max)
             )
             # gates the NEXT epoch's dlq-via-observation attachment
             self._last_bad_count = n_dlq
-        lsn_max, sum_tok = int(stats["lsn_max"]), int(stats["sum_tok"] or 0)
         t_commit = time.time()
         n_appended = self.deltas.commit_epoch_files(
             entries,
             job_id=self.job_id,
             epoch=epoch,
             lsn_max=lsn_max,
-            epoch_mode=self.epoch_mode,
         )
         mstats = MergeStats(
             rows_inserted=n_appended,
@@ -664,16 +650,20 @@ class CdcApplier:
         getOrEmpty until the QueryExecutionListener event lands (it is
         posted asynchronously, so a beat after the action returns is
         normal) or the deadline passes. Returns the metrics dict, or None
-        on timeout -- callers fall back to an explicit recompute, so a
-        lost event degrades to one extra job instead of a parked thread."""
+        on timeout or error, logged as a warning that names the cause --
+        callers fall back to an explicit recompute, so a lost event
+        degrades to one extra job instead of a parked thread."""
         deadline = time.time() + timeout_s
         while True:
             try:
                 if obs._jo.getOrEmpty().size() > 0:
                     return dict(obs.get)
-            except Exception:
+            except Exception as e:
+                log.warning("Observation %s failed: %s: %s", obs._name, type(e).__name__, e,
+                            exc_info=True)
                 return None
             if time.time() >= deadline:
+                log.warning("Observation %s timed out after %.0f s", obs._name, timeout_s)
                 return None
             time.sleep(poll_s)
 
@@ -730,11 +720,11 @@ class CdcApplier:
         per-batch receipt persistence during apply (integrity.rs:75-89)."""
         from stratum_spark.verify.hashing import digest_row_to_root
 
-        # receipts are partitioned per job_id: batch backfills (lsn-range
-        # epochs from 0) and streaming phases (Spark batch ids from 0) share
-        # the warehouse under DIFFERENT job_ids (mode guard), so a flat
-        # epoch-keyed file would let a stream's epoch-0 receipt overwrite
-        # the backfill's
+        # receipts are partitioned per job_id: epoch numbers are per job
+        # (a backfill and a stream continuing it share one sequence, since
+        # both resume from the committed lsn; any epoch size is valid), so
+        # a flat epoch-keyed file would let another job's epoch-0 receipt
+        # overwrite this one's
         rdir = os.path.join(self.warehouse, "tokens", "_meta", "receipts", self.job_id)
         os.makedirs(rdir, exist_ok=True)
         payload = {
@@ -841,9 +831,10 @@ class CdcApplier:
     ) -> list[EpochStats]:
         """Batch-mode apply: the feed is consumed as consecutive lsn-range
         epochs (keyset pagination generalized -- stratum Cursor::Numeric,
-        crates/model/src/pagination/cursor.rs:43-47). Resumes after the last
-        committed epoch; `stop_after` epochs simulates a crash/pause for
-        kill-and-resume tests (crates/engine-tests/src/resume.rs:50-127).
+        crates/model/src/pagination/cursor.rs:43-47). Resumes from the
+        committed lsn; any epoch_size is valid. `stop_after` epochs
+        simulates a crash/pause for kill-and-resume tests
+        (crates/engine-tests/src/resume.rs:50-127).
 
         pipelined=True overlaps epoch N+1's preparation and its delta-file
         write with epoch N's commit -- commits stay
@@ -861,49 +852,39 @@ class CdcApplier:
         the epoch."""
         from concurrent.futures import ThreadPoolExecutor
 
-        self._check_epoch_mode()
         feed = self.spark.read.parquet(binlog_path)
-        max_lsn = feed.agg(F.max("lsn")).collect()[0][0] or 0
-        start_epoch = self.deltas.committed_epoch(self.job_id) + 1
-        n_epochs = (max_lsn + epoch_size - 1) // epoch_size
-        epochs = list(range(start_epoch, n_epochs))[:stop_after]
+        lo, hi = feed.agg(F.min("lsn"), F.max("lsn")).first()
+        done_epoch, done_lsn = self._cursor(self.deltas)
+        lo = lo if done_lsn is None else done_lsn + 1
+        starts = range(lo, hi + 1, epoch_size)[:stop_after] if hi is not None else ()
+        epochs = [(done_epoch + 1 + i, feed.where(F.col("lsn").between(s, s + epoch_size - 1)))
+                  for i, s in enumerate(starts)]
+        self._dlq_catchup(feed)  # a lost DLQ flush, before any new epoch
 
-        def slice_of(ep: int):
-            lo, hi = ep * epoch_size + 1, (ep + 1) * epoch_size
-            return feed.where((F.col("lsn") >= lo) & (F.col("lsn") <= hi))
-
-        # crash recovery: epochs whose commit landed but whose DLQ flush was
-        # lost replay their (bookmarked, idempotent) DLQ append first
-        self._dlq_catchup(slice_of, start_epoch - 1)
-
-        def prep_and_write(ep: int):
+        def prep_and_write(ep: int, events: DataFrame):
             """Prefetch body: prepare the epoch AND run its delta-file
             WRITE (phase 1 of the two-phase append), so only the ordered
             bookmark commit remains on the main thread. Files written here
             are invisible until committed, so a crash orphans them
             harmlessly and exactly-once is untouched."""
-            prep = self._prepare_epoch(slice_of(ep), ep)
-            if prep is not None:
-                prep["entries"] = self._write_deltas(prep["deduped"])
+            prep = self._prepare_epoch(events, ep)
+            prep["entries"] = self._write_deltas(prep["deduped"])
             return prep
 
         out: list[EpochStats] = []
         next_prep = None
         with ThreadPoolExecutor(max_workers=1) as prefetcher:
-            for i, ep in enumerate(epochs):
+            for i, (ep, events) in enumerate(epochs):
                 if self.pause_requested():
                     break
                 if not pipelined:
-                    out.append(self.apply_epoch(slice_of(ep), ep))
+                    out.append(self.apply_epoch(events, ep))
                 else:
-                    prep = next_prep.result() if next_prep is not None else prep_and_write(ep)
+                    prep = next_prep.result() if next_prep is not None else prep_and_write(ep, events)
                     next_prep = None
                     if i + 1 < len(epochs) and not self.evolution_pending():
-                        next_prep = prefetcher.submit(prep_and_write, epochs[i + 1])
-                    out.append(
-                        self._commit_epoch(prep) if prep is not None
-                        else EpochStats(epoch=ep, skipped=True)
-                    )
+                        next_prep = prefetcher.submit(prep_and_write, *epochs[i + 1])
+                    out.append(self._commit_epoch(prep))
                 # safe between commits even with the next prepare+write in
                 # flight: prepare reads only the feed and the epoch
                 # bookmark, which compaction's truncate preserves, and

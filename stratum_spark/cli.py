@@ -193,7 +193,7 @@ def cmd_backfill(args) -> int:
     applied = [s for s in stats if not s.skipped]
     rows = sum(s.rows_in for s in applied)
     print(
-        f"applied {len(applied)} epochs ({len(stats) - len(applied)} replay-skipped), "
+        f"applied {len(applied)} epochs ({len(stats) - len(applied)} empty), "
         f"{rows} events; state: {ap.epoch_state()}"
     )
     return 0
@@ -341,9 +341,10 @@ def cmd_pause(args) -> int:
 
 def cmd_resume(args) -> int:
     """Resume (stratum `resume`, crates/cli/src/commands/resume.rs): clear
-    the pause marker and, if --binlog is given, continue the backfill from
-    the committed epoch bookmark (identical to re-running `backfill` --
-    exactly-once resume is the engine's checkpoint contract)."""
+    the pause marker and, if --binlog is given, continue the backfill
+    (identical to re-running `backfill` -- exactly-once resume is the
+    engine's checkpoint contract). It resumes from the committed lsn; any
+    --epoch-size is valid."""
     marker = _pause_marker(args.warehouse)
     if os.path.exists(marker):
         os.remove(marker)
@@ -518,7 +519,8 @@ def main(argv: list[str] | None = None) -> int:
 
     p = sub.add_parser("backfill", help="CDC batch apply (resumable)")
     p.add_argument("--binlog", required=True)
-    p.add_argument("--epoch-size", type=int, default=100_000)
+    p.add_argument("--epoch-size", type=int, default=100_000,
+                   help="lsns per epoch; resumes from the committed lsn, any size is valid")
     p.add_argument("--pipelined", action="store_true")
     _add_applier_args(p)
     p.set_defaults(fn=cmd_backfill)
@@ -536,7 +538,8 @@ def main(argv: list[str] | None = None) -> int:
 
     p = sub.add_parser("resume", help="clear pause and continue the backfill")
     p.add_argument("--binlog", default=None)
-    p.add_argument("--epoch-size", type=int, default=100_000)
+    p.add_argument("--epoch-size", type=int, default=100_000,
+                   help="lsns per epoch; resumes from the committed lsn, any size is valid")
     p.add_argument("--pipelined", action="store_true")
     _add_applier_args(p)
     p.set_defaults(fn=cmd_resume)

@@ -185,20 +185,16 @@ def _successor(snap: Snapshot, **changes) -> Snapshot:
 
 
 def _bookmarked(
-    snap: Snapshot, job_id: str, epoch: int, lsn_max: int | None = None,
-    epoch_mode: str | None = None,
+    snap: Snapshot, job_id: str, epoch: int, lsn_max: int | None = None
 ) -> dict | None:
     """snap's `committed` map with job_id's bookmark advanced to epoch, or
     None when epoch is already committed (a replay, which the exactly-once
-    writers skip). Batch backfills number epochs by lsn range and streams
-    by Spark batch id; the bookmark's mode tag lets a mismatched resume
-    fail loudly instead of skipping data."""
+    writers skip). A CDC job resumes from the committed lsn_max, not the
+    epoch number, so any epoch size is valid on resume and a stream can
+    continue a backfill's job."""
     if epoch <= snap.committed.get(job_id, {}).get("epoch", -1):
         return None
-    mark = {"epoch": epoch, "lsn_max": lsn_max}
-    if epoch_mode is not None:
-        mark["mode"] = epoch_mode
-    return {**snap.committed, job_id: mark}
+    return {**snap.committed, job_id: {"epoch": epoch, "lsn_max": lsn_max}}
 
 
 def _key_bucket(key_col: str, n_buckets: int) -> F.Column:
@@ -934,14 +930,13 @@ class LakeTable:
         job_id: str,
         epoch: int,
         lsn_max: int | None = None,
-        epoch_mode: str | None = None,
     ) -> int:
         """Phase 2: atomically reference already-written files and advance
         the (job_id, epoch) bookmark in ONE snapshot. A replayed epoch
         (epoch <= committed) commits nothing -- its pre-written files stay
         orphaned, preserving exactly-once."""
         snap = self.snapshot()
-        committed = _bookmarked(snap, job_id, epoch, lsn_max, epoch_mode)
+        committed = _bookmarked(snap, job_id, epoch, lsn_max)
         if committed is None:
             return 0
         self._write_snapshot(_successor(snap, files=snap.files + entries, committed=committed))
@@ -953,7 +948,6 @@ class LakeTable:
         job_id: str,
         epoch: int,
         lsn_max: int | None = None,
-        epoch_mode: str | None = None,
         passthrough: tuple[str, ...] = (),
         clustered: bool = True,
     ) -> int:
@@ -971,9 +965,7 @@ class LakeTable:
         if _bookmarked(self.snapshot(), job_id, epoch) is None:
             return 0  # replayed: write no files the commit would orphan
         entries = self.write_epoch_files(df, passthrough=passthrough, clustered=clustered)
-        return self.commit_epoch_files(
-            entries, job_id, epoch, lsn_max=lsn_max, epoch_mode=epoch_mode
-        )
+        return self.commit_epoch_files(entries, job_id, epoch, lsn_max=lsn_max)
 
     def truncate(self, expected: Snapshot) -> None:
         """Metadata-only commit of `expected`'s successor with no files
@@ -1002,7 +994,6 @@ class LakeTable:
         lsn_max: int | None = None,
         mode: str = "upsert",
         precedence_col: str | None = None,
-        epoch_mode: str | None = None,
     ) -> MergeStats:
         """MERGE batch INTO table ON table.key = batch.key.
 
@@ -1030,7 +1021,7 @@ class LakeTable:
             raise ValueError("merge requires a key-ed table")
         committed = snap.committed
         if job_id is not None and epoch is not None:
-            committed = _bookmarked(snap, job_id, epoch, lsn_max, epoch_mode)
+            committed = _bookmarked(snap, job_id, epoch, lsn_max)
             if committed is None:
                 return MergeStats(epoch_skipped=True)
 

@@ -1,15 +1,17 @@
 """Structured Streaming driver: tail the binlog directory, apply per
 micro-batch via foreachBatch.
 
-Exactly-once composition (SURVEY.md §3.4):
-  * Spark's streaming checkpoint (offset log / commit log) decides WHICH
-    files form micro-batch N and replays the same batch after a crash --
-    stratum's cursor resume rules
-    (crates/engine-processing/src/state_manager.rs:96-160).
-  * The delta table's (job_id, epoch) bookmark commits atomically with the
-    epoch's delta files, so a replayed micro-batch is a no-op -- stratum's WAL
-    BatchCommit check. Together: replay from any checkpoint converges to
-    the identical final table state.
+Exactly-once composition (SURVEY.md §3.4): Spark's checkpoint decides which
+files form a micro-batch, and the job resumes from the committed lsn, not a
+batch count (stratum's cursor resume rules, crates/engine-processing/src/
+state_manager.rs:96-160). Each micro-batch is numbered after the job's last
+committed epoch and keeps only rows above the committed lsn, whose bookmark
+commits with the epoch's delta files. So a redelivered or regrouped batch
+applies nothing, a lost checkpoint is harmless, any --epoch-size or
+--max-files is valid, and a stream can continue a backfill's job_id. Feed
+contract: lsn is monotone across files; file mtimes follow lsn order (the
+file source orders batches by mtime; write_binlog writes them so); equal
+lsns are identical re-emissions (the tie contract).
 
 Rate limiting via maxFilesPerTrigger is the analog of the reference's
 bounded(64) producer->consumer channel
@@ -35,18 +37,8 @@ def start_stream(
     processing_time: str = "0 seconds",
 ) -> StreamingQuery:
     spark = applier.spark
-    # epoch-namespace guard: batch backfill numbers epochs by lsn range,
-    # streaming by Spark batch_id -- the two sequences are NOT comparable.
-    # A stream started against a job_id whose bookmark was written by a
-    # BACKFILL would silently skip micro-batches 0..committed_epoch (data
-    # loss), so a cross-mode bookmark is rejected; resuming a stream's own
-    # bookmark is the normal restart path. The check goes through
-    # _check_epoch_mode, which reads the table that OWNS the epoch
-    # bookmarks, the delta table -- checking `tokens` would pass
-    # vacuously and let the stream silently skip micro-batches
-    # 0..committed_epoch.
-    applier.epoch_mode = "stream"
-    applier._check_epoch_mode()
+    # a lost DLQ flush is restored from a static read of the same files
+    applier._dlq_catchup(spark.read.schema(BINLOG_DDL).parquet(binlog_dir))
     feed = (
         spark.readStream.schema(BINLOG_DDL)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -54,7 +46,7 @@ def start_stream(
     )
 
     def _apply(batch_df, batch_id: int) -> None:
-        applier.apply_epoch(batch_df, int(batch_id))
+        applier.apply_epoch(batch_df, applier.deltas.committed_epoch(applier.job_id) + 1)
 
     writer = (
         feed.writeStream.foreachBatch(_apply)

@@ -64,9 +64,9 @@ def test_backfill_matches_oracle(spark, binlog_dir, tmp_path, monkeypatch):
     from_rows = []
     real = CdcApplier._append_dlq_rows
 
-    def spy(self, rows, epoch):
+    def spy(self, rows, epoch, lsn_max):
         from_rows.append(len(rows))
-        return real(self, rows, epoch)
+        return real(self, rows, epoch, lsn_max)
 
     monkeypatch.setattr(CdcApplier, "_append_dlq_rows", spy)
     ap, stats = run_full(spark, binlog_dir, str(tmp_path / "wh"))
@@ -146,6 +146,48 @@ def test_epoch_replay_is_noop(spark, binlog_dir, tmp_path):
     assert collect_state(ap) == before
 
 
+def test_resume_with_another_epoch_size(spark, binlog_dir, tmp_path):
+    """The resume cursor is the committed lsn, not the epoch number: a
+    backfill stopped after 3 epochs of 200 lsns and resumed with 500-lsn
+    epochs applies every remaining event once, numbering its epochs on."""
+    wh = str(tmp_path / "whR")
+    ap1 = CdcApplier(spark, wh, job_id="t", n_buckets=8, n_events_hint=N_EVENTS)
+    ap1.run_backfill(binlog_dir, epoch_size=200, stop_after=3)
+    assert ap1.epoch_state()["epoch"] == 2
+    ap2 = CdcApplier(spark, wh, job_id="t", n_buckets=8, n_events_hint=N_EVENTS)
+    stats = ap2.run_backfill(binlog_dir, epoch_size=500)
+    assert [s.epoch for s in stats] == list(range(3, 3 + len(stats)))
+    assert stats and all(not s.skipped for s in stats)
+
+    st = replay_binlog(binlog_dir)
+    want = state_as_records(st, table_schema_ver=3)
+    got = collect_state(ap2)
+    assert set(got) == set(want)
+    for doc_id, w in want.items():
+        assert got[doc_id]["tokens"] == w["tokens"], doc_id
+    assert sorted(r["lsn"] for r in ap2.dlq.read().collect()) == sorted(st.dlq_lsns)
+
+
+def test_observed_fallback_logs_its_cause(caplog):
+    """An Observation read that falls back to the recompute logs why: the
+    exception's type and message, or the timeout, under the Observation's
+    name."""
+    import logging
+    from types import SimpleNamespace as NS
+
+    def boom():
+        raise RuntimeError("listener gone")
+
+    broken = NS(_name="stats_0", _jo=NS(getOrEmpty=boom))
+    pending = NS(_name="receipt_0", _jo=NS(getOrEmpty=lambda: NS(size=lambda: 0)))
+    with caplog.at_level(logging.WARNING, logger=applier_mod.__name__):
+        assert CdcApplier._observed(broken) is None
+        assert CdcApplier._observed(pending, timeout_s=0.05) is None
+    first, second = (r.getMessage() for r in caplog.records)
+    assert "stats_0" in first and "RuntimeError: listener gone" in first
+    assert "receipt_0" in second and "timed out" in second
+
+
 def _oracle_dlq_lsns(binlog_dir, epochs: range) -> list[int]:
     st = replay_binlog(binlog_dir)
     lo, hi = epochs.start * EPOCH + 1, epochs.stop * EPOCH
@@ -174,9 +216,9 @@ def test_dlq_exactly_once_crash_after_dlq_before_merge(spark, binlog_dir, tmp_pa
     obs_epochs = []
     real = CdcApplier._append_dlq_rows
 
-    def spy(self, rows, epoch):
+    def spy(self, rows, epoch, lsn_max):
         obs_epochs.append(epoch)
-        return real(self, rows, epoch)
+        return real(self, rows, epoch, lsn_max)
 
     monkeypatch.setattr(CdcApplier, "_append_dlq_rows", spy)
     for cap in _DLQ_CAPS:

@@ -298,7 +298,7 @@ def test_every_writer_commits_one_successor_snapshot(spark, tmp_path):
 
     def commit_files():
         entries = t.write_epoch_files(batch(200, 210))
-        t.commit_epoch_files(entries, "j", 1, lsn_max=209, epoch_mode="batch")
+        t.commit_epoch_files(entries, "j", 1, lsn_max=209)
 
     ops = [
         ("append", lambda: t.append(batch(40, 60)), {"files"}),
@@ -307,7 +307,7 @@ def test_every_writer_commits_one_successor_snapshot(spark, tmp_path):
             [{"k": "z1", "v": 1, "lsn": 1}, {"k": "z2", "v": 2, "lsn": 2}]), {"files"}),
         ("compact", lambda: t.compact(), {"files"}),
         ("append_epoch", lambda: t.append_epoch(
-            batch(100, 110), "j", 0, lsn_max=109, epoch_mode="batch"),
+            batch(100, 110), "j", 0, lsn_max=109),
          {"files", "committed"}),
         ("commit_epoch_files", commit_files, {"files", "committed"}),
         ("merge", lambda: t.merge(batch(5, 15), op_col=None, job_id="m", epoch=1,

@@ -340,31 +340,34 @@ def test_mor_auto_compaction_ratio_policy(spark, tmp_path):
     assert _rows(app.state()) == got
 
 
-def test_mor_cross_mode_stream_guard(spark, tmp_path):
-    """A mor backfill's epoch bookmark lives on the DELTA table; starting a
-    stream with the same job_id must fail loudly (streaming epochs are
-    Spark batch ids -- comparing them against a batch lsn-range bookmark
-    would silently skip micro-batches 0..committed_epoch)."""
-    import pytest
-
-    from stratum_spark.streaming import start_stream
-
-    binlog = _mk_feed(spark, tmp_path, with_evolution=False)
-    ap = CdcApplier(spark, str(tmp_path / "wg"), job_id="xm", n_buckets=8,
-                    evolution=[], write_mode="mor")
-    ap.run_backfill(binlog, epoch_size=200, stop_after=2)
-    assert ap.deltas.committed_epoch("xm") >= 0
-    ap2 = CdcApplier(spark, str(tmp_path / "wg"), job_id="xm", n_buckets=8,
-                     evolution=[], write_mode="mor")
-    with pytest.raises(ValueError, match="mode"):
-        start_stream(ap2, binlog, str(tmp_path / "ckptg"))
-    # a fresh job_id on the same warehouse is fine
-    ap3 = CdcApplier(spark, str(tmp_path / "wg"), job_id="xm_stream", n_buckets=8,
-                     evolution=[], write_mode="mor")
+def test_mor_stream_continues_backfill_job(spark, tmp_path):
+    """Snapshot, then tail: a stream continues a backfill's job_id. Both
+    resume from the committed lsn, so the stream drops what the backfill
+    applied, numbers its epochs after the backfill's, and converges to the
+    replay oracle with every epoch receipt verifying."""
     from stratum_spark.streaming import run_stream_until_idle
 
-    run_stream_until_idle(ap3, binlog, str(tmp_path / "ckptg2"), max_files_per_trigger=2)
-    assert ap3.deltas.committed_epoch("xm_stream") >= 0
+    binlog = _mk_feed(spark, tmp_path, with_evolution=False)
+    wh = str(tmp_path / "wg")
+    ap = CdcApplier(spark, wh, job_id="xm", n_buckets=8, evolution=[],
+                    write_mode="mor")
+    ap.run_backfill(binlog, epoch_size=200, stop_after=2)
+    assert ap.epoch_state()["epoch"] == 1
+    ap2 = CdcApplier(spark, wh, job_id="xm", n_buckets=8, evolution=[],
+                     write_mode="mor")
+    run_stream_until_idle(ap2, binlog, str(tmp_path / "ckptg"), max_files_per_trigger=1)
+    st = replay_binlog(binlog)
+    want = state_as_records(st, table_schema_ver=0)
+    got = _rows(ap2.state())
+    assert set(got) == set(want)
+    for k, w in want.items():
+        assert got[k]["tokens"] == list(w["tokens"]), k
+    assert sorted(r["lsn"] for r in ap2.dlq.read().collect()) == sorted(st.dlq_lsns)
+    mark = ap2.deltas.snapshot().committed["xm"]
+    assert mark["epoch"] > 1 and "mode" not in mark
+    res = ap2.verify_epoch_receipts()
+    assert [r["epoch"] for r in res] == list(range(mark["epoch"] + 1))
+    assert all(r["status"] == "ok" for r in res), res
 
 
 def test_mor_stream_kill_between_append_and_checkpoint(spark, tmp_path):
@@ -384,7 +387,6 @@ def test_mor_stream_kill_between_append_and_checkpoint(spark, tmp_path):
                     write_mode="mor")
     # simulate foreachBatch applying micro-batch 0, then dying before the
     # streaming checkpoint records it
-    ap.epoch_mode = "stream"
     first = spark.read.schema(BINLOG_DDL).parquet(files[0])
     ap.apply_epoch(first, 0)
     ap.flush_lineage()
@@ -489,8 +491,8 @@ def test_legacy_base_bookmarks_seed_the_delta_table(spark, tmp_path):
     job bookmarks on the base and has no delta table. Opening it creates
     the delta table with those bookmarks (not the compactor's own), so a
     resumed backfill continues where the base stopped instead of
-    replaying the feed, and a stream-mode bookmark still trips the
-    cross-mode guard."""
+    replaying the feed, and a bookmark without lsn_max cannot be resumed
+    by lsn."""
     import pytest
 
     from stratum_spark.cdc import TOKENS_DDL, lww_dedup
@@ -511,8 +513,7 @@ def test_legacy_base_bookmarks_seed_the_delta_table(spark, tmp_path):
     base.merge(batch, op_col="op", job_id="lg", epoch=1, lsn_max=400,
                precedence_col="lsn")
     base.merge(batch.limit(0), op_col="op", job_id="lg::compact", epoch=1)
-    base.merge(batch.limit(0), op_col="op", job_id="lg_s", epoch=3,
-               epoch_mode="stream")
+    base.merge(batch.limit(0), op_col="op", job_id="lg_s", epoch=3)
     assert not LakeTable.exists(str(wh / "tokens_deltas"))
 
     ap = CdcApplier(spark, str(wh), job_id="lg", n_buckets=8, evolution=[])
@@ -528,5 +529,5 @@ def test_legacy_base_bookmarks_seed_the_delta_table(spark, tmp_path):
         assert got[k]["tokens"] == list(w["tokens"]), k
 
     ap_s = CdcApplier(spark, str(wh), job_id="lg_s", n_buckets=8, evolution=[])
-    with pytest.raises(ValueError, match="mode"):
-        ap_s._check_epoch_mode()
+    with pytest.raises(ValueError, match="lsn"):
+        ap_s.run_backfill(binlog, epoch_size=200)

@@ -166,9 +166,9 @@ def test_dlq_via_observation_matches_scan_path(spark, binlog6, tmp_path,
     from_rows = []
     real = CdcApplier._append_dlq_rows
 
-    def spy(self, rows, epoch):
+    def spy(self, rows, epoch, lsn_max):
         from_rows.append(len(rows))
-        return real(self, rows, epoch)
+        return real(self, rows, epoch, lsn_max)
 
     monkeypatch.setattr(CdcApplier, "_append_dlq_rows", spy)
     ap1, state1, dlq1 = _dlq_run(spark, binlog6, str(tmp_path / "wo1"))
@@ -195,9 +195,9 @@ def test_dlq_obs_cap_flips_to_scan_path(spark, binlog6, tmp_path, monkeypatch):
     routes = []
     real_rows, real_scan = CdcApplier._append_dlq_rows, CdcApplier._dlq_frame
 
-    def spy_rows(self, rows, epoch):
+    def spy_rows(self, rows, epoch, lsn_max):
         routes.append("rows")
-        return real_rows(self, rows, epoch)
+        return real_rows(self, rows, epoch, lsn_max)
 
     def spy_scan(self, events):
         routes.append("scan")
@@ -229,9 +229,9 @@ def test_dlq_obs_exactly_once_crash_after_dlq_before_merge(spark, binlog6,
     obs_epochs = []
     real = CdcApplier._append_dlq_rows
 
-    def spy(self, rows, epoch):
+    def spy(self, rows, epoch, lsn_max):
         obs_epochs.append(epoch)
-        return real(self, rows, epoch)
+        return real(self, rows, epoch, lsn_max)
 
     monkeypatch.setattr(CdcApplier, "_append_dlq_rows", spy)
     wh = str(tmp_path / "whOA")
@@ -273,7 +273,7 @@ def test_dlq_obs_exactly_once_crash_after_merge_before_dlq(spark, binlog6,
                      write_mode="mor", n_events_hint=4000)
     lost = []
 
-    def lost_flush(rows, epoch):
+    def lost_flush(rows, epoch, lsn_max):
         lost.append(epoch)
         return 0
 

@@ -81,3 +81,64 @@ def test_stream_restart_from_checkpoint(spark, chunks, tmp_path):
     n = ap2.tokens.read().count()
     nd = ap2.tokens.read().select("doc_id").distinct().count()
     assert n == nd
+
+
+def test_stream_restart_on_fresh_checkpoint(spark, chunks, tmp_path):
+    """The checkpoint is lost and the restart batches 3 files per trigger:
+    Spark regroups all six files from scratch, and the job keeps only rows
+    above its committed lsn, so the two files that landed since apply once.
+    The delta volume equals a run that kept its checkpoint."""
+    binlog_dir, files = chunks
+
+    def run(name, ckpt2):
+        live = tmp_path / f"live_{name}"
+        live.mkdir()
+        for f in files[:4]:
+            shutil.copy2(f, live)
+        wh = str(tmp_path / f"wh_{name}")
+        ap = CdcApplier(spark, wh, job_id="s3", n_buckets=8, n_events_hint=N_EVENTS,
+                        write_mode="mor")
+        run_stream_until_idle(ap, str(live), str(tmp_path / f"ckpt_{name}"),
+                              max_files_per_trigger=1)
+        for f in files[4:]:
+            shutil.copy2(f, live)
+        ap = CdcApplier(spark, wh, job_id="s3", n_buckets=8, n_events_hint=N_EVENTS,
+                        write_mode="mor")
+        run_stream_until_idle(ap, str(live), str(tmp_path / ckpt2), max_files_per_trigger=3)
+        return ap
+
+    ap = run("lost", "ckpt_fresh")
+    want = oracle_state(binlog_dir)
+    got = state_of(ap)
+    assert set(got) == set(want)
+    for k, w in want.items():
+        assert got[k]["tokens"] == w["tokens"], k
+    clean = run("kept", "ckpt_kept")
+    assert ap.deltas.row_count() == clean.deltas.row_count()
+
+
+def test_stream_restart_restores_lost_dlq_flushes(spark, chunks, tmp_path):
+    """Every DLQ flush of a drain is lost. Spark never redelivers a batch
+    it has checkpointed, so the restart on the same checkpoint restores
+    the DLQ rows from the feed, and a second restart changes nothing."""
+    binlog_dir, _ = chunks
+    wh, ckpt = str(tmp_path / "wh"), str(tmp_path / "ckpt")
+
+    def applier():
+        return CdcApplier(spark, wh, job_id="s4", n_buckets=8, n_events_hint=N_EVENTS,
+                          write_mode="mor")
+
+    ap = applier()
+    ap._append_dlq_rows = lambda *a: 0
+    run_stream_until_idle(ap, binlog_dir, ckpt, max_files_per_trigger=2)
+    assert ap.dlq.row_count() == 0 and ap.epoch_state()["epoch"] >= 0
+    epoch = ap.epoch_state()["epoch"]
+
+    want = sorted(replay_binlog(binlog_dir).dlq_lsns)
+    got = []
+    for _ in range(2):
+        ap = applier()
+        run_stream_until_idle(ap, binlog_dir, ckpt, max_files_per_trigger=2)
+        got.append(sorted(r["lsn"] for r in ap.dlq.read().collect()))
+    assert want and got == [want, want]
+    assert ap.epoch_state()["epoch"] == epoch
